@@ -534,7 +534,11 @@ def _summary_payload(
     is pinned by tests/test_docs_consistency.py without running Spark)."""
     merged = dict(timings)
     for name, sec in ptimings.items():
-        merged[name if name not in merged else f"{name}_pipeline"] = sec
+        key = name
+        if key in merged:
+            key = f"{name}_pipeline"
+            assert key not in merged, f"summary key collision: {key}"
+        merged[key] = sec
     return {
         "metric": "bench_summary",
         "value": total,

@@ -24,6 +24,8 @@ returning ``array<string>`` for ``explode``.  Everything else is native
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 
@@ -66,11 +68,22 @@ PUNCTUATION = {".", "。", ";", "；", "!", "！", "?", "？"}
 # Pure-Python reference semantics (unit-testable, reused inside UDFs)
 # ---------------------------------------------------------------------------
 
-def normalize_text_py(text: str) -> str:
-    """Function.java:106-107: newline->space, collapse 2+ whitespace runs."""
-    import re
+# Whitespace is an EXPLICIT class everywhere (never \s): Java regex includes
+# U+000B (vertical tab — present in PDF-extracted text) in \s while RE2 (the
+# DuckDB oracle engine) does not, so any oracle-compared tokenization built
+# on \s+ silently diverges on such input.  Both engines interpret the hex
+# escape identically inside a class.  The class is exactly Java's \s;
+# Python's \s is Unicode-aware (it also matches U+001C-U+001F, U+0085,
+# U+00A0, U+2003, ...), so the Python twins use the class too.
+_WS = r" \t\n\r\f\x0B"
+WS_RUN = r"[" + _WS + r"]+"
+_WS_RUN2_RE = re.compile(r"[" + _WS + r"]{2,}")
 
-    return re.sub(r"\s{2,}", " ", text.replace("\n", " "))
+
+def normalize_text_py(text: str) -> str:
+    """Function.java:106-107: newline->space, collapse runs of 2+ Java
+    whitespace characters."""
+    return _WS_RUN2_RE.sub(" ", text.replace("\n", " "))
 
 
 def _find_split_index(text: str, max_len: int, floor_delta: int) -> int:
@@ -151,15 +164,6 @@ def chunk_udf(
         )
 
     return _chunk
-
-
-# Whitespace is an EXPLICIT class everywhere (never \s): Java regex includes
-# U+000B (vertical tab — present in PDF-extracted text) in \s while RE2 (the
-# DuckDB oracle engine) does not, so any oracle-compared tokenization built
-# on \s+ silently diverges on such input.  Both engines interpret the hex
-# escape identically inside a class.
-_WS = r" \t\n\r\f\x0B"
-WS_RUN = r"[" + _WS + r"]+"
 
 
 def word_tokens(c: Column | str) -> Column:

@@ -5,6 +5,10 @@
   (Function.java:71-176): pages -> normalize -> chunk -> embed -> vector
   table, plus the append-only ingest-status event log that replaces the
   reference's in-place Cosmos state machine (SURVEY.md §2A row 30, §7.4).
+  It is :func:`embed_documents` (embedded chunk rows) followed by
+  :func:`chunks_and_status` (both outputs from those rows);
+  :func:`embed_files` is the file-level twin that parses PDFs in the same
+  Python pass.
 - :func:`search` — the PDF-Summarizer query path
   (SSEOpenAIController.java:301-337): embed query -> exact L2 top-5.
 - :func:`sse_events` — the serving projection: per-hit ``create`` /
@@ -13,20 +17,30 @@
 - :func:`status_registered` / :func:`status_failed` — the listing queries
   Q4/Q5 (PDF-Summarizer/.../CosmosDBUtil.java:33-35).
 
-One Spark job per pipeline — no per-row connections, no side-effect
-mutation; status is data.
+Python work is one plain-Python kernel (:func:`page_chunks`) behind a
+single ``mapInPandas`` per plan; chunk ids, the dimension check and the
+status events stay native expressions.  Every write of an output is its
+own Spark job, so a caller writing both outputs persists the embedded
+rows between them (``streaming.ingest.write_ingest``).  No per-row
+connections, no side-effect mutation; status is data.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .functions import embed as E
 from .functions import text as X
 from .functions import vector as V
 from .operators import knn as K
+from .sources import binary as B
 from .utils import spread
 
 # CosmosDBDocumentStatus enum names
@@ -51,6 +65,80 @@ HAPPY_PATH = (
 )
 
 
+def page_chunks(pages, max_len: int, dim: int | None):
+    """The per-page ingest kernel, plain Python: normalize
+    (Function.java:106-107) -> split (Function.java:214-251) -> embed.
+
+    ``pages`` yields ``(fileName, pageNumber, text)``; the kernel yields
+    ``(fileName, pageNumber, chunkIdx, origntext, embedding)``, or the
+    first four only when ``dim`` is None (chunking without embedding).
+    A null page yields no chunks.  Every step is the pinned pure-Python
+    twin (``normalize_text_py``, ``split_text_py``, ``hash_embed_py``), so
+    the rows equal the native-normalize + chunk-UDF + ``posexplode`` +
+    embed-UDF composition this kernel replaces.
+    """
+    for name, page, text in pages:
+        if text is None:
+            continue
+        chunks = X.split_text_py(X.normalize_text_py(text), max_len)
+        for idx, chunk in enumerate(chunks):
+            if dim is None:
+                yield name, page, idx, chunk
+            else:
+                yield name, page, idx, chunk, E.hash_embed_py(chunk, dim)
+
+
+_CHUNK_FIELDS = [
+    T.StructField("fileName", T.StringType()),
+    T.StructField("pageNumber", T.IntegerType()),
+    T.StructField("chunkIdx", T.IntegerType(), nullable=False),
+    T.StructField("origntext", T.StringType()),
+]
+_EMBEDDING_FIELD = T.StructField(
+    "embedding", T.ArrayType(T.FloatType(), containsNull=False)
+)
+
+
+def _kernel_rows(df: DataFrame, pages_of, max_len: int, dim: int | None):
+    """One ``mapInPandas`` over ``df``: ``pages_of(batch)`` yields each Arrow
+    batch's pages, :func:`page_chunks` turns them into chunk rows, and the
+    deterministic chunk id ``sha2(fileName|pageNumber|chunkIdx)`` is added
+    as a native expression (SURVEY.md §7.4 item 5 — the reference's
+    ``UUID.randomUUID()`` at Function.java:137 is deliberately replaced for
+    testability).  ``pages_of`` is resolved here, on the driver, and
+    shipped inside the kernel's closure."""
+    fields = _CHUNK_FIELDS + ([] if dim is None else [_EMBEDDING_FIELD])
+    names = [f.name for f in fields]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            rows = list(page_chunks(pages_of(batch), max_len, dim))
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    rows = df.mapInPandas(gen, T.StructType(fields))
+    chunk_id = F.sha2(
+        F.concat_ws("|", "fileName", "pageNumber", "chunkIdx"), 256
+    )
+    return rows.select(chunk_id.alias("id"), *names)
+
+
+def _page_triples(batch: pd.DataFrame):
+    return zip(batch["fileName"], batch["pageNumber"], batch["text"])
+
+
+def _page_rows(documents, text_col, file_col, page_col, max_len, dim):
+    # Document sources often arrive as a handful of large files (one parquet
+    # footer -> one partition).  The kernel is per-row Python work, so
+    # spread rows across the cluster first; at real scale the source is
+    # already many-filed and this is a no-op.
+    pages = spread(documents).select(
+        F.col(file_col).alias("fileName"),
+        F.col(page_col).cast("int").alias("pageNumber"),
+        F.col(text_col).alias("text"),
+    )
+    return _kernel_rows(pages, _page_triples, max_len, dim)
+
+
 def chunk_documents(
     documents: DataFrame,
     text_col: str = "text",
@@ -58,36 +146,13 @@ def chunk_documents(
     page_col: str = "doc_id",
     max_len: int = X.MAX_SEPARATE_TOKEN_LENGTH,
 ) -> DataFrame:
-    """pages -> normalized chunks with deterministic chunk ids.
-
-    Normalize (Function.java:106-107) then split (Function.java:214-251);
-    ``posexplode`` keeps the chunk index so the surrogate id
-    ``sha2(fileName|pageNumber|chunkIdx)`` is reproducible (SURVEY.md §7.4
-    item 5 — the reference's ``UUID.randomUUID()`` at Function.java:137 is
-    deliberately replaced for testability; ``F.expr("uuid()")`` remains the
-    production option).
-    """
-    # Document sources often arrive as a handful of large files (one parquet
-    # footer -> one partition).  The chunk/embed stages are per-row Python
-    # work, so spread rows across the cluster first; at real scale the source
-    # is already many-filed and this is a no-op.
-    documents = spread(documents)
-    chunks = documents.select(
-        F.col(file_col).alias("fileName"),
-        F.col(page_col).cast("int").alias("pageNumber"),
-        F.posexplode(
-            X.chunk_udf(max_len)(X.normalize_text(text_col))
-        ).alias("chunkIdx", "origntext"),
-    )
-    chunk_id = F.sha2(
-        F.concat_ws("|", "fileName", "pageNumber", "chunkIdx"), 256
-    )
-    return chunks.select(
-        chunk_id.alias("id"), "fileName", "pageNumber", "chunkIdx", "origntext"
-    )
+    """pages -> normalized chunks with deterministic chunk ids:
+    ``id, fileName, pageNumber, chunkIdx, origntext``.  The ingest kernel
+    with embedding off, behind one ``mapInPandas``."""
+    return _page_rows(documents, text_col, file_col, page_col, max_len, None)
 
 
-def ingest_documents(
+def embed_documents(
     documents: DataFrame,
     text_col: str = "text",
     file_col: str = "source",
@@ -95,51 +160,72 @@ def ingest_documents(
     max_len: int = X.MAX_SEPARATE_TOKEN_LENGTH,
     dim: int = E.DEFAULT_DIM,
     embedder=None,
+) -> DataFrame:
+    """pages -> embedded chunk rows: ``id, fileName, pageNumber, chunkIdx,
+    origntext, embedding, attempts``.
+
+    Default: one ``mapInPandas`` runs the whole kernel (normalize, split,
+    hash-embed; one attempt each).  ``embedder`` swaps the embedding
+    operator (the production seam — SURVEY.md §7.4 item 2): chunking stays
+    in the kernel and the pandas UDF runs on its output, returning either
+    ``array<float>`` or ``struct<embedding array<float>, attempts int>``
+    (see ``functions.embed.retrying_embedder``).
+    """
+    kernel_dim = dim if embedder is None else None
+    rows = _page_rows(
+        documents, text_col, file_col, page_col, max_len, kernel_dim
+    )
+    if embedder is None:
+        return rows.withColumn("attempts", F.lit(1))
+    out = rows.withColumn("__er", embedder(F.col("origntext")))
+    dtype = out.schema["__er"].dataType
+    if hasattr(dtype, "fieldNames") and "attempts" in dtype.fieldNames():
+        emb, attempts = F.col("__er.embedding"), F.col("__er.attempts")
+    else:
+        emb, attempts = F.col("__er"), F.lit(1)
+    return out.select(
+        *rows.columns, emb.alias("embedding"), attempts.alias("attempts")
+    )
+
+
+def embed_files(
+    files: DataFrame,
+    max_len: int = X.MAX_SEPARATE_TOKEN_LENGTH,
+    dim: int = E.DEFAULT_DIM,
+) -> DataFrame:
+    """``(path, content)`` document files -> embedded chunk rows (the
+    :func:`embed_documents` schema).  Parsing (``sources.binary``) and the
+    ingest kernel share one ``mapInPandas``, so a file crosses into Python
+    once, however many outputs are written from the rows."""
+    rows = _kernel_rows(
+        files.select("path", "content"), B.file_pages, max_len, dim
+    )
+    return rows.withColumn("attempts", F.lit(1))
+
+
+def chunks_and_status(
+    embedded: DataFrame, dim: int = E.DEFAULT_DIM
 ) -> tuple[DataFrame, DataFrame]:
-    """Full ingest: returns ``(chunks, status_events)``.
+    """Embedded chunk rows -> ``(chunks, status_events)``, all native
+    expressions.
 
     ``chunks`` has the vector-table schema (README.md:155-158):
     ``id, embedding array<float>, origntext, fileName, pageNumber`` with the
     pgvector dimension invariant enforced (embedding must have ``dim``
     elements or the row is marked failed).  ``status_events`` is the
-    append-only event log: ``(id, fileName, pageNumber, status, seq)``.
-
-    ``embedder`` swaps the embedding operator (the production seam —
-    SURVEY.md §7.4 item 2): a pandas UDF returning either ``array<float>``
-    or ``struct<embedding array<float>, attempts int>`` — with the struct
-    form (see ``functions.embed.retrying_embedder``) each retry emits one
-    ``RETRY_OAI_INVOCATION`` status event, matching the reference's
-    per-attempt status writes (Function.java:148-156,262-269).  Default:
-    the deterministic hash embedder, one attempt.
+    append-only event log: ``(id, fileName, pageNumber, status, seq)`` —
+    PAGE_SEPARATE_FINISHED, one RETRY_OAI_INVOCATION per extra embedding
+    attempt (the reference's per-attempt status writes,
+    Function.java:148-156,262-269), then the happy or failure tail
+    (failure = dimension invariant violated at insert, e.g. the empty
+    embedding a terminally-failed embedder returns).
     """
-    chunked = chunk_documents(documents, text_col, file_col, page_col, max_len)
-    if embedder is None:
-        embedded = chunked.withColumn(
-            "embedding", E.hash_embedder(dim)(F.col("origntext"))
-        ).withColumn("__attempts", F.lit(1))
-    else:
-        res = embedder(F.col("origntext"))
-        embedded = chunked.withColumn("__er", res)
-        dtype = embedded.schema["__er"].dataType
-        if hasattr(dtype, "fieldNames") and "attempts" in dtype.fieldNames():
-            embedded = embedded.withColumn(
-                "embedding", F.col("__er.embedding")
-            ).withColumn("__attempts", F.col("__er.attempts"))
-        else:
-            embedded = embedded.withColumn(
-                "embedding", F.col("__er")
-            ).withColumn("__attempts", F.lit(1))
-        embedded = embedded.drop("__er")
     ok = V.dim_check("embedding", dim)
     chunks = embedded.filter(ok).select(
         "id", "embedding", "origntext", "fileName", "pageNumber"
     )
-    # Event log: PAGE_SEPARATE_FINISHED, one RETRY_OAI_INVOCATION per
-    # extra embedding attempt, then the happy/failure tail (failure =
-    # dimension invariant violated at insert, e.g. the empty embedding a
-    # terminally-failed embedder returns).
     retries = F.array_repeat(
-        F.lit("RETRY_OAI_INVOCATION"), F.col("__attempts") - 1
+        F.lit("RETRY_OAI_INVOCATION"), F.col("attempts") - 1
     )
     head = F.array(F.lit("PAGE_SEPARATE_FINISHED"))
     tail_ok = F.array(*[F.lit(s) for s in HAPPY_PATH[1:]])
@@ -154,6 +240,26 @@ def ingest_documents(
         F.posexplode(statuses).alias("seq", "status"),
     ).select("id", "fileName", "pageNumber", "status", F.col("seq").cast("long"))
     return chunks, status_events
+
+
+def ingest_documents(
+    documents: DataFrame,
+    text_col: str = "text",
+    file_col: str = "source",
+    page_col: str = "doc_id",
+    max_len: int = X.MAX_SEPARATE_TOKEN_LENGTH,
+    dim: int = E.DEFAULT_DIM,
+    embedder=None,
+) -> tuple[DataFrame, DataFrame]:
+    """Full ingest: returns ``(chunks, status_events)`` —
+    :func:`chunks_and_status` of :func:`embed_documents`.  Both outputs
+    derive from the same embedded rows; a caller writing both should
+    persist those rows (``streaming.ingest`` does) or each write re-runs
+    the kernel."""
+    embedded = embed_documents(
+        documents, text_col, file_col, page_col, max_len, dim, embedder
+    )
+    return chunks_and_status(embedded, dim)
 
 
 def current_status(status_events: DataFrame) -> DataFrame:
@@ -237,8 +343,15 @@ def summaries(
     SSEOpenAIController.java:142-147): prompt templating + enrichment UDF.
     Returns hits + ``prompt`` + ``summary``; rows keep their (id) key so the
     interleaved-stream demux of the reference becomes plain keyed rows
-    (SURVEY.md §7.4 item 6)."""
-    udf = summarizer or deterministic_summarizer()
+    (SURVEY.md §7.4 item 6).
+
+    The summarizer is marked nondeterministic (an LLM call is), which
+    stops Catalyst pushing it below a top-k limit such as ``search``'s.
+    Pushed down, it ran on up to k rows per partition instead of k, the
+    top-k became a range-partitioned global sort, and the ``take`` over it
+    left the UDF's Python worker half-read, so every request destroyed a
+    worker and forked a new one."""
+    udf = (summarizer or deterministic_summarizer()).asNondeterministic()
     prompt = F.format_string(
         '""" %s """ \n\nPlease answer the question using the above text: "%s"',
         F.col("origntext"),

@@ -98,25 +98,31 @@ def _extract_pages_py(content: bytes) -> list[str]:
         return []
 
 
+def file_pages(files: pd.DataFrame) -> Iterator[tuple[str, int, str]]:
+    """``(path, content)`` rows of one Arrow batch -> ``(fileName,
+    pageNumber, text)`` per page, with 1-based page numbers
+    (``IntStream.rangeClosed(1, ...)``, Function.java:100)."""
+    for path, content in zip(files["path"], files["content"]):
+        name = path.rsplit("/", 1)[-1]
+        for i, page in enumerate(_extract_pages_py(content), start=1):
+            yield name, i, page
+
+
 def extract_pages(binary_df: DataFrame) -> DataFrame:
     """``(path, content)`` -> one row per page: ``(fileName, pageNumber,
-    text)`` with 1-based page numbers (``IntStream.rangeClosed(1, ...)``,
-    Function.java:100).
+    text)``.
 
     ``mapInPandas``: Arrow-batched, one Python crossing per batch of files;
     each task parses its own files so extraction scales with the file count.
+    The ingest path does not call this: ``pipeline.embed_files`` runs
+    :func:`file_pages` and the chunk/embed kernel in one ``mapInPandas``.
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out: dict[str, list] = {"fileName": [], "pageNumber": [], "text": []}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = path.rsplit("/", 1)[-1]
-                for i, page in enumerate(_extract_pages_py(content), start=1):
-                    out["fileName"].append(name)
-                    out["pageNumber"].append(i)
-                    out["text"].append(page)
-            yield pd.DataFrame(out)
+            yield pd.DataFrame.from_records(
+                list(file_pages(pdf)), columns=["fileName", "pageNumber", "text"]
+            )
 
     return binary_df.select("path", "content").mapInPandas(gen, PAGES_SCHEMA)
 

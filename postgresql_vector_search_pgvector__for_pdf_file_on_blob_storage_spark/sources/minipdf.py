@@ -52,6 +52,9 @@ __all__ = [
 
 _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj(.*?)endobj", re.S)
 _STREAM_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n(.*?)\r?\nendstream", re.S)
+_STREAM_HEAD_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n", re.S)
+_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(\s+\d+\s+R)?")
+_STREAM_END_RE = re.compile(rb"\s*endstream")
 _PAGE_RE = re.compile(rb"/Type\s*/Page(?![a-zA-Z])")
 _CONTENTS_RE = re.compile(rb"/Contents\s+(\d+)\s+\d+\s+R")
 
@@ -218,6 +221,40 @@ def _stream_text(ops: bytes, fonts: dict[str, _Font] | None = None) -> str:
     return "".join(out)
 
 
+def _stream_span(body: bytes) -> tuple[bytes, int, int] | None:
+    """``(dict, start, end)`` of the stream payload in an object body, or
+    None.  A direct ``/Length`` bounds the payload when ``endstream``
+    follows it (PDF 32000-1 §7.3.8.1), so data ending in CR or LF keeps
+    that byte; without a usable ``/Length`` (missing, indirect or wrong)
+    the payload runs to the first EOL + ``endstream``."""
+    head = _STREAM_HEAD_RE.search(body)
+    if not head:
+        return None
+    d, start = head.group(1), head.end()
+    ml = _LENGTH_RE.search(d)
+    if ml and not ml.group(2):
+        end = start + int(ml.group(1))
+        if end <= len(body) and _STREAM_END_RE.match(body, end):
+            return d, start, end
+    m = _STREAM_RE.search(body, head.start())
+    if not m:
+        return None
+    return m.group(1), m.start(2), m.end(2)
+
+
+def _with_payload(
+    body: bytes, span: tuple[bytes, int, int], data: bytes
+) -> bytes:
+    """``body`` with the stream payload at ``span`` replaced by ``data`` and
+    a direct ``/Length`` rewritten to match."""
+    _, start, end = span
+    head = body[:start]
+    ml = _LENGTH_RE.search(head)
+    if ml and not ml.group(2):
+        head = head[: ml.start(1)] + b"%d" % len(data) + head[ml.end(1) :]
+    return head + data + body[end:]
+
+
 def _expand_object_streams(objects: dict[int, bytes]) -> None:
     """Expand every ``/Type /ObjStm`` compressed object stream in-place.
 
@@ -232,10 +269,10 @@ def _expand_object_streams(objects: dict[int, bytes]) -> None:
     for body in list(objects.values()):
         if not re.search(rb"/Type\s*/ObjStm", body):
             continue
-        m = _STREAM_RE.search(body)
-        if not m:
+        span = _stream_span(body)
+        if not span:
             continue
-        d = m.group(1)
+        d = span[0]
         data = _stream_of(body)
         if data is None:
             continue
@@ -519,11 +556,11 @@ def _decrypt_streams(
     all writers emit gen 0).  The XRef stream is never encrypted per spec,
     but it is also never consumed here, so decrypting it is harmless."""
     for num, body in list(objects.items()):
-        m = _STREAM_RE.search(body)
-        if not m:
+        span = _stream_span(body)
+        if not span:
             continue
-        data = _decrypt_payload(mode, file_key, num, m.group(2))
-        objects[num] = body[: m.start(2)] + data + body[m.end(2) :]
+        data = _decrypt_payload(mode, file_key, num, body[span[1] : span[2]])
+        objects[num] = _with_payload(body, span, data)
 
 
 def _unpredict(data: bytes, d: bytes) -> bytes | None:
@@ -589,10 +626,10 @@ def _unpredict(data: bytes, d: bytes) -> bytes | None:
 
 def _stream_of(body: bytes) -> bytes | None:
     """The decoded stream payload of an object body, or None."""
-    m = _STREAM_RE.search(body)
-    if not m:
+    span = _stream_span(body)
+    if not span:
         return None
-    d, data = m.group(1), m.group(2)
+    d, data = span[0], body[span[1] : span[2]]
     if b"/FlateDecode" in d:
         try:
             data = zlib.decompress(data)
@@ -1887,19 +1924,11 @@ def make_pdf_encrypted(
 
     out_objs: list[tuple[int, bytes]] = []
     for num, body in objs:
-        m = _STREAM_RE.search(body)
-        if m:
-            data = enc_payload(num, m.group(2))
-            body = (
-                body[: m.start(2)] + data + body[m.end(2) :]
-            )
+        span = _stream_span(body)
+        if span:
             # AES payloads grow (IV + padding): keep /Length honest.
-            body = re.sub(
-                rb"/Length\s+\d+",
-                b"/Length %d" % len(data),
-                body,
-                count=1,
-            )
+            data = enc_payload(num, body[span[1] : span[2]])
+            body = _with_payload(body, span, data)
         out_objs.append((num, body))
     enc_num = max(num for num, _ in out_objs) + 1
     out_objs.append((enc_num, enc_dict))

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from .. import pipeline as P
 from ..functions import embed as E
 from ..functions import text as X
-from ..sources import binary as B
+from .ingest import write_ingest
 
 BLOB_CREATED = "Microsoft.Storage.BlobCreated"
 
@@ -163,15 +163,6 @@ def blob_event_stream(
         ok = fetched.filter(F.col("fetch_error").isNull()).select(
             "path", "content"
         )
-        pages = B.extract_pages(ok)
-        chunks, status = P.ingest_documents(
-            pages,
-            text_col="text",
-            file_col="fileName",
-            page_col="pageNumber",
-            max_len=max_len,
-            dim=dim,
-        )
         fetch_status = failed.select(
             F.col("path").alias("id"),
             F.col("path").alias("fileName"),
@@ -179,8 +170,10 @@ def blob_event_stream(
             F.lit("FAILED_BLOB_FETCH").alias("status"),
             F.col("fetch_error").alias("detail"),
         )
-        chunks.write.mode("append").parquet(chunks_out)
-        status.write.mode("append").parquet(status_out)
+        # Parse + chunk + embed in one mapInPandas, persisted for both
+        # writes (streaming.ingest.write_ingest).
+        embedded = P.embed_files(ok, max_len, dim)
+        write_ingest(embedded, chunks_out, status_out, dim)
         if not failed.isEmpty():
             fetch_status.write.mode("append").parquet(
                 status_out.rstrip("/") + "_fetch_failures"

@@ -13,6 +13,11 @@ enough for an append-only design (re-run of a failed batch overwrites by
 deterministic chunk id downstream via dedup-on-read if ever needed).
 ``Trigger.AvailableNow`` drains everything pending then stops — the batch
 and the continuous deployment are the same code.
+
+Each micro-batch crosses into Python once per task: one ``mapInPandas``
+parses the PDFs and runs the chunk/embed kernel
+(``pipeline.embed_files``).  The embedded rows are persisted, so the two
+writes are two Spark jobs over one parse, not two re-runs of it.
 """
 
 from __future__ import annotations
@@ -58,17 +63,8 @@ def ingest_stream(
     raw = reader.load(input_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        pages = B.extract_pages(B.pdf_filter(batch_df))
-        chunks, status = P.ingest_documents(
-            pages,
-            text_col="text",
-            file_col="fileName",
-            page_col="pageNumber",
-            max_len=max_len,
-            dim=dim,
-        )
-        chunks.write.mode("append").parquet(chunks_out)
-        status.write.mode("append").parquet(status_out)
+        embedded = P.embed_files(B.pdf_filter(batch_df), max_len, dim)
+        write_ingest(embedded, chunks_out, status_out, dim)
 
     return (
         raw.writeStream.foreachBatch(process_batch)
@@ -76,6 +72,21 @@ def ingest_stream(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def write_ingest(
+    embedded: DataFrame, chunks_out: str, status_out: str, dim: int
+) -> None:
+    """Append the vector table and the status event log derived from
+    ``embedded`` (``pipeline.chunks_and_status``).  The rows are persisted
+    for the two writes, so the parse and the kernel run once."""
+    embedded = embedded.persist()
+    try:
+        chunks, status = P.chunks_and_status(embedded, dim)
+        chunks.write.mode("append").parquet(chunks_out)
+        status.write.mode("append").parquet(status_out)
+    finally:
+        embedded.unpersist()
 
 
 def ingest_batch(
@@ -87,12 +98,5 @@ def ingest_batch(
 ) -> tuple[DataFrame, DataFrame]:
     """One-shot variant over the same source: returns (chunks, status)."""
     raw = B.read_binary_dir(spark, input_dir, glob)
-    pages = B.extract_pages(B.pdf_filter(raw))
-    return P.ingest_documents(
-        pages,
-        text_col="text",
-        file_col="fileName",
-        page_col="pageNumber",
-        max_len=max_len,
-        dim=dim,
-    )
+    embedded = P.embed_files(B.pdf_filter(raw), max_len, dim)
+    return P.chunks_and_status(embedded, dim)

@@ -5,6 +5,8 @@ belong to a registered query."""
 import os
 import re
 
+import pytest
+
 import __spark_entry__ as entry
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -174,3 +176,16 @@ def test_bench_summary_line_carries_per_query_seconds():
     assert "minhash_lsh_pairs_pipeline" in q
     line = json.dumps(payload)
     assert len(line) < 2000, len(line)
+
+
+def test_bench_summary_rename_collision_fails_loudly():
+    """A pipeline member whose renamed key ``<name>_pipeline`` is already
+    taken must fail at the source, not overwrite a timing."""
+    import bench
+
+    timings = {"q": 1.0, "q_pipeline": 2.0}
+    with pytest.raises(AssertionError, match="q_pipeline"):
+        bench._summary_payload(
+            timings, {"q": 3.0}, 3.0, 3.0, 3.0, 3.0, 0.1, [], [], 0, {}, {}
+        )
+

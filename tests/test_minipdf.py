@@ -5,6 +5,8 @@ behavior through the Spark extraction pipeline."""
 
 from __future__ import annotations
 
+import re
+
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
     binary as B,
 )
@@ -807,3 +809,44 @@ def test_cid_keyed_bare_cff_refusal_end_to_end():
     # ToUnicode absent: pinned refusal -> per-code identity, no crash
     no_tu = grafted.replace(b"/ToUnicode 5 0 R ", b"", 1)
     assert MP.extract_text_pages(no_tu) == ["\x01\x02"]
+
+
+def _page_ending_in_cr(make=MP.make_pdf) -> tuple[str, bytes]:
+    """A one-page file whose content stream payload ends in CR, so the
+    bytes before ``endstream`` are CR CR LF... or CR LF."""
+    for n in range(5000):
+        text = f"stream payload probe {n}"
+        pdf = make([text])
+        if b"\r\nendstream" in pdf:
+            return text, pdf
+    raise AssertionError("no payload ending in CR found")
+
+
+def test_stream_payload_ending_in_cr_keeps_its_page():
+    """Flate data whose last byte is CR: the direct /Length bounds the
+    payload, so that CR is data, not part of the EOL before endstream
+    (about 1 page in 256 was lost to this)."""
+    text, pdf = _page_ending_in_cr()
+    assert MP.extract_text_pages(pdf) == [text]
+
+
+def test_stream_without_usable_length_falls_back_to_endstream():
+    """A missing, indirect or wrong /Length still reads the payload up to
+    the EOL before endstream."""
+    pdf = MP.make_pdf(PAGES)
+    for length in (b"", b"/Length 9 0 R", b"/Length 3"):
+        edited = re.sub(rb"/Length \d+", length, pdf)
+        assert MP.extract_text_pages(edited) == [
+            "alpha line one\nalpha line two",
+            "beta solo",
+        ]
+
+
+def test_encrypted_payload_ending_in_cr_roundtrips():
+    """Decryption rewrites /Length to the plaintext size, so the
+    decrypted Flate data is bounded by /Length too."""
+    for scheme in ("rc4", "aesv2"):
+        text, pdf = _page_ending_in_cr(
+            lambda pages: MP.make_pdf_encrypted(pages, scheme=scheme)
+        )
+        assert MP.extract_text_pages(pdf) == [text]

@@ -89,6 +89,21 @@ def test_search_is_deterministic(ingested):
     assert a == b
 
 
+def test_summaries_run_once_per_hit_after_top_k(ingested):
+    """The summarizer stays above the top-k: the plan keeps
+    TakeOrderedAndProject and gains no range-partitioned sort."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.plans import (
+        explain as EX,
+    )
+
+    chunks, _ = ingested
+    summ = P.summaries(P.search(chunks, "fox", k=3), "q")
+    assert EX.has_take_ordered(summ)
+    plan = summ._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan
+    assert len(summ.collect()) == 3
+
+
 def test_sse_events_projection(ingested):
     chunks, _ = ingested
     hits = P.search(chunks, "query", k=3)

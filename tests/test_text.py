@@ -113,6 +113,49 @@ class TestSparkTwins:
         for r in rows:
             assert r["n"] == normalize_text_py(r["text"])
 
+    @given(
+        st.lists(
+            st.lists(
+                st.sampled_from(
+                    ["a", "b", ".", " ", "\t", "\n", "\r", "\r\n", "\x0b",
+                     "\x0c", "\x1c", "\x1d", "\x1e", "\x1f", "\x85",
+                     "\xa0", "\u2003"]
+                ),
+                max_size=40,
+            ).map("".join),
+            min_size=50,
+            max_size=200,
+        )
+    )
+    @settings(max_examples=8, deadline=None)
+    def test_normalize_three_way(self, spark, texts):
+        """Native ``normalize_text`` == ``normalize_text_py`` == the ingest
+        kernel (``pipeline.page_chunks``, no split at this max_len) on
+        Java-whitespace and Unicode-whitespace characters alike: only runs
+        of ``[ \\t\\n\\x0B\\f\\r]`` collapse."""
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark import (
+            pipeline as P,
+        )
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.functions.text import (
+            normalize_text,
+        )
+
+        docs = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        native = {
+            r["doc_id"]: r["n"]
+            for r in docs.select("doc_id", normalize_text("text").alias("n"))
+            .collect()
+        }
+        pages = [("f.pdf", i, t) for i, t in enumerate(texts)]
+        kernel = {
+            page: text
+            for _, page, _, text in P.page_chunks(pages, 10_000, None)
+        }
+        for i, t in enumerate(texts):
+            assert native[i] == normalize_text_py(t) == kernel[i], repr(t)
+
     def test_chunk_udf_matches_python(self, spark, sf_dir):
         from pyspark.sql import functions as F
 
