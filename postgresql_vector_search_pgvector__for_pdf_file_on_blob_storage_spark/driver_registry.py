@@ -292,10 +292,6 @@ ROWS_ONLY_SUITES: dict[str, list[str]] = {
         "streaming_neardup_matches",
         "streaming_semdedup_matches",
         "streaming_substring_stats",
-        "streaming_substring_keyed",
-        # r06: the LSM-tiered form — history snapshot probed JVM-side,
-        # keyed state bounded by session-novel grams.
-        "streaming_substring_tiered",
         # r07: the bounded-memory form — on-disk sorted runs, a
         # memory-capped Bloom screen, row-group point-lookup verify.
         "streaming_substring_bloom",

@@ -826,90 +826,6 @@ def streaming_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-@query("streaming_substring_keyed")
-def streaming_substring_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KEYED-STATE substring-dedup stream (r04,
-    streaming/substring.keyed_substring_stream): the same per-doc stats
-    as streaming_substring_stats but probed through Spark's checkpointed
-    state store keyed on the gram hash — O(batch) lookups instead of the
-    parquet store's full scan, the sub-linear shape the store-scan design
-    note names.  Driven over the documents fixture as one availableNow
-    drain; rows-only (stateful streaming has no SQL twin).  The output
-    carries a constant ``batch_diff_rows`` column — the stream result
-    bag-diffed against ``dedup.ngram_dup_stats`` (the whole corpus
-    arrives as one micro-batch, so exact equality is the contract) —
-    making the pytest equivalence pin driver-visible (VERDICT r7
-    next-round #5)."""
-    from ..streaming import substring as SB
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _gallery_scratch("substr_keyed_q_")
-    src, s_d, ckpt = f"{tmp}/src", f"{tmp}/stats", f"{tmp}/ckpt"
-    docs.write.parquet(src)
-    q = SB.keyed_substring_stream(
-        spark, src, "doc_id long, text string", s_d, ckpt, n=8
-    )
-    q.awaitTermination()
-    stream = _lazy_parquet_or_empty(
-        spark, s_d,
-        "doc_id bigint, n_windows bigint, n_grams bigint,"
-        " n_dup_grams bigint, dup_gram_ppm bigint",
-    ).drop("epoch")
-    cols = [
-        "doc_id", "n_windows", "n_grams", "n_dup_grams", "dup_gram_ppm",
-    ]
-    diff = _bag_diff_count(stream, D.ngram_dup_stats(docs, n=8), cols)
-    return (
-        stream.withColumn(
-            "batch_diff_rows", F.lit(int(diff)).cast("long")
-        )
-        .orderBy("doc_id")
-    )
-
-@query("streaming_substring_tiered")
-def streaming_substring_tiered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSM-TIERED substring-dedup stream (r06,
-    streaming/substring.tiered_substring_stream): committed-corpus
-    membership lives in a bucket-partitioned parquet snapshot probed
-    JVM-side (cached stream-static join, zero Python transfer) while
-    keyed state holds only SESSION-novel grams — per-batch state bytes
-    bounded by session ingest, not corpus size (the fix for the keyed
-    form's corpus-linear Arrow state transfer).  Driven over the
-    documents fixture as one availableNow drain; rows-only, with
-    cross-session history flags, kill/resume exactly-once, and
-    state-boundedness pinned in pytest
-    (tests/test_streaming.py::TestTieredSubstring).  The output carries
-    a constant ``batch_diff_rows`` column — the stream result
-    bag-diffed against ``dedup.ngram_dup_stats`` (whole corpus in one
-    micro-batch -> exact equality) — the pytest equivalence pin made
-    driver-visible (VERDICT r7 next-round #5)."""
-    from ..streaming import substring as SB
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _gallery_scratch("substr_tiered_q_")
-    src = f"{tmp}/src"
-    gram_d, s_d, ckpt = f"{tmp}/grams", f"{tmp}/stats", f"{tmp}/ckpt"
-    docs.write.parquet(src)
-    q = SB.tiered_substring_stream(
-        spark, src, "doc_id long, text string", gram_d, s_d, ckpt, n=8
-    )
-    q.awaitTermination()
-    stream = _lazy_parquet_or_empty(
-        spark, s_d,
-        "doc_id bigint, n_windows bigint, n_grams bigint,"
-        " n_dup_grams bigint, dup_gram_ppm bigint",
-    ).drop("epoch")
-    cols = [
-        "doc_id", "n_windows", "n_grams", "n_dup_grams", "dup_gram_ppm",
-    ]
-    diff = _bag_diff_count(stream, D.ngram_dup_stats(docs, n=8), cols)
-    return (
-        stream.withColumn(
-            "batch_diff_rows", F.lit(int(diff)).cast("long")
-        )
-        .orderBy("doc_id")
-    )
-
 @query("streaming_substring_bloom")
 def streaming_substring_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BOUNDED-MEMORY substring-dedup stream (r07,
@@ -918,7 +834,7 @@ def streaming_substring_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     session, broadcast) screens batch grams, and only the sparse
     positive set is verified by parquet row-group point lookups —
     per-batch wall and executor memory bounded regardless of corpus
-    size (the fix for the tiered form's corpus-sized cached snapshot).
+    size.
     Driven over the documents fixture split into two sessions so the
     second session exercises the Bloom + point-lookup path (and, since
     r08, the incremental artifact reconcile: the second session folds

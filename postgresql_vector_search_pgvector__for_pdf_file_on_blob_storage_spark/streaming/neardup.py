@@ -182,8 +182,9 @@ def neardup_stream(
     runs.
 
     ``max_files_per_trigger`` / ``on_batch`` / ``compact_every`` follow
-    the substring_stream contract (ingest pacing, post-write crash seam,
-    inline band-store compaction after every K-th epoch — the store is
+    the substring.bloom_substring_stream contract (ingest pacing,
+    post-write crash seam, inline compaction after every K-th epoch —
+    here of the whole band store below its newest epoch; the store is
     re-read per batch, so the fold is picked up by the next batch's
     candidate join; the shingle store is epoch-keyed but carries no
     bucket partition column, so compact_store does not apply to it).

@@ -252,7 +252,8 @@ def semdedup_stream(
     carrying accepted state across runs.
 
     ``max_files_per_trigger`` bounds each micro-batch; ``on_batch`` is
-    the post-write crash-injection seam (see substring.substring_stream);
+    the post-write crash-injection seam (see
+    substring.bloom_substring_stream);
     ``compact_every=K`` folds the cluster-partitioned vector store inline
     after every K-th epoch (store re-read per batch, so the next batch's
     partition-pruned reads hit one file per touched cluster).  A restart

@@ -179,8 +179,9 @@ def compact_store(
 
     MUST run under single-writer discipline: either while the stream is
     stopped (manual maintenance window) or from INSIDE the stream's own
-    ``foreachBatch`` callback (``substring_stream(compact_every=K)`` —
-    the stream is the single writer while the callback runs).  The swap
+    ``foreachBatch`` callback (``compact_every=K`` of
+    ``substring.bloom_substring_stream`` and its siblings — the stream is
+    the single writer while the callback runs).  The swap
     is crash-safe under single-writer: the target epoch dir is renamed
     ASIDE (``<path>.compact_old_epoch=K``) rather than deleted, so at
     every instant the target epoch's rows exist in at least one of

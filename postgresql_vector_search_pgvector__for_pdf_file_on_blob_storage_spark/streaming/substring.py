@@ -21,43 +21,17 @@ writes, layout/epoch guards):
 - A SINGLE batch over a whole corpus is therefore equivalent to the
   batch operator ``dedup.ngram_dup_stats(min_docs=2)`` — pinned by test.
 
-Store-scan cost note: for any non-tiny batch the gram hashes touch all
-64 buckets, so the ``isin(buckets)`` pruning below cannot shrink the
-probe and each batch pays a full distinct-gram-store scan — linear in
-corpus-wide distinct grams (~22.6/doc measured, BASELINE.md).  The
-maintenance lever is ``stores.compact_store`` (run between stream
-sessions): folds the per-epoch small files into one sorted file per
-bucket.  Measured (r06 probe, BASELINE.md): 16 seed epochs over 900k
-docs leave 12,800 files; compaction folds them in 17.6 s and cuts the
-next 100k arrival batch 24.0 -> 15.8 s (-34%).  The win is file-open
-amortization + encoding, NOT row-group pruning — the probe key is a
-uniform 64-bit hash, so every row group holds candidates for a large
-batch and min/max or Bloom stats cannot prune.  For genuinely
-SUB-LINEAR per-batch state movement use :func:`keyed_substring_stream`
-below (r04, sharded r05 — O(batch·log corpus) probes, but per-batch
-Arrow state transfer linear in corpus: 209 MB at 1M docs) or the
-:func:`tiered_substring_stream` (r06 — bounded state, measured flat
-44.8 MB across corpus sizes, history probed via a cached pre-shuffled
-snapshot join).  For bounded MEMORY as well — history on disk, a
-memory-capped Bloom screen, and row-group point lookups for the sparse
-verify set — use :func:`bloom_substring_stream` (r07), the form whose
-per-batch wall and executor memory do not grow with the corpus.
-
-Choosing a form by corpus size (measured, BASELINE.md r07 crossover
-probe at 2M/4.1M docs): the store-scan form is simplest and fine while
-the store scan is cheap; keyed is fastest on RAW WALL through at least
-4M docs on local[32] (11-17 s/arrival) but round-trips ~225 MB of Arrow
-state per 1M corpus docs EVERY batch (910 MB at 4M — structurally dead
-an order of magnitude later); tiered bounds state by session ingest but
-caches a corpus-sized snapshot per session; bloom bounds both wall and
-memory (flat 9-12 s/batch, capped bitmap) at the cost of a per-session
-setup scan, and is the 100 TB shape.  Steady-state ingest (one session,
-many batches) -> bloom; ad-hoc small corpora -> keyed.
+Run one batch at a time, this reference pays a full distinct-gram-store
+scan per batch: for any non-tiny batch the gram hashes touch all 64
+buckets, so the ``isin(buckets)`` pruning below cannot shrink the probe.
+There is one streaming form, :func:`bloom_substring_stream`, whose
+per-batch wall and executor memory do not grow with the corpus; it is
+tested against :func:`detect_and_register`.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
@@ -68,15 +42,16 @@ from pyspark.sql import functions as F
 from ..functions import text as X
 from ..operators.dedup import word_shingles
 from ..utils import spread
+from .bloomstore import (
+    _bloom_probe,
+    append_run_entries,
+    bitmap_for,
+    ensure_artifacts,
+    open_parquet,
+)
 from .stores import prepare_store, read_store, write_store_partitioned
 
-__all__ = [
-    "detect_and_register",
-    "substring_stream",
-    "keyed_substring_stream",
-    "tiered_substring_stream",
-    "bloom_substring_stream",
-]
+__all__ = ["detect_and_register", "bloom_substring_stream"]
 
 N_BUCKETS = 64
 
@@ -195,286 +170,19 @@ def detect_and_register(
     write_store_partitioned(novel, gram_dir, "bucket", epoch_id)
 
 
-def substring_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    gram_dir: str,
-    stats_dir: str,
-    checkpoint: str,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int | None = None,
-    on_batch=None,
-    compact_every: int | None = None,
-):
-    """Streaming wrapper: parquet-directory source -> per-micro-batch
-    :func:`detect_and_register` with epoch-keyed idempotent writes;
-    AvailableNow trigger, same contract as the sibling streams.
-
-    ``max_files_per_trigger`` bounds each micro-batch (ingest pacing at
-    scale; also how the kill/resume test forces multiple batches).
-    ``on_batch(epoch_id)``, if given, runs AFTER the batch's writes —
-    the crash-injection seam for restart tests (a raise here simulates
-    dying between the state writes and the checkpoint commit, the
-    at-least-once window the epoch-keyed overwrite exists for).
-
-    ``compact_every=K`` runs :func:`stores.compact_store` on the gram
-    store inline after every K-th epoch's writes, folding committed
-    epoch dirs into one sorted file per bucket — the measured 34%
-    arrival-batch cut (BASELINE.md r06) without a manual maintenance
-    window.  Safe inside ``foreachBatch`` because the stream IS the
-    single writer while the callback runs, and compaction never touches
-    the newest epoch: a crash anywhere in the
-    register -> compact -> commit sequence replays the epoch through the
-    same idempotent path (re-register overwrites ``epoch=e``, re-compact
-    re-folds — both idempotent; prepare_store's replay guard only ever
-    drops the replayed epoch's OWN rows, which compaction leaves in
-    place).  A crash INSIDE compact_store's swap itself is repaired by
-    its entry-time recovery (the target epoch dir is renamed aside, not
-    deleted, so no state exists where the only copy of an epoch's rows
-    is a dir the next run overwrites — stores.py
-    ``_recover_interrupted_compaction``); the same recovery also runs at
-    SESSION start below, so a restart after a mid-swap death repairs the
-    store before the replayed batch's first probe reads it."""
-    from .stores import recover_store
-
-    # Unconditional: a crash inside a MANUAL maintenance-window
-    # compact_store swap followed by a restart WITHOUT inline
-    # compaction must still be repaired before the store is read
-    # (cheap glob no-op when no swap was interrupted).
-    recover_store(spark, gram_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        detect_and_register(
-            batch_df,
-            gram_dir,
-            stats_dir,
-            n=n,
-            text_col=text_col,
-            id_col=id_col,
-            epoch_id=epoch_id,
-        )
-        if (
-            compact_every is not None
-            and epoch_id > 0
-            and epoch_id % int(compact_every) == 0
-        ):
-            from .stores import compact_store
-
-            compact_store(
-                batch_df.sparkSession, gram_dir, "bucket", sort_cols=["gk"]
-            )
-        if on_batch is not None:
-            on_batch(epoch_id)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Keyed-state variant: the SUB-LINEAR per-batch shape (r04, sharded r05).
-#
-# The parquet-store form above pays a full distinct-gram-store scan per
-# batch (module docstring).  This variant keys Spark's own streaming state
-# store on a SHARD of the gram-hash space — `groupBy(pmod(gk, n_shards))
-# .applyInPandasWithState` — so a batch performs O(batch grams) membership
-# probes against checkpointed state, and state versioning rides the
-# CHECKPOINT: a replayed epoch restores the pre-batch state snapshot, so
-# crash idempotence needs no epoch bookkeeping at all.  The trade: state
-# lives inside the checkpoint (not a queryable parquet table), which is
-# exactly the right home for a pure membership structure.
-#
-# Why shards, not one state key per gram (the r04 form): keying on the
-# raw hash made every distinct batch gram its own pandas group — 2.3M
-# single-row groups per 100k-doc batch, 87 s of pure group dispatch
-# (BASELINE.md r04 probe).  Sharding the key space gives each group
-# ~batch_grams/n_shards rows, so group dispatch is amortized; inside a
-# group the membership set is a SORTED packed int64 array in one binary
-# state column, probed with vectorized searchsorted and merged with
-# union1d.  Per-batch state movement is O(corpus/n_shards × touched
-# shards) bytes of Arrow-transferred int64 — for non-tiny batches every
-# shard is touched, so the byte volume is linear in corpus like the
-# store scan, but at ~8 bytes/gram memcpy speed instead of a
-# parquet-scan + shuffle-join, and the probe CPU is O(batch·log corpus).
-# Measured at the 900k/100k probe (r06, BASELINE.md): 10.3 s/batch with
-# 209 MB of state crossing the Arrow boundary every batch — the linear
-# byte volume is this form's scale ceiling; tiered_substring_stream
-# below bounds it by session ingest instead of corpus.
-# n_shards is fixed per checkpoint (guard below): changing it would
-# re-route grams to shards whose state they were never written to.
-# ---------------------------------------------------------------------------
-
-_KEYED_OUT_SCHEMA = (
-    "doc_id long, n_windows long, n_grams long, is_dup int"
-)
-_KEYED_STATE_SCHEMA = "grams binary"
-# Little-endian pinned dtype for keyed-state membership bytes: a
-# checkpoint written with native byte order would be silently misread
-# (garbage gram hashes, missed duplicates) if resumed on a platform
-# of the other endianness.
-_STATE_DTYPE = np.dtype("<i8")
-_EMPTY_I64 = np.empty(0, dtype=_STATE_DTYPE)
-
-
-def _shard_group(
-    key: Tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    """One gram-hash shard per micro-batch: a (doc, gram) pair is a
-    duplicated window iff the gram was seen in ANY earlier batch (the
-    shard's sorted membership array in keyed state) or >= 2 distinct
-    docs of THIS batch carry it — the same df >= 2 rule as the batch
-    operator.  The NULL key collects the zero-gram docs (explode_outer
-    sentinel): they pass through with is_dup = 0 and never touch
-    state.  A null int key reaches pandas as NaN, not None, so the
-    sentinel test must be pd.isna — `is None` would route empty docs
-    into the membership branch where the NaN gram hash silently casts
-    to int64-min and registers as a fake gram."""
-    batch = pd.concat(list(pdfs), ignore_index=True)
-    if pd.isna(key[0]):
-        docs = batch.drop_duplicates("doc_id")
-        yield pd.DataFrame(
-            {
-                "doc_id": docs["doc_id"],
-                "n_windows": docs["n_windows"],
-                "n_grams": docs["n_grams"],
-                "is_dup": np.zeros(len(docs), dtype=np.int32),
-            }
-        )
-        return
-    pairs = batch.drop_duplicates(["doc_id", "gk"])
-    gk = pairs["gk"].to_numpy(dtype=np.int64)
-    seen = (
-        np.frombuffer(state.get[0], dtype=_STATE_DTYPE)
-        if state.exists
-        else _EMPTY_I64
-    )
-    if seen.size:
-        pos = np.minimum(np.searchsorted(seen, gk), seen.size - 1)
-        in_state = seen[pos] == gk
-    else:
-        in_state = np.zeros(gk.size, dtype=bool)
-    in_batch = pairs.groupby("gk")["doc_id"].transform("size").to_numpy() >= 2
-    merged = np.union1d(seen, gk)  # sorted + distinct
-    if merged.size != seen.size:
-        state.update((merged.astype(_STATE_DTYPE, copy=False).tobytes(),))
-    yield pd.DataFrame(
-        {
-            "doc_id": pairs["doc_id"].to_numpy(),
-            "n_windows": pairs["n_windows"].to_numpy(),
-            "n_grams": pairs["n_grams"].to_numpy(),
-            "is_dup": (in_state | in_batch).astype(np.int32),
-        }
-    )
-
-
-def _sharded_gram_source(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    n: int,
-    text_col: str,
-    id_col: str,
-    max_files_per_trigger: int | None,
-    n_shards: int,
-) -> DataFrame:
-    """Streaming ``(doc_id, n_windows, n_grams, gk, shard)`` frame shared
-    by the keyed and tiered forms: shingle once, explode with a real-NULL
-    sentinel for zero-gram docs — xxhash64(NULL) is a CONSTANT, not NULL,
-    so hashing the sentinel would collide every empty doc into one
-    legitimate-looking gram key.  pmod(NULL) stays NULL, so sentinel docs
-    keep their own NULL-key group and never enter a membership shard."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    docs = reader.parquet(input_dir)
-    raw = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        word_shingles(text_col, n).alias("__grams"),
-        F.greatest(
-            F.size(X.word_tokens(text_col)) - F.lit(n - 1), F.lit(0)
-        )
-        .cast("long")
-        .alias("n_windows"),
-    ).withColumn("n_grams", F.size("__grams").cast("long"))
-    return (
-        raw.select(
-            "doc_id",
-            "n_windows",
-            "n_grams",
-            F.explode_outer("__grams").alias("__g"),
-        )
-        .select(
-            "doc_id",
-            "n_windows",
-            "n_grams",
-            F.when(F.col("__g").isNull(), F.lit(None).cast("long"))
-            .otherwise(F.xxhash64("__g"))
-            .alias("gk"),
-        )
-        .withColumn(
-            "shard", F.pmod(F.col("gk"), F.lit(int(n_shards))).cast("int")
-        )
-    )
-
-
-def _per_doc_stats(rows: DataFrame) -> DataFrame:
-    """Fold per-(doc, gram) flag rows to the batch operator's exact
-    per-doc stats contract (shared by the keyed and tiered sinks).  The
-    NULL-key sentinel contributes its single is_dup=0 row; real docs sum
-    one flag per distinct gram."""
-    return (
-        rows.groupBy("doc_id")
-        .agg(
-            F.first("n_windows").alias("n_windows"),
-            F.first("n_grams").alias("n_grams"),
-            F.sum(
-                F.when(F.col("n_grams") > 0, F.col("is_dup")).otherwise(
-                    F.lit(0)
-                )
-            )
-            .cast("long")
-            .alias("n_dup_grams"),
-        )
-        .withColumn(
-            "dup_gram_ppm",
-            F.when(
-                F.col("n_grams") > 0,
-                F.expr(
-                    "(n_dup_grams * CAST(1000000 AS BIGINT)) div n_grams"
-                ),
-            )
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
-        .select(
-            "doc_id", "n_windows", "n_grams", "n_dup_grams", "dup_gram_ppm"
-        )
-    )
-
-
-def _shard_count_guard(
-    spark: SparkSession, checkpoint: str, n_shards: int, what: str
+def _shingle_width_guard(
+    spark: SparkSession, checkpoint: str, n: int, what: str
 ) -> None:
-    """Pin ``n_shards`` to the checkpoint: grams are routed to shards by
-    ``pmod(gk, n_shards)``, so resuming with a different value would
-    probe shards whose state never saw those grams — silent duplicate
-    misses.  The pin is an empty marker directory ``_n_shards=<n>``
-    inside the checkpoint (existence-only: readable on any Hadoop
-    filesystem without open/read plumbing).
+    """Pin the shingle width ``n`` to the checkpoint: ``n`` decides which
+    grams exist, so a session resumed with another width would probe the
+    history for grams it never registered — silent duplicate misses.
+    The pin is an empty marker directory ``_n=<n>`` inside the checkpoint
+    (existence-only: readable on any Hadoop filesystem without open/read
+    plumbing).
 
     The marker is written BEFORE the stream starts, so a first run that
     dies before any commit leaves a pinned marker over an empty
-    checkpoint.  Harmless: resuming with the same n_shards works, and a
+    checkpoint.  Harmless: resuming with the same n works, and a
     different value errors spuriously but LOUDLY (delete the checkpoint
     dir to truly start over) — preferable to the silent duplicate misses
     an unpinned mismatch would cause."""
@@ -482,192 +190,19 @@ def _shard_count_guard(
     jpath = jvm.org.apache.hadoop.fs.Path
     root = jpath(checkpoint)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    marker = jpath(f"{checkpoint}/_n_shards={int(n_shards)}")
-    existing = fs.globStatus(jpath(f"{checkpoint}/_n_shards=*"))
+    marker = jpath(f"{checkpoint}/_n={int(n)}")
+    existing = fs.globStatus(jpath(f"{checkpoint}/_n=*"))
     if existing is not None and len(existing) > 0:
         found = [s.getPath().getName() for s in existing]
-        if f"_n_shards={int(n_shards)}" not in found:
+        if f"_n={int(n)}" not in found:
             raise ValueError(
                 f"{what}: checkpoint {checkpoint} was"
                 f" created with {found[0]} but this session asked for"
-                f" n_shards={n_shards}; shard routing is part of the"
-                " state layout and cannot change on resume"
+                f" n={n}; the shingle width is part of the state layout"
+                " and cannot change on resume"
             )
         return
     fs.mkdirs(marker)
-
-
-def keyed_substring_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    stats_dir: str,
-    checkpoint: str,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int | None = None,
-    on_batch=None,
-    n_shards: int = 2048,
-):
-    """Streaming substring-dedup stats over KEYED state (see section
-    comment): parquet source -> distinct (doc, gram-hash) explode ->
-    per-SHARD stateful dup flags (sorted packed-int64 membership array
-    per shard, vectorized searchsorted probes) -> per-doc aggregation in
-    foreachBatch with epoch-keyed idempotent stats writes.  Output rows
-    carry the batch operator's exact column contract; a single batch
-    over a whole corpus equals ``dedup.ngram_dup_stats(min_docs=2)``
-    (pinned by test).  ``n_shards`` is pinned to the checkpoint on first
-    start and enforced on resume."""
-    _shard_count_guard(spark, checkpoint, n_shards, "keyed_substring_stream")
-    exploded = _sharded_gram_source(
-        spark, input_dir, schema, n, text_col, id_col,
-        max_files_per_trigger, n_shards,
-    )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    flagged = exploded.groupBy("shard").applyInPandasWithState(
-        _shard_group,
-        outputStructType=_KEYED_OUT_SCHEMA,
-        stateStructType=_KEYED_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        _per_doc_stats(batch_df).write.mode("overwrite").parquet(
-            f"{stats_dir}/epoch={int(epoch_id)}"
-        )
-        if on_batch is not None:
-            on_batch(epoch_id)
-
-    return (
-        flagged.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# ---------------------------------------------------------------------------
-# Tiered variant: LSM-shaped state — bounded keyed state + parquet history
-# (r06; the fix for the keyed form's corpus-linear per-batch state bytes).
-#
-# The sharded keyed form above keeps the ENTIRE corpus membership inside
-# Spark's state store, so every batch round-trips O(corpus/n_shards ×
-# touched shards) bytes JVM→Arrow→Python — sub-linear CPU, linear I/O
-# (VERDICT r05 "what's wrong #3").  This variant splits membership the way
-# an LSM tree splits writes:
-#
-# - **History tier** (the gram-store parquet, bucket-partitioned): every
-#   gram registered by a COMMITTED epoch.  Loaded ONCE per stream session
-#   as a cached static DataFrame and probed with a JVM-side stream-static
-#   left join — whole-stage codegen, zero Python transfer.  The snapshot
-#   is pinned to epochs <= the checkpoint's last committed batch, so a
-#   crashed batch's registrations are invisible on replay (identical
-#   novel/dup decisions → exactly-once survives).
-# - **Delta tier** (keyed state, sharded as above): ONLY grams first seen
-#   during the CURRENT session.  Per-batch state bytes are therefore
-#   bounded by session ingest, not corpus size.  On the next session the
-#   snapshot has absorbed them (each batch registers its novel grams into
-#   the store, epoch-keyed idempotent), so state is purged WHOLESALE via
-#   a session marker: state rows written under an older marker are
-#   discarded on first touch — every gram they contain is provably in the
-#   new snapshot.
-#
-# Marker soundness: marker = last-committed-epoch + 1 at session start.  A
-# gram enters state at epoch e only when absent from the snapshot, and the
-# SAME batch registers it into store epoch e; once e commits, any later
-# session's snapshot (epochs <= C >= e) contains it — so stored-marker <
-# current-marker implies every state gram is snapshot-covered.  Replay of
-# the one possible uncommitted epoch E: state restores to its pre-E
-# version, the snapshot excludes E's store dir (E > C), and both attempts
-# compute identical flags and novel sets.
-#
-# The per-batch join against the cached snapshot is still corpus-linear
-# CPU (nothing answers arbitrary-hash membership without touching a
-# corpus-sized structure), but it stays JVM-side, columnar and codegen'd —
-# the measured store-scan/keyed gap (91 s vs 7 s, BASELINE.md) came from
-# parquet re-scan + shuffle join, both of which the cached snapshot
-# avoids.  scripts/substring_stream_probe.py --tiered records batch wall
-# AND state bytes at multiple corpus sizes.
-# ---------------------------------------------------------------------------
-
-_TIERED_OUT_SCHEMA = (
-    "doc_id long, n_windows long, n_grams long, is_dup int,"
-    " gk long, novel int"
-)
-_TIERED_STATE_SCHEMA = "marker long, grams binary"
-
-
-def _tiered_shard_group(
-    key: Tuple, pdfs: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    """Per-shard flags for the tiered stream: dup iff in the history
-    snapshot (``in_hist``, joined JVM-side) OR in this session's keyed
-    delta state OR >= 2 docs of this batch.  Emits one row per distinct
-    (doc, gram) pair plus ``novel`` marking each gram's single
-    registration row.  State stores ONLY non-history grams and is purged
-    wholesale when the session marker advances (see section comment).
-    The NULL-key sentinel group (zero-gram docs) arrives with a NaN int
-    key — pd.isna, not `is None` (see _shard_group)."""
-    batch = pd.concat(list(pdfs), ignore_index=True)
-    if pd.isna(key[0]):
-        docs = batch.drop_duplicates("doc_id")
-        yield pd.DataFrame(
-            {
-                "doc_id": docs["doc_id"],
-                "n_windows": docs["n_windows"],
-                "n_grams": docs["n_grams"],
-                "is_dup": np.zeros(len(docs), dtype=np.int32),
-                # gk is consumed only through the novel==1 registration
-                # filter; novel is 0 here, so a plain 0 placeholder
-                # avoids the nullable-Int64 Arrow cast warning.
-                "gk": np.zeros(len(docs), dtype=np.int64),
-                "novel": np.zeros(len(docs), dtype=np.int32),
-            }
-        )
-        return
-    pairs = batch.drop_duplicates(["doc_id", "gk"])
-    gk = pairs["gk"].to_numpy(dtype=np.int64)
-    in_hist = pairs["in_hist"].to_numpy(dtype=np.int64) == 1
-    marker = int(batch["marker"].iloc[0])
-    purged = False
-    if state.exists:
-        st_marker, st_bytes = state.get
-        if int(st_marker) < marker:
-            # Previous-session state: every gram in it is in the current
-            # snapshot (registered by a committed epoch) — drop it all.
-            seen, purged = _EMPTY_I64, True
-        else:
-            seen = np.frombuffer(st_bytes, dtype=_STATE_DTYPE)
-    else:
-        seen = _EMPTY_I64
-    if seen.size:
-        pos = np.minimum(np.searchsorted(seen, gk), seen.size - 1)
-        in_state = seen[pos] == gk
-    else:
-        in_state = np.zeros(gk.size, dtype=bool)
-    in_batch = pairs.groupby("gk")["doc_id"].transform("size").to_numpy() >= 2
-    fresh = ~in_hist & ~in_state
-    merged = np.union1d(seen, gk[fresh])
-    if merged.size != seen.size or purged:
-        state.update(
-            (marker, merged.astype(_STATE_DTYPE, copy=False).tobytes())
-        )
-    # One registration row per fresh gram (first occurrence in shard
-    # order): shards partition the gk space, so this is globally unique.
-    first_occ = ~pd.Series(gk).duplicated().to_numpy()
-    yield pd.DataFrame(
-        {
-            "doc_id": pairs["doc_id"].to_numpy(),
-            "n_windows": pairs["n_windows"].to_numpy(),
-            "n_grams": pairs["n_grams"].to_numpy(),
-            "is_dup": (in_hist | in_state | in_batch).astype(np.int32),
-            "gk": gk,
-            "novel": (fresh & first_occ).astype(np.int32),
-        }
-    )
 
 
 def _newest_log_entry(
@@ -718,12 +253,12 @@ def _store_marker_exists(spark: SparkSession, checkpoint: str) -> bool:
 def _session_history_guards(
     spark: SparkSession, checkpoint: str, gram_dir: str, what: str
 ) -> Tuple[int | None, "DataFrame | None"]:
-    """Session-start consistency guards shared by the history-tier stream
-    forms (tiered, bloom): returns ``(committed, store)`` where
-    ``committed`` is the checkpoint's last committed batch (None for a
-    fresh checkpoint) and ``store`` the opened gram store (None if
-    absent).  Refuses loudly on every checkpoint/store mismatch that
-    would otherwise silently destroy or forget accepted corpus history:
+    """Session-start consistency guards of the bloom stream: returns
+    ``(committed, store)`` where ``committed`` is the checkpoint's last
+    committed batch (None for a fresh checkpoint) and ``store`` the
+    opened gram store (None if absent).  Refuses loudly on every
+    checkpoint/store mismatch that would otherwise silently destroy or
+    forget accepted corpus history:
 
     - store missing behind a checkpoint that ever registered a gram;
     - flat (non-epoch) store layout under an epoch-keyed stream;
@@ -777,136 +312,13 @@ def _session_history_guards(
     return committed, store
 
 
-def tiered_substring_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str,
-    gram_dir: str,
-    stats_dir: str,
-    checkpoint: str,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_files_per_trigger: int | None = None,
-    on_batch=None,
-    n_shards: int = 2048,
-):
-    """Streaming substring-dedup stats with LSM-TIERED membership (see
-    section comment): committed history in a cached bucket-partitioned
-    parquet snapshot probed JVM-side, session-novel grams in bounded
-    keyed state, per-batch registration of novel grams into the store
-    (epoch-keyed idempotent).  Same output contract as the sibling
-    forms; a single batch over a whole corpus equals
-    ``dedup.ngram_dup_stats(min_docs=2)``."""
-    _shard_count_guard(spark, checkpoint, n_shards, "tiered_substring_stream")
-    committed, store = _session_history_guards(
-        spark, checkpoint, gram_dir, "tiered_substring_stream"
-    )
-    snapshot = None
-    if store is not None:
-        if committed is not None:
-            # Persist the snapshot PRE-SHUFFLED and PRE-SORTED on the join
-            # key: the cached InMemoryRelation then reports
-            # HashPartitioning(gk, shuffle.partitions) + per-partition gk
-            # order, so each micro-batch's stream-static sort-merge join
-            # exchanges and sorts ONLY the batch side — the corpus-sized
-            # side is a memory-speed merge scan, no per-batch shuffle.
-            # (Micro-batch plans don't run AQE, so the partition-count
-            # match is stable across batches.)
-            # Some runtimes set this conf to a non-numeric value (e.g.
-            # "auto" under auto-optimized shuffle); any partition count
-            # is CORRECT here — it only sizes the snapshot's hash
-            # layout — so fall back rather than fail startup.
-            try:
-                n_part = int(
-                    spark.conf.get("spark.sql.shuffle.partitions", "200")
-                )
-            except ValueError:
-                n_part = max(store.rdd.getNumPartitions(), 32)
-            snapshot = (
-                store.filter(F.col("epoch") <= int(committed))
-                .select("gk")
-                .withColumn("in_hist", F.lit(1))
-                .repartition(n_part, "gk")
-                .sortWithinPartitions("gk")
-                .persist()
-            )
-            snapshot.count()  # materialize once; every batch reuses it
-    marker = 0 if committed is None else int(committed) + 1
-
-    exploded = _sharded_gram_source(
-        spark, input_dir, schema, n, text_col, id_col,
-        max_files_per_trigger, n_shards,
-    )
-    if snapshot is not None:
-        joined = exploded.join(snapshot, "gk", "left").withColumn(
-            "in_hist", F.coalesce(F.col("in_hist"), F.lit(0))
-        )
-    else:
-        joined = exploded.withColumn("in_hist", F.lit(0))
-    keyed = joined.withColumn("marker", F.lit(int(marker)).cast("long"))
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    flagged = keyed.groupBy("shard").applyInPandasWithState(
-        _tiered_shard_group,
-        outputStructType=_TIERED_OUT_SCHEMA,
-        stateStructType=_TIERED_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # Two consumers (stats + registration): materialize once.
-        rows = batch_df.localCheckpoint(eager=True)
-        _per_doc_stats(rows).write.mode("overwrite").parquet(
-            f"{stats_dir}/epoch={int(epoch_id)}"
-        )
-        novel = (
-            rows.filter(F.col("novel") == 1)
-            .select("gk")
-            .withColumn("bucket", F.pmod(F.col("gk"), F.lit(N_BUCKETS)))
-        )
-        if write_store_partitioned(novel, gram_dir, "bucket", epoch_id):
-            _mark_store_written(spark, checkpoint)
-        if on_batch is not None:
-            on_batch(epoch_id)
-
-    query = (
-        flagged.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if snapshot is not None:
-        # The snapshot cache belongs to THIS session only — release it
-        # when the query ends, or back-to-back sessions in one
-        # SparkSession (the probe; any periodic-ingest app) pin one
-        # corpus-sized InMemoryRelation per session until the app dies.
-        import threading
-
-        def _release(q=query, s=snapshot):
-            try:
-                q.awaitTermination()
-            except Exception:
-                pass  # stream failure still releases the cache
-            finally:
-                s.unpersist()
-
-        threading.Thread(
-            target=_release, name="tiered-snapshot-release", daemon=True
-        ).start()
-    return query
-
-
 # ---------------------------------------------------------------------------
-# Bloom-screened variant (r07, artifact-incremental since r08): bounded-
+# The streaming form (r07, artifact-incremental since r08): bounded-
 # memory history with PERSISTED membership structures — the 100 TB form.
 #
-# The tiered form above bounds keyed STATE by session ingest, but still
-# loads the committed gram history as a corpus-sized cached DataFrame and
-# merge-scans it every micro-batch.  This variant keeps the history ON
-# DISK and answers membership the way an LSM tree serves point reads:
+# No corpus-sized structure is cached, scanned per batch or carried in
+# streaming state.  The history stays ON DISK and membership is answered
+# the way an LSM tree serves point reads:
 #
 # - **History tier** (disk): the epoch-keyed, bucket-partitioned gram
 #   store, with each registration written gk-SORTED within its bucket
@@ -943,7 +355,7 @@ def tiered_substring_stream(
 # per epoch — that would cost the full bitmap bytes per batch; the next
 # session start folds the session's epochs).
 #
-# Exactly-once rides the same epoch bookkeeping as the sibling forms:
+# Exactly-once rides the same epoch bookkeeping as detect_and_register:
 # the history cut is pinned to epochs <= the checkpoint's last committed
 # batch at session start, stats/registration writes are epoch-keyed
 # idempotent overwrites, and the session delta excludes the current
@@ -952,14 +364,6 @@ def tiered_substring_stream(
 # byte-identical replayed gram sets, so artifact maintenance that ran
 # ahead of a crashed commit is idempotent (bloomstore module docstring).
 # ---------------------------------------------------------------------------
-
-from .bloomstore import (  # noqa: E402  (section-local import by design)
-    _bloom_probe,
-    append_run_entries,
-    bitmap_for,
-    ensure_artifacts,
-    open_parquet,
-)
 
 
 def bloom_substring_stream(
@@ -985,9 +389,11 @@ def bloom_substring_stream(
     section comment): per-bucket persisted Bloom bitmaps screen batch
     grams, only positives are verified by row-group point lookups into
     the sorted on-disk runs, session-novel grams are answered by the
-    session's own epoch dirs.  Same output contract as the sibling
-    forms; a single batch over a whole corpus equals
-    ``dedup.ngram_dup_stats(min_docs=2)``.
+    session's own epoch dirs.  Same output contract as
+    :func:`detect_and_register`; a single batch over a whole corpus
+    equals ``dedup.ngram_dup_stats(min_docs=2)``.  ``n`` is pinned to
+    the checkpoint on first start: resuming with another shingle width
+    raises ``ValueError``.
 
     ``bloom_bytes`` is an EXPLICIT fixed TOTAL bitmap budget (split
     evenly across buckets, no growth); when None each bucket is sized at
@@ -1037,6 +443,7 @@ def bloom_substring_stream(
     committed, store = _session_history_guards(
         spark, checkpoint, gram_dir, "bloom_substring_stream"
     )
+    _shingle_width_guard(spark, checkpoint, n, "bloom_substring_stream")
     sc = spark.sparkContext
     desc_bc = index_bc = None
     m_bytes = k_hashes = n_hist = 0

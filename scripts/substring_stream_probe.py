@@ -1,37 +1,26 @@
-"""Store-scan vs keyed-state substring-dedup probe (r04).
+"""Probe for the bounded-memory substring-dedup stream
+(``streaming/substring.bloom_substring_stream``).
 
-Seeds each incremental form with ``n_seed`` accepted docs, then times one
-``n_batch``-doc arrival batch.  The parquet-store form's batch cost is
-linear in corpus-wide distinct grams (it scans the store); the
-keyed-state form's is linear in BATCH grams (checkpointed state lookups)
-plus a per-group Python overhead — this probe records both so the
-crossover is measured, not asserted.
+Run: ``python scripts/substring_stream_probe.py MODE [N1] [N2]``; each
+mode prints one JSON line.  N1 and N2 must be integers >= 1; an unknown
+or missing MODE exits non-zero with a usage line.
 
-Run: ``python scripts/substring_stream_probe.py [n_seed] [n_batch]``.
-Output: one JSON line.
+``--bloom`` (r07, N1 = n_seed, N2 = n_batch): per-batch wall,
+session-setup cost (bitmap + run index), the explicit bloom-bitmap cap,
+verify-set size and parquet row-group reads at three corpus sizes — the
+numbers that show per-batch history cost does not grow with the corpus
+(no cached snapshot, no corpus-sized state anywhere).
 
-``--tiered`` (r06) probes the LSM-tiered form instead: the corpus is
-seeded in three cumulative sessions (n/3, 2n/3, n) and after each one a
-FRESH session processes an n_batch arrival — so the keyed delta state at
-measurement time holds exactly that batch's session-novel grams.  Records
-per-batch wall, state rows and state bytes at each corpus size: the
-boundedness claim (state ~ batch, not corpus) is the number the keyed
-form cannot produce (its state is the whole corpus membership).
+``--artifacts`` (r08, n_seed, n_batch): session-start cost with the
+incremental per-bucket bitmap + run index reconcile (O(increment), flat)
+against the cold full-rebuild arm (paid once ever).
 
-``--bloom`` (r07) probes the bounded-MEMORY form the same way: per-batch
-wall, session-setup cost (bitmap + run index), the explicit bloom-bitmap
-cap, verify-set size and parquet row-group reads at each corpus size —
-the numbers that show per-batch history cost does not grow with the
-corpus (no cached snapshot, no corpus-sized state anywhere).
+``--fp`` (r08, n_seed, n_batch): the Bloom FP-degradation COST curve:
+fresh arrivals under deliberately exceeded bits/gram budgets (10 / 2 /
+0.5), recording verify-set fraction, row-group reads and per-batch wall.
 
-``--artifacts`` (r08) probes the PERSISTED-artifact form of the bloom
-stream: session-start cost with the incremental per-bucket bitmap + run
-index reconcile (O(increment), flat) against the cold full-rebuild arm
-(the r7 per-session cost, paid once ever).
-
-``--fp`` (r08) probes the Bloom FP-degradation COST curve: fresh
-arrivals under deliberately exceeded bits/gram budgets (10 / 2 / 0.5),
-recording verify-set fraction, row-group reads and per-batch wall.
+``--steady-state`` (r10, n_docs, n_batches) and ``--auto-compact`` (r09,
+n_sessions, n_batch): see their functions below.
 """
 
 from __future__ import annotations
@@ -54,70 +43,6 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.strea
     substring as SB,
 )
 from scripts.semdedup_probe import boilerplate_docs  # noqa: E402
-
-
-def _state_op(query) -> dict:
-    """State-operator metrics of the last completed micro-batch."""
-    prog = query.lastProgress or {}
-    ops = prog.get("stateOperators") or []
-    return ops[0] if ops else {}
-
-
-def _tiered_main(n_seed: int, n_batch: int) -> None:
-    """Tiered-form probe: per-batch wall + state size at 3 corpus sizes."""
-    spark = get_spark(app_name="substring-stream-probe-tiered")
-    results: dict = {"form": "tiered", "n_seed": n_seed, "n_batch": n_batch}
-    sizes = [n_seed // 3, 2 * n_seed // 3, n_seed]
-    # Three DISTINCT probe batches (one per corpus size): a re-used batch
-    # would find its own grams already registered the second time.
-    all_docs = boilerplate_docs(spark, n_seed + 3 * n_batch).cache()
-    all_docs.count()
-    schema = "doc_id long, text string"
-
-    tmp = tempfile.mkdtemp(prefix="substr_probe_tiered_")
-    try:
-        src = f"{tmp}/src"
-        gram_d, s_d, ckpt = f"{tmp}/grams", f"{tmp}/stats", f"{tmp}/ckpt"
-        steps = []
-        prev = 0
-        for i, sz in enumerate(sizes):
-            all_docs.filter(
-                f"doc_id >= {prev} AND doc_id < {sz}"
-            ).write.mode("append").parquet(src)
-            prev = sz
-            q = SB.tiered_substring_stream(
-                spark, src, schema, gram_d, s_d, ckpt, n=8
-            )
-            q.awaitTermination()  # seed session for this increment
-            lo = n_seed + i * n_batch
-            all_docs.filter(
-                f"doc_id >= {lo} AND doc_id < {lo + n_batch}"
-            ).write.mode("append").parquet(src)
-            t0 = time.time()
-            q = SB.tiered_substring_stream(
-                spark, src, schema, gram_d, s_d, ckpt, n=8
-            )
-            q.awaitTermination()  # fresh session: state = batch-novel only
-            wall = round(time.time() - t0, 2)
-            op = _state_op(q)
-            steps.append(
-                {
-                    "corpus_docs": sz + i * n_batch,
-                    "store_grams": spark.read.parquet(gram_d).count(),
-                    "batch_sec": wall,
-                    "state_rows": op.get("numRowsTotal"),
-                    "state_bytes": op.get("memoryUsedBytes"),
-                }
-            )
-        results["steps"] = steps
-        flagged = (
-            spark.read.parquet(s_d).filter("n_dup_grams > 0").count()
-        )
-        results["flagged"] = flagged
-        results["expected_flagged"] = (n_seed + 3 * n_batch) // 10
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps(results))
 
 
 def _bloom_main(n_seed: int, n_batch: int) -> None:
@@ -393,153 +318,6 @@ def _fp_main(n_seed: int, n_batch: int) -> None:
     print(json.dumps(results))
 
 
-def _crossover_main(n_seed: int, n_batch: int) -> None:
-    """Keyed vs tiered vs bloom at LARGE corpora (VERDICT r06 next-round
-    #5): the keyed form was still ~1.5x faster on wall at ~1M docs
-    despite its corpus-linear per-batch Arrow state transfer; this probe
-    measures all three forms' arrival-batch wall at n_seed/2 and n_seed
-    docs (cumulative seeding, fresh session per arrival, own store/
-    checkpoint per form) to record where the bounded forms win outright.
-    Run: ``python scripts/substring_stream_probe.py 4000000 100000
-    --crossover``."""
-    spark = get_spark(app_name="substring-stream-probe-crossover")
-    results: dict = {
-        "form": "crossover", "n_seed": n_seed, "n_batch": n_batch,
-    }
-    sizes = [n_seed // 2, n_seed]
-    all_docs = boilerplate_docs(spark, n_seed + 2 * n_batch).cache()
-    all_docs.count()
-    schema = "doc_id long, text string"
-
-    def run(form: str, tmp: str, lo_probe: int) -> dict:
-        src = f"{tmp}/{form}/src"
-        gram_d = f"{tmp}/{form}/grams"
-        s_d, ckpt = f"{tmp}/{form}/stats", f"{tmp}/{form}/ckpt"
-        t0 = time.time()
-        if form == "keyed":
-            q = SB.keyed_substring_stream(spark, src, schema, s_d, ckpt, n=8)
-        elif form == "tiered":
-            q = SB.tiered_substring_stream(
-                spark, src, schema, gram_d, s_d, ckpt, n=8
-            )
-        else:
-            q = SB.bloom_substring_stream(
-                spark, src, schema, gram_d, s_d, ckpt, n=8
-            )
-        q.awaitTermination()
-        step = {"session_sec": round(time.time() - t0, 2)}
-        op = _state_op(q)
-        if op:
-            step["state_bytes"] = op.get("memoryUsedBytes")
-        return step
-
-    steps = []
-    prev = 0
-    tmp = tempfile.mkdtemp(prefix="substr_probe_xover_")
-    try:
-        for i, sz in enumerate(sizes):
-            inc = all_docs.filter(f"doc_id >= {prev} AND doc_id < {sz}")
-            for form in ("keyed", "tiered", "bloom"):
-                inc.write.mode("append").parquet(f"{tmp}/{form}/src")
-            prev = sz
-            for form in ("keyed", "tiered", "bloom"):
-                run(form, tmp, 0)  # seed session for this increment
-            lo = n_seed + i * n_batch
-            probe = all_docs.filter(
-                f"doc_id >= {lo} AND doc_id < {lo + n_batch}"
-            )
-            entry = {"corpus_docs": sz + i * n_batch}
-            for form in ("keyed", "tiered", "bloom"):
-                probe.write.mode("append").parquet(f"{tmp}/{form}/src")
-                entry[form] = run(form, tmp, lo)
-            steps.append(entry)
-        results["steps"] = steps
-        flagged = {
-            form: spark.read.parquet(f"{tmp}/{form}/stats")
-            .filter("n_dup_grams > 0")
-            .count()
-            for form in ("keyed", "tiered", "bloom")
-        }
-        results["flagged"] = flagged
-        results["expected_flagged"] = (n_seed + 2 * n_batch) // 10
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps(results))
-
-
-def _count_files(path: str) -> int:
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
-
-
-def _compaction_main(n_seed: int, n_batch: int, n_epochs: int = 16) -> None:
-    """Store-scan form: arrival-batch cost before/after compact_store.
-
-    Seeds the gram store across ``n_epochs`` micro-batches (one source
-    file each -> one epoch dir each, 64 bucket files per epoch — the
-    long-running-stream shape), measures one n_batch arrival, compacts
-    (fold + sort by gk), measures a second equal arrival.  Records the
-    file-count and batch-wall deltas — the compaction lever's value,
-    measured instead of assumed (VERDICT r04 #5 / r05 #7)."""
-    spark = get_spark(app_name="substring-stream-probe-compaction")
-    results: dict = {
-        "form": "store_compaction",
-        "n_seed": n_seed,
-        "n_batch": n_batch,
-        "n_epochs": n_epochs,
-    }
-    all_docs = boilerplate_docs(spark, n_seed + 2 * n_batch).cache()
-    all_docs.count()
-    schema = "doc_id long, text string"
-    tmp = tempfile.mkdtemp(prefix="substr_probe_compact_")
-    try:
-        src = f"{tmp}/src"
-        gram_d, s_d, ckpt = f"{tmp}/grams", f"{tmp}/stats", f"{tmp}/ckpt"
-        per = n_seed // n_epochs
-        for i in range(n_epochs):
-            all_docs.filter(
-                f"doc_id >= {i * per} AND doc_id < {(i + 1) * per}"
-            ).coalesce(1).write.mode("append").parquet(src)
-        q = SB.substring_stream(
-            spark, src, schema, gram_d, s_d, ckpt,
-            n=8, max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-        results["files_before"] = _count_files(gram_d)
-
-        def arrival(lo: int) -> float:
-            all_docs.filter(
-                f"doc_id >= {lo} AND doc_id < {lo + n_batch}"
-            ).write.mode("append").parquet(src)
-            t0 = time.time()
-            qq = SB.substring_stream(
-                spark, src, schema, gram_d, s_d, ckpt, n=8
-            )
-            qq.awaitTermination()
-            return round(time.time() - t0, 2)
-
-        results["batch_sec_before"] = arrival(n_seed)
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (  # noqa: E501
-            stores,
-        )
-
-        t0 = time.time()
-        results["compact"] = stores.compact_store(
-            spark, gram_d, "bucket", sort_cols=["gk"]
-        )
-        results["compact_sec"] = round(time.time() - t0, 2)
-        results["files_after"] = _count_files(gram_d)
-        results["batch_sec_after"] = arrival(n_seed + n_batch)
-        flagged = spark.read.parquet(s_d).filter("n_dup_grams > 0").count()
-        results["flagged"] = flagged
-        results["expected_flagged"] = (n_seed + 2 * n_batch) // 10
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps(results))
-
-
 def _steady_state_main(n_docs: int, n_batches: int) -> None:
     """STEADY-STATE many-batch session probe (r10, VERDICT r9 next-round
     #8): every recorded bloom number so far is one-arrival-per-session,
@@ -702,86 +480,42 @@ def _auto_compact_main(n_sessions: int, n_batch: int) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
     print(json.dumps(results))
 
+# mode flag -> (probe, default N1, default N2)
+MODES = {
+    "--bloom": (_bloom_main, 900_000, 100_000),
+    "--artifacts": (_artifacts_main, 900_000, 100_000),
+    "--fp": (_fp_main, 900_000, 100_000),
+    "--steady-state": (_steady_state_main, 1_200_000, 12),
+    "--auto-compact": (_auto_compact_main, 8, 30_000),
+}
+USAGE = (
+    "usage: python scripts/substring_stream_probe.py"
+    f" {{{'|'.join(MODES)}}} [N1] [N2]  (integers >= 1)"
+)
+
+
+def parse_args(argv: list[str]):
+    """``(probe, N1, N2)`` from the command line; exits non-zero with the
+    usage line before any Spark start when the arguments are bad."""
+    flags = [a for a in argv if a.startswith("--")]
+    nums = [a for a in argv if not a.startswith("--")]
+    if len(flags) != 1 or flags[0] not in MODES:
+        sys.exit(f"{USAGE}\nerror: give exactly one known mode flag")
+    if len(nums) > 2:
+        sys.exit(f"{USAGE}\nerror: at most two numbers")
+    probe, *defaults = MODES[flags[0]]
+    try:
+        n1, n2 = [int(a) for a in nums] + defaults[len(nums):]
+    except ValueError:
+        sys.exit(f"{USAGE}\nerror: N1 and N2 must be integers")
+    if n1 < 1 or n2 < 1:
+        sys.exit(f"{USAGE}\nerror: N1 and N2 must be >= 1")
+    return probe, n1, n2
+
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    n_seed = int(args[0]) if len(args) > 0 else 900_000
-    n_batch = int(args[1]) if len(args) > 1 else 100_000
-    if "--tiered" in sys.argv[1:]:
-        _tiered_main(n_seed, n_batch)
-        return
-    if "--bloom" in sys.argv[1:]:
-        _bloom_main(n_seed, n_batch)
-        return
-    if "--artifacts" in sys.argv[1:]:
-        _artifacts_main(n_seed, n_batch)
-        return
-    if "--fp" in sys.argv[1:]:
-        _fp_main(n_seed, n_batch)
-        return
-    if "--crossover" in sys.argv[1:]:
-        _crossover_main(n_seed, n_batch)
-        return
-    if "--compaction" in sys.argv[1:]:
-        _compaction_main(n_seed, n_batch)
-        return
-    if "--auto-compact" in sys.argv[1:]:
-        _auto_compact_main(n_seed if len(args) > 0 else 8,
-                           n_batch if len(args) > 1 else 30_000)
-        return
-    if "--steady-state" in sys.argv[1:]:
-        _steady_state_main(n_seed if len(args) > 0 else 1_200_000,
-                           n_batch if len(args) > 1 else 12)
-        return
-    spark = get_spark(app_name="substring-stream-probe")
-    results: dict = {"n_seed": n_seed, "n_batch": n_batch}
-
-    all_docs = boilerplate_docs(spark, n_seed + n_batch).cache()
-    all_docs.count()
-    seed = all_docs.filter(f"doc_id < {n_seed}")
-    batch = all_docs.filter(f"doc_id >= {n_seed}")
-
-    tmp = tempfile.mkdtemp(prefix="substr_probe_")
-    try:
-        # --- parquet-store form -----------------------------------------
-        gram_d, s_d = f"{tmp}/grams", f"{tmp}/stats"
-        t0 = time.time()
-        SB.detect_and_register(seed, gram_d, s_d, n=8, epoch_id=0)
-        results["store_seed_sec"] = round(time.time() - t0, 2)
-        t0 = time.time()
-        SB.detect_and_register(batch, gram_d, s_d, n=8, epoch_id=1)
-        results["store_batch_sec"] = round(time.time() - t0, 2)
-
-        # --- keyed-state form -------------------------------------------
-        src1, src2 = f"{tmp}/src", f"{tmp}/src2"
-        ks_d, ckpt = f"{tmp}/kstats", f"{tmp}/kckpt"
-        seed.write.parquet(src1)
-        t0 = time.time()
-        q = SB.keyed_substring_stream(
-            spark, src1, "doc_id long, text string", ks_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        results["keyed_seed_sec"] = round(time.time() - t0, 2)
-        batch.write.mode("append").parquet(src1)
-        t0 = time.time()
-        q = SB.keyed_substring_stream(
-            spark, src1, "doc_id long, text string", ks_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        results["keyed_batch_sec"] = round(time.time() - t0, 2)
-        op = _state_op(q)
-        results["keyed_state_rows"] = op.get("numRowsTotal")
-        results["keyed_state_bytes"] = op.get("memoryUsedBytes")
-
-        # correctness cross-check: both forms flag the same planted docs
-        sf = spark.read.parquet(s_d)
-        kf = spark.read.parquet(ks_d)
-        results["store_flagged"] = sf.filter("n_dup_grams > 0").count()
-        results["keyed_flagged"] = kf.filter("n_dup_grams > 0").count()
-        del src2
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps(results))
+    probe, n1, n2 = parse_args(sys.argv[1:])
+    probe(n1, n2)
 
 
 if __name__ == "__main__":

@@ -799,80 +799,6 @@ class TestStreamingSubstring:
         assert got[3] >= 1 and got[4] >= 1  # shared "a b c d e f g h"
 
 
-def test_substring_stream_kill_resume_exactly_once(spark, tmp_path):
-    """Kill a real substring_stream mid-ingest — AFTER a batch's state
-    writes but BEFORE its checkpoint commit (the at-least-once window) —
-    then resume from the checkpoint (VERDICT r03 #5).  The resumed run
-    must replay the killed epoch idempotently and drain the rest; the
-    final per-doc stats must be EXACTLY the uninterrupted single-batch
-    result: every doc exactly once, equal to the batch operator's answer
-    over the same arrival order."""
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-        substring as SB,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    span = "alpha beta gamma delta epsilon zeta eta theta"
-    # Four files -> four micro-batches (maxFilesPerTrigger=1).  Cross-file
-    # duplication: docs 30 and 40 repeat file 1's span, so their flags
-    # depend on the gram STORE surviving the crash.
-    files = [
-        [(10, f"{span} one"), (11, "totally unique words here only")],
-        [(20, "all fresh vocabulary nothing shared at all")],
-        [(30, f"prefix {span} suffix")],
-        [(40, f"{span} again repeated")],
-    ]
-    for i, rows in enumerate(files):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    gram_d = str(tmp_path / "grams")
-    stats_d = str(tmp_path / "stats")
-    ckpt = str(tmp_path / "ckpt")
-
-    # Run 1: crash after epoch 1's writes (state written, commit lost).
-    def crash_on_1(epoch_id: int) -> None:
-        if epoch_id == 1:
-            raise RuntimeError("injected crash after epoch-1 writes")
-
-    q = SB.substring_stream(
-        spark, src, schema, gram_d, stats_d, ckpt,
-        max_files_per_trigger=1, on_batch=crash_on_1,
-    )
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination()
-    # the crash landed mid-ingest: some but not all docs processed
-    done = {r["doc_id"] for r in spark.read.parquet(stats_d).collect()}
-    assert {10, 11} <= done and 40 not in done
-
-    # Run 2: resume from the same checkpoint — replays epoch 1, drains.
-    q = SB.substring_stream(
-        spark, src, schema, gram_d, stats_d, ckpt, max_files_per_trigger=1
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(stats_d).collect()
-    by_doc = {}
-    for r in got:
-        assert r["doc_id"] not in by_doc, f"doc {r['doc_id']} duplicated"
-        by_doc[r["doc_id"]] = r
-    assert set(by_doc) == {10, 11, 20, 30, 40}
-    # store-dependent flags are correct across the crash: 30 and 40 carry
-    # file-1's 8-gram, 40 also matches 30's registration of it.
-    assert by_doc[10]["n_dup_grams"] == 0
-    assert by_doc[30]["n_dup_grams"] == 1
-    assert by_doc[40]["n_dup_grams"] == 1
-    # gram store stayed distinct (no replay double-registration): every
-    # gk appears exactly once across all epochs.
-    grams = spark.read.parquet(gram_d)
-    assert grams.count() == grams.select("gk").distinct().count()
-
-
 def test_compact_store_preserves_content_and_replay_safety(spark, tmp_path):
     """Maintenance compaction (streaming/stores.compact_store): folds all
     committed epoch dirs into one consolidated epoch = max-1 directory —
@@ -946,85 +872,6 @@ def test_compact_store_preserves_content_and_replay_safety(spark, tmp_path):
     got = {r["doc_id"]: r["n_dup_grams"]
            for r in spark.read.parquet(stats_d).collect()}
     assert got[9] == 1  # epoch-0 gram found via the compacted dir
-
-
-def test_substring_stream_inline_compaction(spark, tmp_path):
-    """``substring_stream(compact_every=2)`` folds the gram store from
-    inside foreachBatch.  Stats must equal the non-compacting twin over
-    the same arrivals, the store must end consolidated, and a crash
-    injected right AFTER a compacting epoch (state written + folded,
-    checkpoint commit lost) must replay exactly-once — the
-    register -> compact -> commit sequence is idempotent end to end."""
-    import glob
-
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-        substring as SB,
-    )
-
-    schema = "doc_id long, text string"
-    span = "alpha beta gamma delta epsilon zeta eta theta"
-    files = [
-        [(10, f"{span} one"), (11, "totally unique words here only")],
-        [(20, "all fresh vocabulary nothing shared at all")],
-        [(30, f"prefix {span} suffix")],
-        [(40, f"{span} again repeated")],
-        [(50, "closing batch of wholly new words never seen before now")],
-    ]
-
-    def run(root, on_batch=None, compact_every=None, resume=False):
-        src = str(root / "src")
-        if not resume:
-            os.makedirs(src)
-            for rows in files:
-                spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-        q = SB.substring_stream(
-            spark, src, schema, str(root / "g"), str(root / "s"),
-            str(root / "ckpt"), max_files_per_trigger=1,
-            on_batch=on_batch, compact_every=compact_every,
-        )
-        return q
-
-    # Twin A: plain run.
-    plain = tmp_path / "plain"
-    os.makedirs(plain)
-    run(plain).awaitTermination()
-    want = sorted(
-        map(tuple, spark.read.parquet(str(plain / "s")).collect())
-    )
-
-    # Twin B: compacting run with a crash after epoch 2 (a compacting
-    # epoch: 2 % 2 == 0, so the fold ran before the injected death).
-    comp = tmp_path / "comp"
-    os.makedirs(comp)
-
-    def crash_on_2(epoch_id: int) -> None:
-        if epoch_id == 2:
-            raise RuntimeError("injected crash after epoch-2 compaction")
-
-    q = run(comp, on_batch=crash_on_2, compact_every=2)
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination()
-    run(comp, compact_every=2, resume=True).awaitTermination()
-
-    got = sorted(map(tuple, spark.read.parquet(str(comp / "s")).collect()))
-    assert got == want
-    # store content identical to the plain twin, no replay duplicates
-    g_plain = {
-        (r["gk"], r["bucket"])
-        for r in spark.read.parquet(str(plain / "g")).collect()
-    }
-    g_comp_df = spark.read.parquet(str(comp / "g"))
-    assert {(r["gk"], r["bucket"]) for r in g_comp_df.collect()} == g_plain
-    assert g_comp_df.count() == g_comp_df.select("gk").distinct().count()
-    # compaction actually consolidated: committed history sits in at most
-    # one folded dir + the epochs after the last fold (4 on resume).
-    assert len(glob.glob(str(comp / "g" / "epoch=*"))) < len(
-        glob.glob(str(plain / "g" / "epoch=*"))
-    )
 
 
 def test_compact_store_recovers_interrupted_swap(spark, tmp_path):
@@ -1146,69 +993,6 @@ def test_compact_store_single_epoch_noop_and_flat_raises(spark, tmp_path):
         ST.compact_store(spark, flat_d, "bucket")
 
 
-class TestKeyedSubstring:
-    def test_single_batch_equals_batch_operator(self, spark, sf_dir, tmp_path):
-        """One availableNow drain over the corpus == ngram_dup_stats
-        (same window universe, df>=2 rule, column contract) — the keyed
-        state store changes the probe mechanics, never the answer."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
-            dedup as D,
-        )
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
-            load_table,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        src = str(tmp_path / "src")
-        docs.select("doc_id", "text").write.parquet(src)
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-        q = SB.keyed_substring_stream(
-            spark, src, "doc_id long, text string", stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        got = sorted(map(tuple, spark.read.parquet(stats_d).drop("epoch").collect()))
-        want = sorted(map(tuple, D.ngram_dup_stats(docs, n=8).collect()))
-        assert got == want
-
-    def test_cross_batch_flags_via_keyed_state(self, spark, tmp_path):
-        """A later batch repeating an accepted doc's 8-gram is flagged
-        from the CHECKPOINTED keyed state across a stream restart."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "one two three four five six seven eight"
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-
-        spark.createDataFrame(
-            [(1, f"{span} tail-a"), (2, "short")], schema
-        ).write.mode("append").parquet(src)
-        q = SB.keyed_substring_stream(spark, src, schema, stats_d, ckpt, n=8)
-        q.awaitTermination()
-
-        spark.createDataFrame(
-            [(3, f"prefix {span} suffix"), (4, "also tiny")], schema
-        ).write.mode("append").parquet(src)
-        q = SB.keyed_substring_stream(spark, src, schema, stats_d, ckpt, n=8)
-        q.awaitTermination()
-
-        got = {
-            r["doc_id"]: r for r in spark.read.parquet(stats_d).collect()
-        }
-        assert set(got) == {1, 2, 3, 4}
-        assert got[1]["n_dup_grams"] == 0   # first carrier saw nothing
-        assert got[3]["n_dup_grams"] == 1   # flagged via keyed state
-        # zero-gram docs pass through the NULL-key sentinel with zeros
-        assert got[2]["n_grams"] == 0 and got[2]["n_dup_grams"] == 0
-        assert got[4]["dup_gram_ppm"] == 0
-
-
 def test_compact_store_on_band_and_vector_stores(spark, tmp_path):
     """compact_store is layout-generic: the MinHash band store (partition
     col `band`) and the semantic vector store (`cluster_id`) fold the
@@ -1278,285 +1062,6 @@ def test_compact_store_on_band_and_vector_stores(spark, tmp_path):
         for r in spark.read.parquet(matches).collect()
     }
     assert (12, 10) in got  # matched via the folded vector history
-
-
-def test_keyed_substring_stream_kill_resume_exactly_once(spark, tmp_path):
-    """Kill the KEYED stream after a batch's stats write but before its
-    checkpoint commit: on resume the state store restores the pre-batch
-    version (state updates commit WITH the epoch), the killed epoch
-    replays against identical state, and the epoch-keyed stats overwrite
-    makes the output exactly-once — the 'replay idempotence from state
-    versioning' claim, proven rather than asserted."""
-    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-        substring as SB,
-    )
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    span = "alpha beta gamma delta epsilon zeta eta theta"
-    files = [
-        [(10, f"{span} one")],
-        [(20, f"prefix {span} suffix")],     # dup via keyed state
-        [(30, f"{span} once more")],         # dup via keyed state
-    ]
-    for rows in files:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-
-    def crash_on_1(epoch_id: int) -> None:
-        if epoch_id == 1:
-            raise RuntimeError("injected crash after epoch-1 stats write")
-
-    q = SB.keyed_substring_stream(
-        spark, src, schema, stats_d, ckpt,
-        n=8, max_files_per_trigger=1, on_batch=crash_on_1,
-    )
-    with pytest.raises(Exception, match="injected crash"):
-        q.awaitTermination()
-    partial = {r["doc_id"] for r in spark.read.parquet(stats_d).collect()}
-    assert 10 in partial and 30 not in partial
-
-    q = SB.keyed_substring_stream(
-        spark, src, schema, stats_d, ckpt, n=8, max_files_per_trigger=1
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(stats_d).collect()
-    by_doc = {}
-    for r in got:
-        assert r["doc_id"] not in by_doc, f"doc {r['doc_id']} duplicated"
-        by_doc[r["doc_id"]] = r
-    assert set(by_doc) == {10, 20, 30}
-    assert by_doc[10]["n_dup_grams"] == 0
-    # the replayed epoch saw the RESTORED state (gram not double-marked),
-    # and later epochs see the state including the replayed epoch
-    assert by_doc[20]["n_dup_grams"] == 1
-    assert by_doc[30]["n_dup_grams"] == 1
-
-
-class TestTieredSubstring:
-    """The LSM-tiered stream (streaming/substring.tiered_substring_stream):
-    committed parquet history probed JVM-side + session-bounded keyed
-    delta state."""
-
-    def test_single_batch_equals_batch_operator(self, spark, sf_dir, tmp_path):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
-            dedup as D,
-        )
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        src = str(tmp_path / "src")
-        docs.select("doc_id", "text").write.parquet(src)
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-        q = SB.tiered_substring_stream(
-            spark, src, "doc_id long, text string", gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        got = sorted(
-            map(tuple, spark.read.parquet(stats_d).drop("epoch").collect())
-        )
-        want = sorted(map(tuple, D.ngram_dup_stats(docs, n=8).collect()))
-        assert got == want
-
-    def test_cross_session_flags_via_history_and_state_purge(
-        self, spark, tmp_path
-    ):
-        """Session 2 flags a session-1 gram via the HISTORY snapshot (the
-        keyed state from session 1 was purged by the marker advance), and
-        the gram store stays one-row-per-distinct-gram."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "one two three four five six seven eight"
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-
-        spark.createDataFrame(
-            [(1, f"{span} tail-a"), (2, "short")], schema
-        ).write.mode("append").parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-
-        spark.createDataFrame(
-            [(3, f"prefix {span} suffix"), (4, "also tiny")], schema
-        ).write.mode("append").parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-
-        got = {r["doc_id"]: r for r in spark.read.parquet(stats_d).collect()}
-        assert set(got) == {1, 2, 3, 4}
-        assert got[1]["n_dup_grams"] == 0
-        assert got[3]["n_dup_grams"] == 1  # via history snapshot
-        assert got[2]["n_grams"] == 0 and got[2]["n_dup_grams"] == 0
-        assert got[4]["dup_gram_ppm"] == 0
-        # store distinctness under cross-session registration
-        grams = spark.read.parquet(gram_d).select("gk").collect()
-        assert len(grams) == len({r["gk"] for r in grams})
-
-    def test_kill_resume_exactly_once(self, spark, tmp_path):
-        """Crash after a batch's stats+store writes but before its commit:
-        replay sees the pre-batch state AND a snapshot that excludes the
-        crashed epoch's registrations, so flags and the store's content
-        come out exactly-once."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "alpha beta gamma delta epsilon zeta eta theta"
-        for rows in [
-            [(10, f"{span} one")],
-            [(20, f"prefix {span} suffix")],
-            [(30, f"{span} once more")],
-        ]:
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-
-        def crash_on_1(epoch_id: int) -> None:
-            if epoch_id == 1:
-                raise RuntimeError("injected crash after epoch-1 writes")
-
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt,
-            n=8, max_files_per_trigger=1, on_batch=crash_on_1,
-        )
-        with pytest.raises(Exception, match="injected crash"):
-            q.awaitTermination()
-
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt,
-            n=8, max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-        by_doc = {}
-        for r in spark.read.parquet(stats_d).collect():
-            assert r["doc_id"] not in by_doc, f"doc {r['doc_id']} duplicated"
-            by_doc[r["doc_id"]] = r
-        assert set(by_doc) == {10, 20, 30}
-        assert by_doc[10]["n_dup_grams"] == 0
-        assert by_doc[20]["n_dup_grams"] == 1
-        assert by_doc[30]["n_dup_grams"] == 1
-        # store stayed distinct through the replayed registration
-        grams = spark.read.parquet(gram_d).select("gk").collect()
-        assert len(grams) == len({r["gk"] for r in grams})
-
-    def test_state_rows_bounded_by_session_not_corpus(self, spark, tmp_path):
-        """The boundedness claim itself: a second session re-processing
-        only NEW docs whose grams are all in history keeps ZERO rows in
-        keyed state (all membership answered by the snapshot)."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "red orange yellow green blue indigo violet ultraviolet"
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-
-        spark.createDataFrame([(1, span)], schema).write.mode(
-            "append"
-        ).parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        p1 = q.lastProgress["stateOperators"][0]
-        assert p1["numRowsTotal"] >= 1  # session 1 holds its novel gram
-
-        # session 2: same span in a new doc — history answers, state purged
-        spark.createDataFrame([(2, span)], schema).write.mode(
-            "append"
-        ).parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        got = {r["doc_id"]: r for r in spark.read.parquet(stats_d).collect()}
-        assert got[2]["n_dup_grams"] == 1
-        p2 = q.lastProgress["stateOperators"][0]
-        # the purge dropped session 1's row and nothing fresh was added
-        assert p2["numRowsUpdated"] >= 1  # the purge rewrite itself
-        assert p2["numRowsTotal"] <= p1["numRowsTotal"]
-
-    def test_missing_store_behind_checkpoint_refuses(self, spark, tmp_path):
-        """Deleting the gram store while keeping the checkpoint must be a
-        LOUD failure — continuing would silently forget corpus history."""
-        import shutil as _sh
-
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "uno dos tres cuatro cinco seis siete ocho"
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-        spark.createDataFrame([(1, span)], schema).write.mode(
-            "append"
-        ).parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        _sh.rmtree(gram_d)
-        spark.createDataFrame([(2, span)], schema).write.mode(
-            "append"
-        ).parquet(src)
-        with pytest.raises(ValueError, match="store.*missing"):
-            SB.tiered_substring_stream(
-                spark, src, schema, gram_d, stats_d, ckpt, n=8
-            )
-
-    def test_fresh_checkpoint_against_existing_store_refuses(
-        self, spark, tmp_path
-    ):
-        """A brand-new checkpoint pointed at a store with history would
-        overwrite epoch=0 registrations — refuse before starting."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
-            substring as SB,
-        )
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        schema = "doc_id long, text string"
-        span = "eins zwei drei vier fuenf sechs sieben acht"
-        gram_d = str(tmp_path / "grams")
-        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
-        spark.createDataFrame([(1, span)], schema).write.mode(
-            "append"
-        ).parquet(src)
-        q = SB.tiered_substring_stream(
-            spark, src, schema, gram_d, stats_d, ckpt, n=8
-        )
-        q.awaitTermination()
-        with pytest.raises(ValueError, match="brand new"):
-            SB.tiered_substring_stream(
-                spark, src, schema, gram_d,
-                str(tmp_path / "stats2"), str(tmp_path / "ckpt2"), n=8
-            )
 
 
 class TestBloomSubstring:
@@ -1805,9 +1310,10 @@ class TestBloomSubstring:
         assert by_doc == {10: 0, 20: 0, 30: 1, 40: 1}
 
     def test_guards_shared_with_history_forms(self, spark, tmp_path):
-        """Missing store behind a marked checkpoint and a brand-new
-        checkpoint against a store with history both refuse loudly
-        (shared _session_history_guards)."""
+        """Every refusal of _session_history_guards is loud: a brand-new
+        checkpoint against a store with history, store epochs ahead of
+        what the checkpoint committed, a missing store behind a marked
+        checkpoint, and a gram store written flat."""
         import shutil as _sh
 
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
@@ -1832,6 +1338,17 @@ class TestBloomSubstring:
                 spark, src, schema, gram_d,
                 str(tmp_path / "stats2"), str(tmp_path / "ckpt2"), n=8
             )
+        # another writer registered epoch 5; the checkpoint committed 0
+        SB.detect_and_register(
+            spark.createDataFrame(
+                [(9, "one two three four five six seven eight")], schema
+            ),
+            gram_d, str(tmp_path / "stats_other"), n=8, epoch_id=5,
+        )
+        with pytest.raises(ValueError, match="different streams"):
+            SB.bloom_substring_stream(
+                spark, src, schema, gram_d, stats_d, ckpt, n=8
+            )
         _sh.rmtree(gram_d)
         spark.createDataFrame([(2, span)], schema).write.mode(
             "append"
@@ -1840,6 +1357,52 @@ class TestBloomSubstring:
             SB.bloom_substring_stream(
                 spark, src, schema, gram_d, stats_d, ckpt, n=8
             )
+        flat_d = str(tmp_path / "flat_grams")
+        SB.detect_and_register(  # no epoch_id -> flat layout
+            spark.createDataFrame([(1, span)], schema),
+            flat_d, str(tmp_path / "flat_stats"), n=8,
+        )
+        with pytest.raises(ValueError, match="written flat"):
+            SB.bloom_substring_stream(
+                spark, src, schema, flat_d,
+                str(tmp_path / "stats3"), str(tmp_path / "ckpt3"), n=8
+            )
+
+    def test_resume_with_another_shingle_width_refuses(self, spark, tmp_path):
+        """The shingle width decides which grams exist: a session resumed
+        with another ``n`` would probe the history for grams it never
+        registered and report no duplicates, so it must refuse.  The
+        refused session starts nothing; resuming with the pinned ``n``
+        flags every gram of an exact copy."""
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+            substring as SB,
+        )
+
+        src = str(tmp_path / "src")
+        os.makedirs(src)
+        schema = "doc_id long, text string"
+        text = "one two three four five six seven eight nine ten"
+        gram_d = str(tmp_path / "grams")
+        stats_d, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt")
+        spark.createDataFrame([(1, text)], schema).write.mode(
+            "append"
+        ).parquet(src)
+        SB.bloom_substring_stream(
+            spark, src, schema, gram_d, stats_d, ckpt, n=8
+        ).awaitTermination()
+        spark.createDataFrame([(2, text)], schema).write.mode(
+            "append"
+        ).parquet(src)
+        with pytest.raises(ValueError, match="n=5"):
+            SB.bloom_substring_stream(
+                spark, src, schema, gram_d, stats_d, ckpt, n=5
+            )
+        SB.bloom_substring_stream(
+            spark, src, schema, gram_d, stats_d, ckpt, n=8
+        ).awaitTermination()
+        got = {r["doc_id"]: r for r in spark.read.parquet(stats_d).collect()}
+        assert got[1]["n_dup_grams"] == 0
+        assert got[2]["n_grams"] == 3 and got[2]["n_dup_grams"] == 3
 
     def test_inline_compaction_folds_history_and_stays_exact(
         self, spark, sf_dir, tmp_path
@@ -1916,6 +1479,47 @@ class TestBloomSubstring:
             "crash", compact_every=2, crash_epoch=2
         )
         assert crash_rows == plain_rows
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        [],
+        ["--tiered"],
+        ["--bloom", "--fp"],
+        ["--bloom", "0"],
+        ["--fp", "10", "0"],
+        ["--steady-state", "-3"],
+        ["--bloom", "many"],
+        ["--bloom", "1", "2", "3"],
+    ],
+)
+def test_substring_probe_cli_rejects_bad_args(argv, monkeypatch):
+    """The probe CLI checks its mode flag and sizes before any Spark
+    session starts: a missing or unknown mode, or a size below 1, exits
+    non-zero (a string exit code) with the usage line."""
+    import sys
+
+    from scripts import substring_stream_probe as probe
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark started before the arguments were checked")
+
+    monkeypatch.setattr(probe, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["substring_stream_probe.py", *argv])
+    with pytest.raises(SystemExit) as exc:
+        probe.main()
+    assert isinstance(exc.value.code, str)
+    assert exc.value.code.startswith("usage: ")
+
+
+def test_substring_probe_cli_defaults():
+    from scripts import substring_stream_probe as probe
+
+    assert probe.parse_args(["--fp"]) == (probe._fp_main, 900_000, 100_000)
+    assert probe.parse_args(["3", "--auto-compact"]) == (
+        probe._auto_compact_main, 3, 30_000,
+    )
 
 
 class TestBloomArtifacts:
