@@ -20,9 +20,6 @@ the DuckDB oracle can mirror every expression.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -36,7 +33,6 @@ __all__ = [
     "neg_inner_product",
     "vector_to_literal",
     "dim_check",
-    "pandas_distance_udf",
 ]
 
 
@@ -104,39 +100,3 @@ def dim_check(a: Column | str, dim: int) -> Column:
     (DDL README.md:155-158).  Enforce at write with a filter or
     ``CASE WHEN NOT dim_check THEN raise_error() END``."""
     return F.size(_col(a)) == F.lit(dim)
-
-
-def pandas_distance_udf(metric: str, probe: list[float]):
-    """NumPy-vectorized distance against a fixed probe, as an Arrow-batched
-    pandas UDF ``array<float> -> double``.
-
-    Measured (scripts/scale_probe.py, local[32]): statistically TIED with
-    the native zip_with/aggregate expression at both dim=64 (1M vectors)
-    and dim=1536 (200k vectors) — Arrow transfer of the vector column costs
-    about what per-element HOF interpretation does, at every width.  So the
-    native expression stays the default (codegen-friendly, oracle-mirrors
-    in SQL, no Python worker), this UDF is the ``impl="pandas"`` alternate
-    (operators/knn.py), and the real order-of-magnitude lever at scale is
-    IVF partition pruning (operators/ann.py), not the scorer.  Numerics
-    differ from native only in summation order (pairwise vs left-to-right),
-    which is why oracle-checked queries never use this path.
-    """
-    q = np.asarray(probe, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _dist(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim) float32
-        m = m.astype(np.float64, copy=False)
-        if metric == "l2":
-            d = np.sqrt(((m - q) ** 2).sum(axis=1))
-        elif metric == "cosine":
-            d = 1.0 - (m @ q) / (
-                np.linalg.norm(m, axis=1) * np.linalg.norm(q)
-            )
-        elif metric == "dot":
-            d = -(m @ q)
-        else:
-            raise ValueError(f"unknown metric {metric!r}")
-        return pd.Series(d)
-
-    return _dist

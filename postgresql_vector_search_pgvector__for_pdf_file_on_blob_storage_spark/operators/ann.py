@@ -42,9 +42,11 @@ __all__ = [
 
 def nearest_centroid_col(centroids, vec_col: str):
     """Column expression: index of the nearest centroid (squared L2) for
-    ``vec_col``, ties to the lowest index — the model-free assignment
-    IVFIndex/IVFPQIndex use for loaded indexes, incremental adds, and
-    the canonical coarse fit.
+    ``vec_col``, ties to the lowest index — the one model-free
+    assignment: IVFIndex/IVFPQIndex use it for loaded indexes,
+    incremental adds, and the canonical coarse fit, and
+    ``semdedup.assign_to_centroids`` (batch and streaming SemDeDup)
+    for frozen centroids.
 
     Two implementations by ``dim * k`` size: native expressions
     (centroids inlined as array literals, whole-stage codegen) below
@@ -363,11 +365,9 @@ class IVFIndex:
         ).mode("append").parquet(f"{path}/items")
 
     def search(
-        self, probe: list[float], k: int = 5, nprobe: int = 2,
-        impl: str = "native",
+        self, probe: list[float], k: int = 5, nprobe: int = 2
     ) -> DataFrame:
-        """Top-k among the ``nprobe`` nearest clusters (exact within them).
-        ``impl="pandas"`` uses the NumPy batch scorer (operators/knn.py)."""
+        """Top-k among the ``nprobe`` nearest clusters (exact within them)."""
         import numpy as np
 
         cents = np.array(self.centroids)
@@ -375,8 +375,7 @@ class IVFIndex:
         clusters = [int(c) for c in np.argsort(d)[:nprobe]]
         cand = self.indexed.filter(F.col("cluster_id").isin(clusters))
         return K.knn(
-            cand, probe, k=k, vec_col=self.vec_col, tie_cols=(self.id_col,),
-            impl=impl,
+            cand, probe, k=k, vec_col=self.vec_col, tie_cols=(self.id_col,)
         ).drop("cluster_id")
 
 

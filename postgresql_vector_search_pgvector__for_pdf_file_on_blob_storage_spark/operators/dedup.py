@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import text as X
-from ..utils import spread
+from ..utils import pin_marker, spread
 
 __all__ = [
     "minhash_band_keys",
@@ -42,7 +42,6 @@ __all__ = [
     "minhash_lsh_pairs",
     "minhash_lsh_pairs_md5",
     "simhash64",
-    "connected_components",
     "connected_components_star",
     "curate_corpus",
     "curate_corpus_v2",
@@ -810,83 +809,6 @@ def simhash64(c: Column | str, n: int = 3) -> Column:
     return _simhash(col)
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    on_max_iter: str = "raise",
-) -> DataFrame:
-    """Cluster near-duplicate pairs into components: ``(node, cluster)``
-    where ``cluster`` is the smallest id reachable from ``node`` — the
-    keep-min-id rule that turns a pair list into dedup groups.
-
-    Iterative min-label propagation: every node starts labeled with
-    itself; each round every node takes the min of its own and its
-    neighbors' labels; stop at fixpoint (checked with a cheap aggregate).
-    Each round is one shuffle keyed by node, so total cost is
-    O(diameter x E/cluster-cores) — the Spark-natural form of the
-    algorithm.  ``localCheckpoint`` truncates lineage each round so plans
-    stay O(1) deep regardless of iteration count.
-
-    If the fixpoint is not reached within ``max_iter`` rounds (a component
-    whose hop diameter exceeds the budget), labels would silently split a
-    dedup group — so ``on_max_iter="raise"`` (default) fails loudly;
-    ``"warn"`` logs and returns the partial labels (ADVICE r01).
-    """
-    if on_max_iter not in ("raise", "warn"):
-        raise ValueError(f"on_max_iter must be 'raise' or 'warn', got {on_max_iter!r}")
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("cluster", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("cluster").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce("nmin", F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.cluster") != F.col("o.cluster"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        msg = (
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — a component's hop "
-            f"diameter exceeds the budget; raise max_iter"
-        )
-        if on_max_iter == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("node"), F.col("cluster"))
-
-
 # Size dispatch for connected_components_star (r12, guide §1.2 — fix the
 # algorithm before the per-task work): an edge set at or below this many
 # rows is collected and contracted with exact min-id union-find on the
@@ -953,11 +875,10 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — same ``(node, cluster)`` contract as
-    :func:`connected_components`, converging in **O(log n)** rounds
-    instead of O(diameter): the scale path for long-chain duplicate
-    graphs (the min-label probe needs ~20 rounds for a 20-hop chain;
-    star contraction collapses it in a handful).
+    Beyond", SoCC'14): ``(node, cluster)`` where ``cluster`` is the
+    smallest id reachable from ``node`` — the keep-min-id rule that turns
+    a pair list into dedup groups.  Converges in **O(log n)** rounds, not
+    O(diameter): a 64-hop chain collapses in a handful of rounds.
 
     Each round is joins + min-aggregations only — no per-node adjacency
     arrays are ever materialized, so a celebrity node with millions of
@@ -970,9 +891,15 @@ def connected_components_star(
       to the group minimum.
 
     Fixpoint = a star forest rooted at each component's minimum id.
-    Equality with the min-label operator is pinned on random graphs in
-    tests; the ``dedup_clusters`` recursive-CTE oracle checks it
-    end-to-end.
+    Both arms (driver union-find and distributed loop) are pinned equal
+    to a pure-Python labelling on random graphs in tests; the
+    ``dedup_clusters`` recursive-CTE oracle checks it end-to-end.
+
+    If the fixpoint is not reached within ``max_iter`` rounds, labels
+    would silently split a dedup group — so ``on_max_iter="raise"``
+    (default) fails loudly; ``"warn"`` warns and returns the partial
+    labels.  Only the distributed loop iterates; the union-find arm
+    ignores ``max_iter``.
 
     ``local_max_edges`` (default: the
     ``spark.graft.components.localMaxEdges`` conf, else
@@ -1724,10 +1651,29 @@ def _curate_corpus_v2_staged(
     subtrees the in-session form already boundaries (gated2, kept,
     pairs, surv); the final DSIR join is the returned result, not a
     stage.  Bit-identity with the in-session form and kill-between-
-    stages resume are pinned in tests/test_dedup.py."""
+    stages resume are pinned in tests/test_dedup.py.
+
+    The scalar parameters that decide the stage tables are pinned to
+    ``staged_root`` (:func:`utils.pin_marker`, marker ``_params=<hash>``):
+    a rerun with other ones raises instead of returning stale stages.
+    The DSIR parameters are not pinned — the final join is recomputed
+    every run — and neither is the input data."""
     from .selection import dsir_select as _dsir_select
 
     spark = docs.sparkSession
+    params = dict(
+        text_col=text_col, id_col=id_col, lang_col=lang_col,
+        min_stops=min_stops, strip_spans=strip_spans, strip_n=strip_n,
+        strip_min_docs=strip_min_docs, use_minhash=use_minhash,
+        jaccard_threshold=jaccard_threshold, max_df=max_df,
+    )
+    pin_marker(
+        spark, staged_root, "params",
+        hashlib.sha1(repr(params).encode()).hexdigest()[:16],
+        "curate_corpus_v2",
+        f"its stage tables were built with other parameters (this call:"
+        f" {params}); use a fresh staged_root",
+    )
     gated2 = _stage_table(
         spark, staged_root, "gated2",
         lambda: curation_v2_gated(docs, text_col, id_col, lang_col, min_stops),

@@ -76,7 +76,6 @@ def knn(
     vec_col: str = "embedding",
     dist_col: str = "dist",
     tie_cols: Sequence[str] = (),
-    impl: str = "native",
 ) -> DataFrame:
     """Top-k rows of ``items`` nearest to a single probe vector.
 
@@ -96,22 +95,6 @@ def knn(
         # (pgvector rejects them at insert; we enforce at query time too.)
         guard = F.col(vec_col).isNotNull() & (
             F.size(F.col(vec_col)) == len(probe)
-        )
-    if impl == "pandas":
-        # NumPy scale path (SURVEY.md §4.3): one matrix op per Arrow batch
-        # instead of interpreted per-element lambdas.  Summation order
-        # differs from the native expression (pairwise vs left-to-right),
-        # so oracle-checked queries stay on impl="native".
-        if isinstance(probe, Column):
-            raise ValueError("impl='pandas' requires a concrete probe vector")
-        pdist = V.pandas_distance_udf(metric, [float(x) for x in probe])
-        order = [F.col(dist_col).asc_nulls_last()]
-        order += [F.col(c).asc() for c in tie_cols]
-        return (
-            items.filter(guard)
-            .withColumn(dist_col, pdist(F.col(vec_col)))
-            .orderBy(*order)
-            .limit(k)
         )
     dist = distance_expr(metric, F.col(vec_col), probe_col)
     order = [_order_expr(metric, F.col(vec_col), probe_col).asc_nulls_last()]

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..utils import spread
+from .ann import nearest_centroid_col
 from .dedup import connected_components_star
 
 __all__ = [
@@ -146,36 +147,13 @@ def kmeans_centroids(
 def assign_to_centroids(
     df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Nearest-centroid ``cluster_id`` against FROZEN centroids, native
-    expressions only (centroids inlined as literals, no Python workers,
-    ties to the lowest cluster id — the same convention as
-    ann.IVFIndex.assign, which keeps its own copy for the saved-index
-    load path).  NULL vectors are excluded — they have no cluster."""
-    from ..functions import vector as V
-
-    # r12 (guide §1.3/§4): single-reference argmin — see
-    # ann.nearest_centroid_col for the rationale (the former
-    # array_position(dists, array_min(dists)) evaluated the
-    # k-aggregate distance array twice per row because lambda-bearing
-    # expressions are excluded from subexpression elimination).  Struct
-    # ordering is lexicographic (d, then i): exact same arithmetic,
-    # same ties-to-lowest-cluster-id convention.
-    structs = F.array(
-        *[
-            F.struct(
-                V.squared_l2_distance(
-                    F.col(vec_col), F.array(*[F.lit(x) for x in c])
-                ).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    cid = F.array_min(F.filter(structs, lambda s: s["d"].isNotNull()))[
-        "i"
-    ].cast("int")
+    """Nearest-centroid ``cluster_id`` against FROZEN centroids, ties to
+    the lowest cluster id — :func:`ann.nearest_centroid_col`, the one
+    argmin IVF uses too: native expressions with the centroids inlined
+    below ~16k values, an Arrow-batched GEMM above.  NULL vectors are
+    excluded — they have no cluster."""
     return df.filter(F.col(vec_col).isNotNull()).withColumn(
-        "cluster_id", cid
+        "cluster_id", nearest_centroid_col(centroids, vec_col)
     )
 
 
@@ -198,7 +176,8 @@ def assign_to_centroids_topm(
     closing the boundary band at ~``m^2``x the within-cluster work — the
     measured trade in scripts/semdedup_probe.py probe 7 and
     tests/test_semdedup.py's overlapping-cluster bound.  Native
-    expressions only, same discipline as :func:`assign_to_centroids`."""
+    expressions only (centroids inlined as literals, no Python
+    workers)."""
     from ..functions import vector as V
 
     dists = F.array(

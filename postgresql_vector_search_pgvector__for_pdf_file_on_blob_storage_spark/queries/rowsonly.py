@@ -147,15 +147,14 @@ FROM reach GROUP BY a ORDER BY node
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs folded into dedup groups (SURVEY.md §2B B5
-    "connected components / keep-min-id"): iterative min-label propagation
-    over the exact-Jaccard pair graph.  The oracle states the same
-    fixpoint as a recursive transitive closure — viable at 500 docs,
-    quadratic at scale, which is exactly why the engine side contracts the
-    graph in O(log n) large-star/small-star rounds instead (min-label
-    propagation, the O(diameter) sibling, measured 2.3x slower at 200k
-    edges/diameter 20 — scripts/scale_probe.py).  Pairs come from the
-    df-capped Jaccard (max_df=5, mirrored in the oracle — see
-    jaccard_similar_pairs)."""
+    "connected components / keep-min-id"): every node of the
+    exact-Jaccard pair graph labelled with its component's minimum id by
+    ``connected_components_star``.  The oracle states the same fixpoint
+    as a recursive transitive closure — viable at 500 docs, quadratic at
+    scale, which is why the engine side contracts the graph in O(log n)
+    large-star/small-star rounds (or one driver union-find below the
+    edge bound).  Pairs come from the df-capped Jaccard (max_df=5,
+    mirrored in the oracle — see jaccard_similar_pairs)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.8, max_df=5)
     return D.connected_components_star(pairs).orderBy("node")
@@ -870,11 +869,12 @@ def flagship_rag_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     every constituent is verified, but the composed row carried no
     self-check — now each row carries ``alt_path_top5_hits``, the
     overlap between these hits and an INDEPENDENT kNN execution over
-    the same cached chunks (``impl="pandas"`` — the Arrow/NumPy scorer,
-    a different code path from the native-expression
-    TakeOrderedAndProject that produced the hits; equality of the two
-    paths is the oracle-anchored contract pinned in
-    tests/test_knn.py::test_knn_pandas_impl_matches_native).  Constant
+    the same cached chunks: ``knn_join`` with a one-row probe frame,
+    whose bounded top-k scores in float64 BLAS inside ``mapInPandas`` —
+    a different plan and different arithmetic from the native-expression
+    TakeOrderedAndProject that produced the hits, oracle-checked on its
+    own by ``knn_join_l2`` (equality of the two paths is pinned in
+    tests/test_knn.py::test_knn_join_matches_native_knn).  Constant
     5 = the composed pipeline's top-5 reproduces through the alternate
     scorer; driver-visible at every sf."""
     from .. import pipeline as P
@@ -883,13 +883,15 @@ def flagship_rag_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     chunks = _ingested_chunks(spark, sf_dir)
     hits = P.search(chunks, "spark shuffle join vector search", k=5)
-    probe = E2.hash_embed_py("spark shuffle join vector search")
+    probe = spark.createDataFrame(
+        [(0, E2.hash_embed_py("spark shuffle join vector search"))],
+        "probe_id int, embedding array<float>",
+    )
     alt_ids = {
-        r["id"]
-        for r in KN.knn(
-            chunks, probe, k=5, metric="l2", tie_cols=("id",),
-            impl="pandas",
-        ).select("id").collect()
+        r["item_id"]
+        for r in KN.knn_join(probe, chunks, k=5, item_id="id")
+        .select("item_id")
+        .collect()
     }
     hit_ids = [r["id"] for r in hits.select("id").collect()]
     overlap = sum(1 for h in hit_ids if h in alt_ids)

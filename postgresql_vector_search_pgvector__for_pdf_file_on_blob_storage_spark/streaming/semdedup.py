@@ -17,7 +17,7 @@ doing the candidate pruning that MinHash bands do for text:
   ``(id, cluster_id, vec)`` row per accepted vector, embeddings
   L2-NORMALIZED ON WRITE so every later comparison is a plain dot.
 - Per micro-batch: assign new vectors to their nearest frozen centroid
-  (operators.semdedup.assign_to_centroids — native expressions), read
+  (operators.semdedup.assign_to_centroids — ann.nearest_centroid_col), read
   ONLY the store partitions for clusters present in the batch (partition
   pruning on the parquet layout), score new-vs-store and new-vs-new
   (smaller id wins) within matching clusters, append matches, then

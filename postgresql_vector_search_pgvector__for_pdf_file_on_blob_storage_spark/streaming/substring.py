@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..operators.dedup import word_shingles
-from ..utils import spread
+from ..utils import pin_marker, spread
 from .bloomstore import (
     _bloom_probe,
     append_run_entries,
@@ -168,41 +168,6 @@ def detect_and_register(
     # — one row per corpus-wide distinct gram forever.  Empty-safe write
     # (an all-short-doc first batch must not poison the store dir).
     write_store_partitioned(novel, gram_dir, "bucket", epoch_id)
-
-
-def _shingle_width_guard(
-    spark: SparkSession, checkpoint: str, n: int, what: str
-) -> None:
-    """Pin the shingle width ``n`` to the checkpoint: ``n`` decides which
-    grams exist, so a session resumed with another width would probe the
-    history for grams it never registered — silent duplicate misses.
-    The pin is an empty marker directory ``_n=<n>`` inside the checkpoint
-    (existence-only: readable on any Hadoop filesystem without open/read
-    plumbing).
-
-    The marker is written BEFORE the stream starts, so a first run that
-    dies before any commit leaves a pinned marker over an empty
-    checkpoint.  Harmless: resuming with the same n works, and a
-    different value errors spuriously but LOUDLY (delete the checkpoint
-    dir to truly start over) — preferable to the silent duplicate misses
-    an unpinned mismatch would cause."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path
-    root = jpath(checkpoint)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    marker = jpath(f"{checkpoint}/_n={int(n)}")
-    existing = fs.globStatus(jpath(f"{checkpoint}/_n=*"))
-    if existing is not None and len(existing) > 0:
-        found = [s.getPath().getName() for s in existing]
-        if f"_n={int(n)}" not in found:
-            raise ValueError(
-                f"{what}: checkpoint {checkpoint} was"
-                f" created with {found[0]} but this session asked for"
-                f" n={n}; the shingle width is part of the state layout"
-                " and cannot change on resume"
-            )
-        return
-    fs.mkdirs(marker)
 
 
 def _newest_log_entry(
@@ -443,7 +408,13 @@ def bloom_substring_stream(
     committed, store = _session_history_guards(
         spark, checkpoint, gram_dir, "bloom_substring_stream"
     )
-    _shingle_width_guard(spark, checkpoint, n, "bloom_substring_stream")
+    # n decides which grams exist: a session resumed with another width
+    # would probe the history for grams it never registered.
+    pin_marker(
+        spark, checkpoint, "n", int(n), "bloom_substring_stream",
+        "the shingle width is part of the state layout and cannot change"
+        " on resume",
+    )
     sc = spark.sparkContext
     desc_bc = index_bc = None
     m_bytes = k_hashes = n_hist = 0

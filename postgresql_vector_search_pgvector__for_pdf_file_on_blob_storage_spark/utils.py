@@ -62,3 +62,30 @@ def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def pin_marker(spark, root: str, key: str, value, what: str, why: str) -> None:
+    """Pin ``key=value`` to the state directory ``root`` so a later run
+    with another value is refused instead of silently reusing state
+    built for the old one.  The pin is an empty marker directory
+    ``_<key>=<value>`` inside ``root`` (existence-only: readable on any
+    Hadoop filesystem without open/read plumbing).
+
+    No marker yet: write one — state written before the pin adopts the
+    value of its next run.  The marker is written BEFORE any state, so a
+    first run that dies early leaves a pinned marker over empty state;
+    resuming with the same value works, and another value errors
+    spuriously but LOUDLY (delete ``root`` to start over)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jpath(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    want = f"_{key}={value}"
+    existing = fs.globStatus(jpath(f"{root}/_{key}=*"))
+    if existing is not None and len(existing) > 0:
+        found = [st.getPath().getName() for st in existing]
+        if want not in found:
+            raise ValueError(
+                f"{what}: {root} was created with {found[0]} but this"
+                f" call asked for {key}={value}; {why}"
+            )
+        return
+    fs.mkdirs(jpath(f"{root}/{want}"))

@@ -301,16 +301,6 @@ def main() -> None:
     )
     exact_ids = {r["vec_id"] for r in exact}
 
-    # 1b. Same scan, NumPy batch scorer (impl="pandas") — the brute-force
-    #     scale path when native HOF interpretation becomes the bottleneck.
-    t0 = time.time()
-    fast = K.knn(vecs, probe, k=5, tie_cols=("vec_id",), impl="pandas").collect()
-    results["knn_pandas_sec"] = round(time.time() - t0, 2)
-    results["knn_pandas_mvec_per_sec"] = round(
-        n_vec / results["knn_pandas_sec"] / 1e6, 2
-    )
-    assert {r["vec_id"] for r in fast} == exact_ids, "pandas impl diverged"
-
     # 2. IVF: build once, search with pruning; recall vs exact.
     t0 = time.time()
     idx = A.IVFIndex(vecs, k_clusters=32)
@@ -469,15 +459,16 @@ def main() -> None:
     results["curate_300k_survivors"] = curated
 
     # 3c. Connected components on a 200k-edge graph (10k chains of 20
-    #     nodes: diameter forces ~20 propagation rounds of join+agg).
+    #     nodes): the distributed star loop (O(log n) rounds, forced with
+    #     local_max_edges=0) vs the default dispatch, which contracts an
+    #     edge list this size with driver union-find.
     chain = spark.range(0, 200_000, 1, 32).select(
         (F.col("id") + (F.col("id") / F.lit(20)).cast("long")).alias("id_a")
     ).withColumn("id_b", F.col("id_a") + 1)
     t0 = time.time()
-    n_nodes = D.connected_components(chain, max_iter=25).count()
-    results["concomp_200k_edges_sec"] = round(time.time() - t0, 2)
+    n_nodes = D.connected_components_star(chain, local_max_edges=0).count()
+    results["concomp_star_dist_200k_edges_sec"] = round(time.time() - t0, 2)
     results["concomp_nodes"] = n_nodes
-    # Star contraction: O(log n) rounds — the long-chain scale path.
     t0 = time.time()
     n_nodes_star = D.connected_components_star(chain).count()
     results["concomp_star_200k_edges_sec"] = round(time.time() - t0, 2)

@@ -1,6 +1,8 @@
 """Dedup operators: exact, n-gram Jaccard, MinHash+LSH, SimHash."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
@@ -175,7 +177,7 @@ def test_connected_components_known_graph(spark):
     )
     got = {
         r["node"]: r["cluster"]
-        for r in D.connected_components(pairs).collect()
+        for r in D.connected_components_star(pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
@@ -187,7 +189,7 @@ def test_connected_components_long_chain_converges(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r["node"]: r["cluster"]
-        for r in D.connected_components(pairs).collect()
+        for r in D.connected_components_star(pairs).collect()
     }
     assert got == {i: 0 for i in range(13)}
 
@@ -305,21 +307,60 @@ def test_jaccard_max_df_matches_bruteforce(spark):
 
 def test_connected_components_raises_without_convergence(spark):
     """A chain longer than the round budget must fail loudly, not return
-    silently split clusters (ADVICE r01)."""
+    silently split clusters (ADVICE r01).  Only the distributed loop
+    iterates, so it is forced with ``local_max_edges=0``."""
     import pytest as _pytest
 
-    edges = [(i, i + 1) for i in range(8)]
+    edges = [(i, i + 1) for i in range(64)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(pairs, max_iter=2)
+        D.connected_components_star(pairs, max_iter=2, local_max_edges=0)
     with _pytest.warns(RuntimeWarning, match="did not converge"):
-        D.connected_components(pairs, max_iter=2, on_max_iter="warn").collect()
+        D.connected_components_star(
+            pairs, max_iter=2, on_max_iter="warn", local_max_edges=0
+        ).collect()
 
 
-def test_star_components_match_min_label(spark):
-    """Large-star/small-star contraction must produce the identical
-    (node, cluster) labeling as min-label propagation on random graphs,
-    chains, triangles, and isolated pairs."""
+def _py_components(edges):
+    """Reference labelling: every endpoint -> the minimum id of its
+    component, by plain graph search."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in adj:
+        if start in label:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for nb in adj[todo.pop()]:
+                if nb not in comp:
+                    comp.add(nb)
+                    todo.append(nb)
+        root = min(comp)
+        label.update((n, root) for n in comp)
+    return label
+
+
+def _star_arms(spark, edges, schema):
+    """(node -> cluster) from the default dispatch and from the forced
+    distributed loop."""
+    pairs = spark.createDataFrame(edges, schema)
+    return [
+        {r["node"]: r["cluster"] for r in df.collect()}
+        for df in (
+            D.connected_components_star(pairs),
+            D.connected_components_star(pairs, local_max_edges=0),
+        )
+    ]
+
+
+def test_star_components_match_python_reference(spark):
+    """Both arms of the components size dispatch — the driver union-find
+    (default below COMPONENTS_LOCAL_MAX_EDGES) and the distributed star
+    loop (forced with local_max_edges=0) — give the reference labelling
+    on random graphs, chains, triangles, and isolated pairs."""
     import random
 
     rng = random.Random(42)
@@ -331,27 +372,37 @@ def test_star_components_match_min_label(spark):
     ]
     for edges in cases:
         edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        want = {
-            r["node"]: r["cluster"]
-            for r in D.connected_components(pairs, max_iter=80).collect()
-        }
-        # Both arms of the r12 size dispatch: the driver union-find
-        # (default below COMPONENTS_LOCAL_MAX_EDGES) and the distributed
-        # star loop (forced with local_max_edges=0) must agree with the
-        # min-label reference exactly.
-        got_local = {
-            r["node"]: r["cluster"]
-            for r in D.connected_components_star(pairs).collect()
-        }
-        got_dist = {
-            r["node"]: r["cluster"]
-            for r in D.connected_components_star(
-                pairs, local_max_edges=0
-            ).collect()
-        }
+        want = _py_components(edges)
+        got_local, got_dist = _star_arms(spark, edges, "id_a long, id_b long")
         assert got_local == want
         assert got_dist == want
+
+
+_small_edges = st.lists(
+    st.tuples(st.integers(0, 15), st.integers(0, 15)).filter(
+        lambda e: e[0] != e[1]
+    ),
+    min_size=1,
+    max_size=20,
+)
+
+
+@given(_small_edges)
+@settings(max_examples=5, deadline=None)
+def test_star_components_arms_agree_on_random_edge_lists(spark, edges):
+    """Forced-arm equality: the union-find arm, the distributed arm and
+    the Python reference agree on random small edge lists — as long
+    ids and as string ids, which always take the distributed arm and
+    order as strings ("10" < "9")."""
+    want = _py_components(edges)
+    got_local, got_dist = _star_arms(spark, edges, "id_a long, id_b long")
+    assert got_local == want
+    assert got_dist == want
+    sedges = [(str(a), str(b)) for a, b in edges]
+    swant = _py_components(sedges)
+    s_local, s_dist = _star_arms(spark, sedges, "id_a string, id_b string")
+    assert s_local == swant
+    assert s_dist == swant
 
 
 def test_star_components_local_dispatch(spark):
@@ -378,7 +429,7 @@ def test_star_components_local_dispatch(spark):
         assert "Join" in plan(via_conf)
     finally:
         spark.conf.unset("spark.graft.components.localMaxEdges")
-    # string ids: always distributed, identical labeling to min-label
+    # string ids: always distributed
     spairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
     )
@@ -390,8 +441,8 @@ def test_star_components_local_dispatch(spark):
 
 
 def test_star_components_converge_fast_on_long_chain(spark):
-    """A 64-hop chain converges within O(log n) star rounds (min-label
-    would need 64)."""
+    """A 64-hop chain converges within O(log n) star rounds (label
+    propagation would need 64)."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a long, id_b long"
     )
@@ -639,6 +690,31 @@ def test_curate_corpus_v2_staged_resume(spark, sf_dir, tmp_path):
         )
     )
     assert resumed2 == base
+
+
+def test_curate_corpus_v2_staged_root_refuses_other_parameters(
+    spark, sf_dir, tmp_path
+):
+    """A staged_root is pinned to the parameters that built its stages:
+    a rerun with another ``jaccard_threshold`` raises instead of
+    returning the stale pair and survivor stages, and the original
+    parameters still resume."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
+        dedup as DD,
+    )
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
+        load_table,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    root = str(tmp_path / "stages")
+    first = DD.curate_corpus_v2(docs, min_stops=0, staged_root=root).collect()
+    with pytest.raises(ValueError, match="other parameters"):
+        DD.curate_corpus_v2(
+            docs, min_stops=0, jaccard_threshold=0.5, staged_root=root
+        )
+    again = DD.curate_corpus_v2(docs, min_stops=0, staged_root=root).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, first))
 
 
 def test_curate_corpus_v2_maintained_pairs(spark, sf_dir, tmp_path):

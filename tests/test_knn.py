@@ -98,22 +98,29 @@ def test_similarity_join_threshold(spark, emb, emb_np):
     assert got_pairs == expect
 
 
-def test_knn_pandas_impl_matches_native(spark, sf_dir):
-    """impl='pandas' (NumPy scorer) must return the same top-k ids and
-    4-decimal distances as the native expression."""
+def test_knn_join_matches_native_knn(spark, sf_dir):
+    """knn_join with a one-row probe frame (float64 BLAS bounded top-k
+    in mapInPandas — the flagship_rag_search witness path) must return
+    the same top-k ids and 4-decimal distances as the native
+    single-probe expression, for every metric."""
     from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
         load_table,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    row = emb.filter(F.col("vec_id") == 0).first()
+    probe = [float(x) for x in row["embedding"]]
+    probe_df = spark.createDataFrame(
+        [(0, row["embedding"])], "probe_id int, embedding array<float>"
+    )
     items = emb.filter(F.col("vec_id") != 0)
     for metric in ["l2", "cosine", "dot"]:
         nat = K.knn(items, probe, k=5, metric=metric, tie_cols=("vec_id",)).collect()
-        pnd = K.knn(items, probe, k=5, metric=metric, tie_cols=("vec_id",),
-                    impl="pandas").collect()
-        assert [r["vec_id"] for r in nat] == [r["vec_id"] for r in pnd], metric
-        for a, b in zip(nat, pnd):
+        alt = K.knn_join(
+            probe_df, items, k=5, metric=metric, item_id="vec_id"
+        ).orderBy("rank").collect()
+        assert [r["vec_id"] for r in nat] == [r["item_id"] for r in alt], metric
+        for a, b in zip(nat, alt):
             assert round(a["dist"], 4) == round(b["dist"], 4), metric
 
 

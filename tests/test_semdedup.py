@@ -277,6 +277,33 @@ class TestStreamingSemdedup:
         assert got == want and len(got) > 0
 
 
+def test_assign_to_centroids_high_dim_takes_gemm_arm(spark):
+    """Above ~16k inlined centroid values (17 x 1024-d here)
+    assign_to_centroids runs the Arrow-batched GEMM of
+    ann.nearest_centroid_col instead of a huge literal expression tree,
+    and still returns the exact argmin with ties to the lowest id
+    (centroid 16 duplicates centroid 3) and drops NULL vectors."""
+    import numpy as np
+
+    dim, k = 1024, 17
+    rng = np.random.default_rng(7)
+    cents = rng.normal(size=(k, dim))
+    cents[16] = cents[3]
+    vecs = (cents[np.arange(120) % k] + 0.01 * rng.normal(size=(120, dim)))
+    vecs = vecs.astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    rows.append((120, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    out = S.assign_to_centroids(df, cents.tolist())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan
+    got = {r["vec_id"]: r["cluster_id"] for r in out.collect()}
+    d = ((vecs.astype(np.float64)[:, None, :] - cents[None]) ** 2).sum(-1)
+    want = dict(enumerate(d.argmin(1).tolist()))  # first minimum wins
+    assert 16 not in want.values()
+    assert got == want
+
+
 def test_semantic_dedup_null_embeddings_pass_through(spark):
     """NULL-embedding rows can't be scored: they survive as their own
     keepers (cluster_id NULL) instead of crashing the k-means fit or the
