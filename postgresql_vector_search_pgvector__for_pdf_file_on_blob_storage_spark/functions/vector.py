@@ -28,6 +28,7 @@ __all__ = [
     "l2_distance",
     "dot_product",
     "l2_norm",
+    "nonzero_norm",
     "cosine_similarity",
     "cosine_distance",
     "neg_inner_product",
@@ -71,6 +72,12 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(
         _sum_elements(F.transform(_col(a), lambda x: x.cast("double") ** 2))
     )
+
+
+def nonzero_norm(a: Column | str) -> Column:
+    """``l2_norm(a) > 0``, from the same ``x ** 2`` terms but stopping at
+    the first non-zero one: the cosine guard (no distance at norm 0)."""
+    return F.exists(_col(a), lambda x: x.cast("double") ** 2 != 0)
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:

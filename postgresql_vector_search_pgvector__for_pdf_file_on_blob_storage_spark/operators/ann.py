@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..utils import spread
+from . import blockscan as BS
 from . import knn as K
 
 __all__ = [
@@ -46,30 +47,34 @@ def nearest_centroid_col(centroids, vec_col: str):
     assignment: IVFIndex/IVFPQIndex use it for loaded indexes,
     incremental adds, and the canonical coarse fit, and
     ``semdedup.assign_to_centroids`` (batch and streaming SemDeDup)
-    for frozen centroids.
+    for frozen centroids.  NULL or wrong-dimension vectors map to
+    NULL.
 
     Two implementations by ``dim * k`` size: native expressions
     (centroids inlined as array literals, whole-stage codegen) below
-    ~16k inlined values; an Arrow-batched pandas UDF (one float64 GEMM
-    per batch against the closure-captured centroid matrix) above — at
-    the reference's 1536-d x 64 clusters the literal form emits a ~100k
-    element expression tree that splinters codegen (the SQ8 params
-    failure mode) and dominated the canonical 200k x 1536 build
-    wall-clock, where the GEMM form takes seconds (BASELINE.md r06).
-    Both paths break ties to the first (lowest) index."""
+    ~16k inlined values; an Arrow-batched pandas UDF (the blockscan
+    centroid ranking — one float64 GEMM per batch against the
+    closure-captured centroid matrix) above — at the reference's 1536-d
+    x 64 clusters the literal form emits a ~100k element expression tree
+    that splinters codegen (the SQ8 params failure mode) and dominated
+    the canonical 200k x 1536 build wall-clock, where the GEMM form takes
+    seconds (BASELINE.md r06).  Both paths break ties to the first
+    (lowest) index."""
+    return _rank_centroids(centroids, vec_col, None)
+
+
+def _rank_centroids(centroids, vec_col: str, m: int | None):
+    """The centroid ranking behind :func:`nearest_centroid_col`
+    (``m=None``: the nearest id, ``int``) and
+    ``semdedup.assign_to_centroids_topm`` (``m``: the ``m`` nearest ids,
+    nearest first, ``array<int>``; empty for a NULL-distance vector)."""
     cents = np.asarray(centroids, dtype=np.float64)
     if cents.size <= 16_384:
-        # r12 (guide §1.3/§4): argmin as a SINGLE-reference expression
-        # chain.  The former array_position(dists, array_min(dists))
-        # names the k-aggregate dists array twice, and lambda-bearing
-        # expressions are excluded from Spark's subexpression
-        # elimination, so all 2k interpreted zip_with folds ran per row.
-        # array_min over (d, i) structs keeps the exact per-distance
-        # arithmetic and the ties-to-lowest-index convention (struct
-        # ordering is lexicographic), and the filter drops null
-        # distances (null / wrong-dim / null-element vectors — all
-        # dists null together) so array_min of the emptied array yields
-        # the same null cluster_id as array_position-on-null did.
+        # r12: (d, i) structs name the k distances once (lambda-bearing
+        # expressions escape subexpression elimination), order
+        # lexicographically (ties to the lowest index), and the filter
+        # drops NULL distances (NULL / wrong-dim vectors: all NULL), so
+        # such a vector gets a NULL id / an empty ranking.
         structs = F.array(
             *[
                 F.struct(
@@ -83,32 +88,29 @@ def nearest_centroid_col(centroids, vec_col: str):
             ]
         )
         valid = F.filter(structs, lambda s: s["d"].isNotNull())
-        return F.array_min(valid)["i"].cast("int")
-
-    c_norms = (cents * cents).sum(1)
-    dim = cents.shape[1]
-
-    @F.pandas_udf("int")
-    def _nearest(vecs: pd.Series) -> pd.Series:
-        # Null / wrong-dimension vectors map to null, matching the
-        # literal branch (null distances -> null array_position); a
-        # blanket np.asarray would either raise on None or coerce a
-        # ragged batch to an object array and mis-shape the GEMM.
-        if len(vecs) == 0:
-            return pd.Series([], dtype="Int32")
-        rows = [np.asarray(v, dtype=np.float64) if v is not None else None
-                for v in vecs]
-        ok = np.array(
-            [r is not None and r.shape == (dim,) for r in rows], dtype=bool
+        if m is None:
+            return F.array_min(valid)["i"].cast("int")
+        return F.transform(
+            F.slice(F.array_sort(valid), 1, int(m)), lambda s: s["i"].cast("int")
         )
-        out = np.full(len(rows), None, dtype=object)
-        if ok.any():
-            X = np.asarray([r for r, k in zip(rows, ok) if k])
-            # argmin of ||x||^2 - 2 x.C^T + ||c||^2; the ||x||^2 term
-            # is constant per row, so it drops out of the argmin.
-            d2 = -2.0 * (X @ cents.T) + c_norms[None, :]
-            out[ok] = d2.argmin(1).astype("int32")
-        return pd.Series(out, dtype="Int32")
+
+    dim = cents.shape[1]
+    tile = BS.TILE
+
+    @F.pandas_udf("int" if m is None else "array<int>")
+    def _nearest(vecs: pd.Series) -> pd.Series:
+        # NULL / wrong-dimension vectors get no id, matching the literal
+        # branch (all distances NULL).
+        X, ok = BS.rows(vecs.to_numpy(), dim)
+        ids = BS.nearest(X, cents, m or 1, tile).astype(np.int32)
+        if m is None:
+            out = np.full(len(vecs), None, dtype=object)
+            out[ok] = ids[:, 0]
+            return pd.Series(out, dtype="Int32")
+        out = [[]] * len(vecs)
+        for pos, row in zip(np.flatnonzero(ok), ids):
+            out[pos] = row
+        return pd.Series(out)
 
     return _nearest(F.col(vec_col))
 

@@ -16,11 +16,15 @@ vectors while keeping the QUERY exact-side float:
 - **PQ (product quantization)**: split each vector into ``m`` subspaces,
   k-means each subspace to 256 centroids (driver-side NumPy on a BOUNDED
   sample — ``collect_bounded`` raises past the cap), store 1 byte per
-  subspace.  d*4 bytes -> m bytes (32x at d=64, m=8).  Search builds a
-  per-query lookup table (m x 256 subspace distances) and scans codes
-  with NumPy take+sum inside ``mapInPandas`` — partition-local top-k,
-  then a global k-bounded merge, the same exchange-bounded shape as
-  ``knn_join`` (O(parts x k) rows shuffled at any item count).
+  subspace.  d*4 bytes -> m bytes (32x at d=64, m=8).  Encoding is the
+  ``operators.blockscan`` centroid argmin per subspace.  Search builds
+  a per-query lookup table (m x 256 subspace distances) and every
+  search form of both index types runs ONE multi-probe ADC scan
+  (``_adc_scan``): lookup sums inside ``mapInPandas`` feeding the
+  blockscan running top-k by ``(dist, id)`` — partition-local top-k,
+  then a global k-bounded merge ordered by ``(dist, id)``, the same
+  exchange-bounded shape as ``knn_join`` (O(parts x k) rows shuffled at
+  any item count).  Tied ADC distances keep the lowest ids.
 
 Both are approximate on the ITEM side only and must never silently
 replace the exact oracle-checked path: recall vs ``operators.knn`` is
@@ -39,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..utils import collect_bounded, spread
+from . import blockscan as BS
 
 __all__ = ["SQ8", "PQCodebook", "IVFPQIndex"]
 
@@ -292,6 +297,69 @@ def _kmeans(X: np.ndarray, k: int, iters: int, rng) -> np.ndarray:
     return centers
 
 
+def _adc_scan(
+    codes: DataFrame,
+    tables: dict,
+    k: int,
+    pids: list,
+    probe_field: str,
+    id_col: str,
+    code_col: str,
+    dist_col: str,
+) -> DataFrame:
+    """The one multi-probe ADC scorer behind every PQ / IVFPQ search: a
+    ``mapInPandas`` pass emitting each partition's top-``k`` per probe by
+    ``(dist, id)`` (the blockscan running top-k: ties keep the lowest
+    ids).  ``tables`` (broadcast) maps a cluster id — ``None`` for plain
+    PQ codes without ``cluster_id`` — to ``(probe indices, their (p, m,
+    codes) lookup tables)``; ADC distance sums the lookups subspace by
+    subspace.  Output ``(probe_field, id_col, dist_col)``, the probe
+    column holding ``pids[index]``."""
+    bc = codes.sparkSession.sparkContext.broadcast(tables)
+    itype = dict(codes.dtypes)[id_col]
+    probe_col = probe_field.split()[0]
+    schema = f"{probe_field}, {id_col} {itype}, {dist_col} double"
+    tile = BS.TILE
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tabs = bc.value
+        top = BS.TopK(k, len(pids))
+        for pdf in batches:
+            groups = (
+                pdf.groupby("cluster_id") if None not in tabs else [(None, pdf)]
+            )
+            for c, sub in groups:
+                if c not in tabs or sub.empty:
+                    continue
+                probers, luts = tabs[c]
+                C = np.asarray(list(sub[code_col]), dtype=np.int16) + 128
+                ids = sub[id_col].to_numpy()
+                for r0, r1, c0, c1 in BS.tiles(len(C), len(probers), tile):
+                    D = np.zeros((c1 - c0, r1 - r0))
+                    for j in range(C.shape[1]):
+                        D += luts[c0:c1, j, :][:, C[r0:r1, j]]
+                    top.push(D.T, ids[r0:r1], probers[c0:c1])
+        out = top.rows(pids)
+        if out:
+            yield pd.DataFrame(out, columns=[probe_col, id_col, dist_col])
+
+    return codes.mapInPandas(gen, schema=schema)
+
+
+def _rank_per_probe(
+    local: DataFrame, probe_id: str, id_col: str, dist_col: str, k: int
+) -> DataFrame:
+    """Per-probe top-``k`` by ``(dist, id)`` (a window rank)."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(probe_id).orderBy(dist_col, id_col)
+    return (
+        local.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= k)
+        .drop("__rk")
+    )
+
+
 class PQCodebook:
     """Product quantization: ``m`` subspaces x 256 centroids, 1 byte per
     subspace per vector (d*4 -> m bytes).  L2 metric (cosine: normalize
@@ -447,13 +515,13 @@ class PQCodebook:
         """The ``(m, codes)`` ADC lookup table for one query (or query
         residual): squared L2 between each subvector of ``q`` and every
         sub-codebook centroid.  Shared by every search path."""
-        m, dsub = self.m, self.dsub
-        lut = np.empty((m, self.codes))
-        for j in range(m):
-            sub = q[j * dsub : (j + 1) * dsub]
-            b = self.books[j]
-            lut[j] = (b * b).sum(1) - 2.0 * (b @ sub) + (sub * sub).sum()
-        return lut
+        dsub = self.dsub
+        return np.stack(
+            [
+                BS.distances(b, q[None, j * dsub : (j + 1) * dsub], "l2")[:, 0]
+                for j, b in enumerate(self.books)
+            ]
+        )
 
     def encode(
         self,
@@ -469,6 +537,7 @@ class PQCodebook:
         for the IVF+PQ layout)."""
         books = self.books
         m, dsub, dim = self.m, self.dsub, self.dim
+        tile = BS.TILE
         dtypes = dict(df.dtypes)
         carried = ", ".join(f"{c} {dtypes[c]}" for c in carry_cols)
         out_schema = (
@@ -478,22 +547,15 @@ class PQCodebook:
         )
 
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            b_sq = [(b * b).sum(1) for b in books]  # (m, codes)
             for pdf in batches:
-                if pdf.empty:
+                X, ok = BS.rows(pdf[vec_col].to_numpy(), dim)
+                if not ok.any():
                     continue
-                ok = pdf[vec_col].map(
-                    lambda v: v is not None and len(v) == dim
-                )
                 pdf = pdf[ok]
-                if pdf.empty:
-                    continue
-                X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
                 code = np.empty((X.shape[0], m), dtype=np.int16)
                 for j in range(m):
                     sub = X[:, j * dsub : (j + 1) * dsub]
-                    d2 = b_sq[j][None, :] - 2.0 * sub @ books[j].T
-                    code[:, j] = d2.argmin(1)
+                    code[:, j] = BS.nearest(sub, books[j], 1, tile)[:, 0]
                 out = {id_col: pdf[id_col].values}
                 for c in carry_cols:
                     out[c] = pdf[c].values
@@ -514,52 +576,23 @@ class PQCodebook:
         dist_col: str = "dist",
     ) -> DataFrame:
         """ADC top-k: one m x 256 lookup table per query (driver-built,
-        tiny), then a NumPy take+sum scan per Arrow batch emitting only the
-        partition-local top-k — the global ``orderBy().limit(k)`` sees
-        O(parts x k) rows regardless of item count."""
+        tiny), then the one-probe case of the ADC scan — each partition
+        emits only its top-k by ``(dist, id)``, and the global
+        ``orderBy(dist, id).limit(k)`` sees O(parts x k) rows regardless
+        of item count."""
         q = np.asarray(list(map(float, query_vec)), dtype=np.float64)
         if q.shape[0] != self.dim:
             raise ValueError(
                 f"query dim {q.shape[0]} != codebook dim {self.dim}"
             )
-        m = self.m
-        lut = self._lut(q)
-        out_schema = (
-            f"{id_col} {dict(encoded.dtypes)[id_col]}, {dist_col} double"
+        local = _adc_scan(
+            spread(encoded.select(id_col, code_col)),
+            {None: (np.zeros(1, dtype=np.int64), self._lut(q)[None])},
+            k, [0], "__p int", id_col, code_col, dist_col,
         )
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            best_ids: list = []
-            best_d = np.empty(0)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                C = (
-                    np.asarray(list(pdf[code_col]), dtype=np.int16) + 128
-                )  # (n, m) logical codes
-                # dist_i = sum_j lut[j, C[i, j]]
-                d = lut[np.arange(m)[None, :], C].sum(1)
-                take = min(k, d.shape[0])
-                idx = np.argpartition(d, take - 1)[:take]
-                best_ids.extend(pdf[id_col].values[idx])
-                best_d = np.concatenate([best_d, d[idx]])
-                if len(best_ids) > 4 * k:  # re-trim the running set
-                    top = np.argpartition(best_d, k - 1)[:k]
-                    best_ids = [best_ids[i] for i in top]
-                    best_d = best_d[top]
-            if best_ids:
-                top = np.argsort(best_d)[:k]
-                yield pd.DataFrame(
-                    {
-                        id_col: [best_ids[i] for i in top],
-                        dist_col: best_d[top],
-                    }
-                )
-
-        local = spread(encoded.select(id_col, code_col)).mapInPandas(
-            gen, schema=out_schema
+        return (
+            local.select(id_col, dist_col).orderBy(dist_col, id_col).limit(k)
         )
-        return local.orderBy(dist_col).limit(k)
 
     def search_many(
         self,
@@ -580,8 +613,6 @@ class PQCodebook:
         O(parts x probes x k) rows regardless of item count — the same
         exchange-bounded shape as ``knn_join`` / ``IVFIndex.search_many``.
         """
-        from pyspark.sql.window import Window
-
         rows = collect_bounded(
             probes,
             [probe_id, probe_vec],
@@ -591,85 +622,18 @@ class PQCodebook:
             " driver-side by design (memory ~ probes x m x codes x 8 B).",
         )
         rows = [r for r in rows if r[1] is not None and len(r[1]) == self.dim]
-        m = self.m
-        ptype = dict(probes.dtypes)[probe_id]
-        itype = dict(encoded.dtypes)[id_col]
-        out_schema = f"{probe_id} {ptype}, {id_col} {itype}, {dist_col} double"
-        spark = encoded.sparkSession
-        if not rows:
-            return spark.createDataFrame([], out_schema)
-        pids = [r[0] for r in rows]
-        n_p = len(pids)
-        # (p, m, codes) — every probe's lookup table, shipped as a
-        # broadcast (not a task closure) so it moves once per executor.
-        luts = np.stack(
+        # (p, m, codes) — every probe's lookup table.
+        luts = np.asarray(
             [self._lut(np.asarray(r[1], dtype=np.float64)) for r in rows]
+        ).reshape(len(rows), self.m, self.codes)
+        ptype = dict(probes.dtypes)[probe_id]
+        local = _adc_scan(
+            spread(encoded.select(id_col, code_col)),
+            {None: (np.arange(len(rows)), luts)},
+            k, [r[0] for r in rows], f"{probe_id} {ptype}",
+            id_col, code_col, dist_col,
         )
-        bc = spark.sparkContext.broadcast(luts)
-        CHUNK = 128  # probes scored per dense (chunk x batch) tile
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            b_luts = bc.value
-            best_ids: list = [None] * n_p
-            best_d: list = [None] * n_p
-
-            def trim(pi: int, hard: bool = False) -> None:
-                if best_d[pi] is not None and (
-                    hard or len(best_d[pi]) > 4 * k
-                ):
-                    kk = min(k, len(best_d[pi]))
-                    sel = np.argpartition(best_d[pi], kk - 1)[:kk]
-                    best_ids[pi] = best_ids[pi][sel]
-                    best_d[pi] = best_d[pi][sel]
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                C = np.asarray(list(pdf[code_col]), dtype=np.int16) + 128
-                ids = pdf[id_col].values
-                n = C.shape[0]
-                take = min(k, n)
-                for s in range(0, n_p, CHUNK):
-                    lch = b_luts[s : s + CHUNK]  # (c, m, codes)
-                    D = np.zeros((lch.shape[0], n))
-                    for j in range(m):
-                        D += lch[:, j, :][:, C[:, j]]
-                    idx = np.argpartition(D, take - 1, axis=1)[:, :take]
-                    dv = np.take_along_axis(D, idx, axis=1)
-                    for ci in range(lch.shape[0]):
-                        pi = s + ci
-                        if best_ids[pi] is None:
-                            best_ids[pi] = ids[idx[ci]].copy()
-                            best_d[pi] = dv[ci].copy()
-                        else:
-                            best_ids[pi] = np.concatenate(
-                                [best_ids[pi], ids[idx[ci]]]
-                            )
-                            best_d[pi] = np.concatenate([best_d[pi], dv[ci]])
-                            trim(pi)
-            # One output frame per task: O(probes x k) rows.
-            out_p, out_i, out_d = [], [], []
-            for pi in range(n_p):
-                if best_ids[pi] is None:
-                    continue
-                trim(pi, hard=True)
-                out_p.extend([pids[pi]] * len(best_d[pi]))
-                out_i.extend(best_ids[pi].tolist())
-                out_d.extend(best_d[pi].tolist())
-            if out_p:
-                yield pd.DataFrame(
-                    {probe_id: out_p, id_col: out_i, dist_col: out_d}
-                )
-
-        local = spread(encoded.select(id_col, code_col)).mapInPandas(
-            gen, schema=out_schema
-        )
-        w = Window.partitionBy(probe_id).orderBy(dist_col, id_col)
-        return (
-            local.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= k)
-            .drop("__rk")
-        )
+        return _rank_per_probe(local, probe_id, id_col, dist_col, k)
 
     @staticmethod
     def refine(
@@ -694,8 +658,6 @@ class PQCodebook:
         over the big item table is one broadcast-hash join, and the final
         per-probe rank windows O(probes x shortlist) rows.
         """
-        from pyspark.sql.window import Window
-
         from . import knn as K
 
         cand = candidates.select(probe_id, id_col)
@@ -707,12 +669,7 @@ class PQCodebook:
             .join(F.broadcast(pr), probe_id)
             .select(probe_id, id_col, dist.alias(dist_col))
         )
-        w = Window.partitionBy(probe_id).orderBy(dist_col, id_col)
-        return (
-            scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= k)
-            .drop("__rk")
-        )
+        return _rank_per_probe(scored, probe_id, id_col, dist_col, k)
 
 
 class IVFPQIndex:
@@ -941,6 +898,29 @@ class IVFPQIndex:
         self.indexed = spark.read.parquet(f"{path}/codes")
         return self
 
+    def _probe_tables(self, q: np.ndarray, nprobe: int) -> list:
+        """``[(cluster, lut)]`` for the ``nprobe`` clusters nearest ``q``:
+        each cluster's lookup table is against the probe's RESIDUAL to
+        that centroid (what makes IVF+PQ distances valid:
+        ``||q - x||^2 = ||(q - c) - r||^2`` for ``x = c + r``)."""
+        d = np.linalg.norm(self.centroids - q[None, :], axis=1)
+        return [
+            (int(c), self.pq._lut(q - self.centroids[c]))
+            for c in np.argsort(d)[:nprobe]
+        ]
+
+    def _scan(self, by_cluster: dict, want: int, pids, probe_field, dist_col):
+        """The ADC scan over the probed clusters' code partitions."""
+        tables = {
+            c: (np.asarray([pi for pi, _ in v]), np.stack([t for _, t in v]))
+            for c, v in by_cluster.items()
+        }
+        return _adc_scan(
+            self.indexed.filter(F.col("cluster_id").isin(sorted(tables)))
+            .select(self.id_col, "cluster_id", "pq_code"),
+            tables, want, pids, probe_field, self.id_col, "pq_code", dist_col,
+        )
+
     def search(
         self,
         probe,
@@ -950,57 +930,20 @@ class IVFPQIndex:
         refine_items: DataFrame | None = None,
         dist_col: str = "dist",
     ) -> DataFrame:
-        """ADC top-k within the ``nprobe`` nearest clusters.  Each probed
-        cluster gets its own lookup table against the probe's RESIDUAL to
-        that cluster's centroid (that is what makes IVF+PQ distances
-        valid: ``||q - x||^2 = ||(q - c) - r||^2`` for ``x = c + r``).
-        With ``refine_items`` the ADC shortlist is exactly re-ranked from
-        the original vectors (IVFADC+R); otherwise the ADC top-k returns.
+        """ADC top-k within the ``nprobe`` nearest clusters — the one-probe
+        case of :meth:`search_many`'s scan, each probed cluster with its
+        own residual lookup table.  With ``refine_items`` the ADC
+        shortlist is exactly re-ranked from the original vectors
+        (IVFADC+R); otherwise the ADC top-k returns.  Ties order by id.
         """
         q = np.asarray(list(map(float, probe)), dtype=np.float64)
-        m = self.pq.m
-        d = np.linalg.norm(self.centroids - q[None, :], axis=1)
-        clusters = [int(c) for c in np.argsort(d)[:nprobe]]
-        luts = {c: self.pq._lut(q - self.centroids[c]) for c in clusters}
-        id_col, code_col = self.id_col, "pq_code"
-        itype = dict(self.indexed.dtypes)[id_col]
-        out_schema = f"{id_col} {itype}, {dist_col} double"
+        id_col = self.id_col
         want = max(k, shortlist if refine_items is not None else k)
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            best_ids: list = []
-            best_d = np.empty(0)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                for c, sub in pdf.groupby("cluster_id"):
-                    lut = luts.get(c)
-                    if lut is None:
-                        continue
-                    C = np.asarray(list(sub[code_col]), dtype=np.int16) + 128
-                    dv = lut[np.arange(m)[None, :], C].sum(1)
-                    take = min(want, dv.shape[0])
-                    idx = np.argpartition(dv, take - 1)[:take]
-                    best_ids.extend(sub[id_col].values[idx])
-                    best_d = np.concatenate([best_d, dv[idx]])
-                    if len(best_ids) > 4 * want:
-                        top = np.argpartition(best_d, want - 1)[:want]
-                        best_ids = [best_ids[i] for i in top]
-                        best_d = best_d[top]
-            if best_ids:
-                top = np.argsort(best_d)[: want]
-                yield pd.DataFrame(
-                    {
-                        id_col: [best_ids[i] for i in top],
-                        dist_col: best_d[top],
-                    }
-                )
-
+        by_cluster = {c: [(0, t)] for c, t in self._probe_tables(q, nprobe)}
         cand = (
-            self.indexed.filter(F.col("cluster_id").isin(clusters))
-            .select(id_col, "cluster_id", code_col)
-            .mapInPandas(gen, schema=out_schema)
-            .orderBy(dist_col)
+            self._scan(by_cluster, want, [0], "__p int", dist_col)
+            .select(id_col, dist_col)
+            .orderBy(dist_col, id_col)
             .limit(want)
         )
         if refine_items is None:
@@ -1041,8 +984,6 @@ class IVFPQIndex:
         :meth:`PQCodebook.refine` for the exact re-rank (IVFADC+R), as
         ``ann_recall_report``'s ``ivfpq`` method does.
         """
-        from pyspark.sql.window import Window
-
         rows = collect_bounded(
             probes,
             [probe_id, probe_vec],
@@ -1055,91 +996,14 @@ class IVFPQIndex:
         rows = [
             r for r in rows if r[1] is not None and len(r[1]) == self.pq.dim
         ]
-        m = self.pq.m
-        id_col, code_col = self.id_col, "pq_code"
-        ptype = dict(probes.dtypes)[probe_id]
-        itype = dict(self.indexed.dtypes)[id_col]
-        out_schema = f"{probe_id} {ptype}, {id_col} {itype}, {dist_col} double"
-        spark = self.indexed.sparkSession
-        if not rows:
-            return spark.createDataFrame([], out_schema)
-        pids = [r[0] for r in rows]
-        n_p = len(pids)
-        # by_cluster: cluster -> list of (probe_index, (m, codes) LUT of
-        # the probe's RESIDUAL to that cluster's centroid) — broadcast, so
-        # it ships once per executor, not once per task.
+        # cluster -> [(probe index, residual lookup table)]
         by_cluster: dict[int, list] = {}
         for pi, (_, vec) in enumerate(rows):
             q = np.asarray(vec, dtype=np.float64)
-            d = np.linalg.norm(self.centroids - q[None, :], axis=1)
-            for c in (int(x) for x in np.argsort(d)[:nprobe]):
-                by_cluster.setdefault(c, []).append(
-                    (pi, self.pq._lut(q - self.centroids[c]))
-                )
-        clusters = sorted(by_cluster)
-        bc = spark.sparkContext.broadcast(by_cluster)
-        jix = np.arange(m)[None, :]
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bcl = bc.value
-            best_ids: list = [None] * n_p
-            best_d: list = [None] * n_p
-
-            def trim(pi: int, hard: bool = False) -> None:
-                if best_d[pi] is not None and (
-                    hard or len(best_d[pi]) > 4 * shortlist
-                ):
-                    kk = min(shortlist, len(best_d[pi]))
-                    sel = np.argpartition(best_d[pi], kk - 1)[:kk]
-                    best_ids[pi] = best_ids[pi][sel]
-                    best_d[pi] = best_d[pi][sel]
-
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                for c, sub in pdf.groupby("cluster_id"):
-                    probers = bcl.get(c)
-                    if not probers:
-                        continue
-                    C = np.asarray(list(sub[code_col]), dtype=np.int16) + 128
-                    ids = sub[id_col].values
-                    take = min(shortlist, C.shape[0])
-                    for pi, lut in probers:
-                        dv = lut[jix, C].sum(1)
-                        idx = np.argpartition(dv, take - 1)[:take]
-                        if best_ids[pi] is None:
-                            best_ids[pi] = ids[idx].copy()
-                            best_d[pi] = dv[idx].copy()
-                        else:
-                            best_ids[pi] = np.concatenate(
-                                [best_ids[pi], ids[idx]]
-                            )
-                            best_d[pi] = np.concatenate(
-                                [best_d[pi], dv[idx]]
-                            )
-                            trim(pi)
-            # One output frame per task: O(probes x shortlist) rows.
-            out_p, out_i, out_d = [], [], []
-            for pi in range(n_p):
-                if best_ids[pi] is None:
-                    continue
-                trim(pi, hard=True)
-                out_p.extend([pids[pi]] * len(best_d[pi]))
-                out_i.extend(best_ids[pi].tolist())
-                out_d.extend(best_d[pi].tolist())
-            if out_p:
-                yield pd.DataFrame(
-                    {probe_id: out_p, id_col: out_i, dist_col: out_d}
-                )
-
-        local = (
-            self.indexed.filter(F.col("cluster_id").isin(clusters))
-            .select(id_col, "cluster_id", code_col)
-            .mapInPandas(gen, schema=out_schema)
+            for c, t in self._probe_tables(q, nprobe):
+                by_cluster.setdefault(c, []).append((pi, t))
+        local = self._scan(
+            by_cluster, shortlist, [r[0] for r in rows],
+            f"{probe_id} {dict(probes.dtypes)[probe_id]}", dist_col,
         )
-        w = Window.partitionBy(probe_id).orderBy(dist_col, id_col)
-        return (
-            local.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= shortlist)
-            .drop("__rk")
-        )
+        return _rank_per_probe(local, probe_id, self.id_col, dist_col, shortlist)

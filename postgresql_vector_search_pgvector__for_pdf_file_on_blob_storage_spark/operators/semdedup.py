@@ -18,9 +18,11 @@ clusters.
   only the single assignment pass reads everything — the 100 TB path;
   default 1.0 = fit on all rows, right for fixtures) + one shuffle
   partitioning the corpus by ``cluster_id``;
-- the quadratic cosine scan runs per cluster inside ``applyInPandas`` as
-  a single normalized GEMM — O(sum c_i^2) instead of O(n^2), a ~k-fold
-  saving, and embarrassingly parallel across clusters;
+- the quadratic cosine scan runs per cluster inside ``applyInPandas``
+  through the one blocked distance kernel (``operators.blockscan``:
+  rows normalized once, upper-triangle GEMM tiles, threshold reducer) —
+  O(sum c_i^2) instead of O(n^2), a ~k-fold saving, and embarrassingly
+  parallel across clusters;
 - a ``max_cluster_size`` guard refuses quadratic work on a runaway
   cluster (raise, pointing at larger ``k_clusters``) instead of silently
   burning executor-hours — the same loud-refusal discipline as
@@ -49,10 +51,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..utils import spread
-from .ann import nearest_centroid_col
+from . import blockscan as BS
+from .ann import _rank_centroids, nearest_centroid_col
 from .dedup import connected_components_star
 
 __all__ = [
@@ -175,28 +177,13 @@ def assign_to_centroids_topm(
     identical score) compares every pair whose top-``m`` sets intersect,
     closing the boundary band at ~``m^2``x the within-cluster work — the
     measured trade in scripts/semdedup_probe.py probe 7 and
-    tests/test_semdedup.py's overlapping-cluster bound.  Native
-    expressions only (centroids inlined as literals, no Python
-    workers)."""
-    from ..functions import vector as V
-
-    dists = F.array(
-        *[
-            F.struct(
-                V.squared_l2_distance(
-                    F.col(vec_col), F.array(*[F.lit(x) for x in c])
-                ).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    topm = F.slice(F.array_sort(dists), 1, int(m))
-    return (
-        df.filter(F.col(vec_col).isNotNull())
-        .withColumn("__a", F.explode(topm))
-        .withColumn("cluster_id", F.col("__a.i").cast("int"))
-        .drop("__a")
+    tests/test_semdedup.py's overlapping-cluster bound.  The ranking is
+    :func:`ann.nearest_centroid_col`'s: native expressions below ~16k
+    inlined centroid values, the Arrow-batched blockscan GEMM above,
+    ties to the lowest id either way.  NULL vectors (and vectors with no
+    distance) are dropped."""
+    return df.filter(F.col(vec_col).isNotNull()).withColumn(
+        "cluster_id", F.explode(_rank_centroids(centroids, vec_col, m))
     )
 
 
@@ -207,32 +194,25 @@ def semantic_dup_edges(
     vec_col: str = "embedding",
     cluster_col: str = "cluster_id",
     max_cluster_size: int = 200_000,
-    block_elems: int = 1 << 22,
 ) -> DataFrame:
     """Within-cluster cosine-duplicate pairs: ``(id_a, id_b, cos_dist)``
     with ``id_a < id_b`` and ``1 - cos(a, b) < eps``.
 
-    One ``applyInPandas`` per cluster: rows are L2-normalized once, the
-    pairwise scan is a single float64 GEMM (S = X X^T), and only the
-    upper-triangle survivors are emitted.  The shuffle moving each vector
-    to its cluster is the ONLY corpus-wide exchange; edge output is
-    proportional to actual duplication, not to n^2.
+    One ``applyInPandas`` per cluster: rows are L2-normalized once and
+    the pairwise scan is the blockscan threshold reducer over the strict
+    upper triangle of S = X X^T (float64 GEMM tiles, tiles below the
+    diagonal skipped, peak memory bounded by ``blockscan.TILE``).  The
+    shuffle moving each vector to its cluster is the ONLY corpus-wide
+    exchange; edge output is proportional to actual duplication, not to
+    n^2.  A zero-norm vector has no cosine distance and is never a
+    candidate.
 
     A cluster larger than ``max_cluster_size`` raises inside the task
     (quadratic memory/compute on a degenerate cluster must be a loud
     refusal, not a straggler): raise ``k_clusters``, or pre-split hot
     clusters, and re-run.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_dist", T.DoubleType()),
-        ]
-    )
-    eps_f = float(eps)
-    cap = int(max_cluster_size)
-    blk = int(block_elems)
+    eps_f, cap, tile = float(eps), int(max_cluster_size), BS.TILE
 
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         m = len(pdf)
@@ -243,46 +223,16 @@ def semantic_dup_edges(
                 " would be O(m^2) — increase k_clusters (finer clusters)"
                 " or raise the cap explicitly."
             )
-        if m < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cos_dist": []}
-            ).astype({"id_a": "int64", "id_b": "int64", "cos_dist": "float64"})
-        ids = pdf["__id"].to_numpy(dtype=np.int64)
-        X = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
+        X, ok = BS.rows(pdf["__vec"].to_numpy(), unit=True)
+        ids = pdf["__id"].to_numpy(dtype=np.int64)[ok]
+        i, j, d = BS.pairs(X, X, "cosine", eps_f, "upper", tile)
+        return pd.DataFrame(
+            {
+                "id_a": np.minimum(ids[i], ids[j]),
+                "id_b": np.maximum(ids[i], ids[j]),
+                "cos_dist": d,
+            }
         )
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        X /= norms[:, None]
-        # Blocked upper-triangle GEMM: a full m x m similarity matrix on a
-        # 100k cluster is 80 GB; row blocks bound peak memory to
-        # ~32 MB/block (b * m * 8 bytes) while keeping BLAS throughput.
-        block = max(1, blk // max(m, 1))
-        outs = []
-        for s in range(0, m, block):
-            e = min(s + block, m)
-            S = X[s:e] @ X[s:].T  # only columns >= block start
-            bi, bj = np.nonzero(1.0 - S < eps_f)
-            gi = bi + s
-            gj = bj + s
-            keep = gj > gi  # strict upper triangle
-            if not keep.any():
-                continue
-            gi, gj = gi[keep], gj[keep]
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id_a": np.minimum(ids[gi], ids[gj]),
-                        "id_b": np.maximum(ids[gi], ids[gj]),
-                        "cos_dist": 1.0 - S[bi[keep], bj[keep]],
-                    }
-                )
-            )
-        if not outs:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cos_dist": []}
-            ).astype({"id_a": "int64", "id_b": "int64", "cos_dist": "float64"})
-        return pd.concat(outs, ignore_index=True)
 
     return (
         assigned
@@ -296,7 +246,7 @@ def semantic_dup_edges(
             F.col(vec_col).alias("__vec"),
         )
         .groupBy("__c")
-        .applyInPandas(per_cluster, out_schema)
+        .applyInPandas(per_cluster, "id_a long, id_b long, cos_dist double")
     )
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..operators import blockscan as BS
 from ..operators.semdedup import assign_to_centroids, kmeans_centroids
 from ..utils import spread
 from .stores import prepare_store, read_store, write_store_partitioned
@@ -59,17 +60,16 @@ fit_frozen_centroids = kmeans_centroids
 
 
 def _bipartite_edges(
-    scored: DataFrame,
-    eps: float,
-    max_store_cluster: int,
-    block_elems: int = 1 << 22,
+    scored: DataFrame, eps: float, max_store_cluster: int
 ) -> DataFrame:
     """Per-cluster bipartite duplicate scan: for every NEW row, distances
-    to ALL rows of its cluster (store + batch) as one row-blocked float64
-    GEMM — the same kernel shape as the batch operator's
-    ``semantic_dup_edges``, here restricted to new-row sources.  Input
-    rows carry ``(id, cluster_id, vec, is_new)`` with ``vec`` already
-    L2-normalized; emits ``(new_id, matched_id, cos_dist)`` where
+    to ALL rows of its cluster (store + batch) through the blockscan
+    threshold reducer — the one kernel the batch operator's
+    ``semantic_dup_edges`` uses too, here masked to new-row sources.
+    Input rows carry ``(id, cluster_id, vec, is_new)`` with ``vec``
+    already L2-normalized on write (so the kernel scores ``1 - a.b``
+    without normalizing again; a zero vector stays zero and never
+    matches); emits ``(new_id, matched_id, cos_dist)`` where
     ``matched_id`` is any store row or a SMALLER-id new row (each
     within-batch pair once).
 
@@ -81,23 +81,10 @@ def _bipartite_edges(
     the quadratic work would actually happen."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    out_schema = T.StructType(
-        [
-            T.StructField("new_id", T.LongType()),
-            T.StructField("matched_id", T.LongType()),
-            T.StructField("cos_dist", T.DoubleType()),
-        ]
-    )
-    eps_f, cap, blk = float(eps), int(max_store_cluster), int(block_elems)
+    eps_f, cap, tile = float(eps), int(max_store_cluster), BS.TILE
 
     def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"new_id": [], "matched_id": [], "cos_dist": []}
-        ).astype(
-            {"new_id": "int64", "matched_id": "int64", "cos_dist": "float64"}
-        )
         m = len(pdf)
         if m > cap:
             cid = int(pdf["cluster_id"].iloc[0])
@@ -110,45 +97,27 @@ def _bipartite_edges(
                 " centroids (rebuild the store), smaller batches if the"
                 " batch dominates, or raise the cap explicitly."
             )
-        flags = pdf["is_new"].to_numpy(dtype=bool)
-        if m < 2 or not flags.any():
-            return empty
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-        new_idx = np.nonzero(flags)[0]
-        Xn, new_ids = X[new_idx], ids[new_idx]
-        block = max(1, blk // m)
-        outs = []
-        for s in range(0, len(new_idx), block):
-            e = min(s + block, len(new_idx))
-            S = Xn[s:e] @ X.T
-            bi, bj = np.nonzero(1.0 - S < eps_f)
-            gi = new_idx[bi + s]  # position of the new row in pdf
-            keep = gi != bj  # never self
-            # within-batch pairs once: new-vs-new only when id is larger
-            both_new = flags[bj[keep]]
-            a_ids = new_ids[bi[keep] + s]
-            b_ids = ids[bj[keep]]
-            keep2 = ~both_new | (a_ids > b_ids)
-            if not keep2.any():
-                continue
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "new_id": a_ids[keep2],
-                        "matched_id": b_ids[keep2],
-                        "cos_dist": 1.0 - S[bi[keep], bj[keep]][keep2],
-                    }
-                )
-            )
-        if not outs:
-            return empty
-        return pd.concat(outs, ignore_index=True)
+        X, ok = BS.rows(pdf["vec"].to_numpy())
+        ids = pdf["id"].to_numpy(dtype=np.int64)[ok]
+        flags = pdf["is_new"].to_numpy(dtype=bool)[ok]
+        new_idx = np.flatnonzero(flags)
+
+        def keep(i, j):
+            # never self; a within-batch pair once, from its larger id
+            a = new_idx[i]
+            return (a != j) & (~flags[j] | (ids[a] > ids[j]))
+
+        i, j, d = BS.pairs(X[new_idx], X, "cosine", eps_f, keep, tile)
+        return pd.DataFrame(
+            {"new_id": ids[new_idx[i]], "matched_id": ids[j], "cos_dist": d}
+        )
 
     return (
         scored.select("id", "cluster_id", "vec", "is_new")
         .groupBy("cluster_id")
-        .applyInPandas(per_cluster, out_schema)
+        .applyInPandas(
+            per_cluster, "new_id long, matched_id long, cos_dist double"
+        )
     )
 
 

@@ -3,6 +3,8 @@
 
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
@@ -51,15 +53,76 @@ def test_knn_plan_is_take_ordered(spark, emb):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_knn_join_matches_window_variant(spark, emb):
-    probes = emb.filter(F.col("vec_id") < 5)
-    items = emb.filter(F.col("vec_id") >= 5)
-    kw = dict(k=3, metric="l2", probe_id="vec_id", item_id="vec_id")
-    fast = K.knn_join(probes, items, shuffle_free=True, **kw)
-    slow = K.knn_join(probes, items, shuffle_free=False, **kw)
-    f = sorted((r["probe_id"], r["item_id"], r["rank"]) for r in fast.collect())
-    s = sorted((r["probe_id"], r["item_id"], r["rank"]) for r in slow.collect())
-    assert f == s
+# Forced-arm property tests: small random tables whose rows are drawn
+# as kinds — a fresh vector, an exact duplicate of an earlier one (a
+# tie), NULL, one element short (wrong dimension), or all zeros (no
+# cosine distance).  Fresh vectors are seeded normals rounded to 0.01,
+# so distinct vectors never tie and every tie is bit-exact in both arms.
+_KINDS = ["vec", "vec", "vec", "dup", "null", "short", "zero"]
+_DIM = 4
+
+
+def _rows(kinds, seed, start=0, pool=()):
+    """``(id, vector)`` rows of the given kinds; duplicates copy a fresh
+    vector drawn earlier or one from ``pool`` (the other side's rows)."""
+    rng = np.random.default_rng(seed)
+    out, seen = [], [v for _, v in pool if v is not None and len(v) == _DIM]
+    for i, kind in enumerate(kinds):
+        if kind == "dup" and seen:
+            v = seen[int(rng.integers(len(seen)))]
+        elif kind == "null":
+            v = None
+        elif kind == "short":
+            v = [float(x) for x in (3 * rng.normal(size=_DIM - 1)).round(2)]
+        elif kind == "zero":
+            v = [0.0] * _DIM
+        else:
+            v = [float(x) for x in (3 * rng.normal(size=_DIM)).round(2)]
+            seen.append(v)
+        out.append((start + i, v))
+    return out
+
+
+def _kinds(kinds, lo, hi):
+    return st.lists(st.sampled_from(kinds), min_size=lo, max_size=hi)
+
+
+@given(
+    metric=st.sampled_from(["l2", "cosine", "dot"]),
+    k=st.integers(1, 4),
+    probe_kinds=_kinds(["vec", "dup", "null", "zero"], 1, 3),
+    item_kinds=_kinds(_KINDS, 0, 10),
+    seed=st.integers(0, 2**32 - 1),
+)
+@example(  # a zero-norm item under cosine: skipped, never ranked first
+    metric="cosine", k=2, probe_kinds=["vec"],
+    item_kinds=["vec", "zero", "vec"], seed=1,
+)
+@settings(max_examples=4, deadline=None)
+def test_knn_join_matches_window_variant(
+    spark, metric, k, probe_kinds, item_kinds, seed
+):
+    """Forced-arm equality: the bounded two-stage join (blockscan top-k)
+    and the native crossJoin + window form return the same
+    ``(probe, rank, item)`` rows and 4-decimal distances — ties to the
+    lower id, NULL / wrong-dimension rows skipped and, under cosine,
+    zero-norm probes and items skipped in both."""
+    schema = "vec_id long, embedding array<float>"
+    p_rows = _rows(probe_kinds, seed)
+    probes = spark.createDataFrame(p_rows, schema)
+    items = spark.createDataFrame(
+        _rows(item_kinds, seed + 1, start=100, pool=p_rows), schema
+    )
+    kw = dict(k=k, metric=metric, probe_id="vec_id", item_id="vec_id")
+
+    def arm(shuffle_free):
+        df = K.knn_join(probes, items, shuffle_free=shuffle_free, **kw)
+        return sorted(
+            (r["probe_id"], r["rank"], r["item_id"], round(r["dist"], 4))
+            for r in df.collect()
+        )
+
+    assert arm(True) == arm(False)
 
 
 def test_knn_join_matches_numpy(spark, emb, emb_np):
@@ -158,24 +221,33 @@ def _pairs(df):
 @pytest.mark.parametrize(
     "metric,threshold", [("l2", 6.0), ("cosine", 0.6), ("dot", -0.25)]
 )
-def test_blas_similarity_join_matches_native(spark, emb, metric, threshold):
-    """The GEMM kernel must produce the native form's exact pair set with
-    distances equal far beyond the 4-decimal rounding consumers apply."""
-    left = emb.select(F.col("vec_id").alias("lid"), "embedding")
-    right = emb.select(F.col("vec_id").alias("rid"), "embedding")
+@given(
+    left_kinds=_kinds(_KINDS, 0, 8),
+    right_kinds=_kinds(_KINDS, 0, 8),
+    seed=st.integers(0, 2**32 - 1),
+)
+@example(left_kinds=["vec", "zero"], right_kinds=["zero", "vec"], seed=1)
+@settings(max_examples=1, deadline=None)
+def test_blas_similarity_join_matches_native(
+    spark, metric, threshold, left_kinds, right_kinds, seed
+):
+    """Forced-arm equality: the GEMM kernel and the native form return
+    the same pair set with equal 4-decimal distances — a pair is scored
+    iff both vectors are non-NULL and equally long and, under cosine,
+    neither has zero norm."""
+    schema = "lid long, embedding array<float>"
+    l_rows = _rows(left_kinds, seed)
+    left = spark.createDataFrame(l_rows, schema)
+    right = spark.createDataFrame(
+        _rows(right_kinds, seed + 1, start=100, pool=l_rows), schema
+    ).withColumnRenamed("lid", "rid")
     kw = dict(metric=metric, left_id="lid", right_id="rid")
-    nat = _pairs(
-        K.similarity_join(
-            left, right, threshold, impl="native", max_pairs=None, **kw
-        )
-    )
-    gem = _pairs(K.similarity_join(left, right, threshold, impl="blas", **kw))
-    assert set(nat) == set(gem)
-    # l2 uses the |a|^2 - 2ab + |b|^2 expansion whose cancellation (then
-    # sqrt) costs ~1e-8 absolute vs the native elementwise-difference form;
-    # cosine/dot agree to ~1e-14.  Both are far inside the 4-decimal
-    # rounding every consumer applies.
-    assert max(abs(nat[p] - gem[p]) for p in nat) < 5e-7
+
+    def arm(impl, **extra):
+        df = K.similarity_join(left, right, threshold, impl=impl, **kw, **extra)
+        return {(r[0], r[1]): round(r[2], 4) for r in df.collect()}
+
+    assert arm("blas") == arm("native", max_pairs=None)
 
 
 def test_blas_similarity_join_swaps_to_broadcast_smaller_side(spark, emb):

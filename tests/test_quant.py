@@ -434,3 +434,41 @@ def test_sq8_knn_ignores_malformed_vectors(spark, emb, sq8):
     q = emb.select("embedding").first()[0]
     got = {r["vec_id"] for r in sq8.knn(enc, q, k=5).collect()}
     assert all(v < 1_000_000 for v in got) and len(got) == 5
+
+
+def test_adc_ties_break_to_lowest_ids(spark):
+    """Bit-identical vectors tie on ADC distance: every search form of
+    both index types must return the lowest ids, run after run, however
+    the tied rows are spread over partitions (the per-partition trim
+    and the global merge both order by (dist, id))."""
+    k, n = 3, 40
+    vec = [((i * 13) % 17 - 8) / 9.0 for i in range(8)]
+    items = spark.createDataFrame(
+        [(i, vec) for i in range(n)], "vec_id long, embedding array<double>"
+    ).repartition(4)
+    probes = spark.createDataFrame(
+        [(7, vec), (9, [-x for x in vec])], "probe_id long, embedding array<double>"
+    )
+    books = np.stack([np.arange(-4.0, 4.0)[:, None] * np.ones((8, 4))] * 2)
+    pq = Qz.PQCodebook.from_books(books)
+    enc = pq.encode(items).cache()
+    idx = Qz.IVFPQIndex.from_params(items, [vec, [-x for x in vec]], books)
+    idx.indexed = idx.indexed.repartition(4).cache()
+    assert enc.rdd.getNumPartitions() >= 4
+    assert idx.indexed.rdd.getNumPartitions() >= 4
+    lowest = list(range(k))
+    for _ in range(3):
+        assert [r["vec_id"] for r in pq.search(enc, vec, k=k).collect()] == lowest
+        assert [
+            r["vec_id"] for r in idx.search(vec, k=k, nprobe=1).collect()
+        ] == lowest
+        for got in (
+            pq.search_many(enc, probes, k=k),
+            idx.search_many(probes, shortlist=k, nprobe=2),
+        ):
+            per: dict = {}
+            for r in got.orderBy("probe_id", "dist", "vec_id").collect():
+                per.setdefault(r["probe_id"], []).append(r["vec_id"])
+            assert per == {7: lowest, 9: lowest}
+    enc.unpersist()
+    idx.indexed.unpersist()

@@ -159,23 +159,28 @@ def test_semantic_dedup_plan_shape(spark):
     assert sig.get("Exchange", 0) <= 1
 
 
-def test_semantic_dup_edges_blocked_equals_single_block(spark):
-    """The memory-bounding row-blocked GEMM must emit exactly the pairs
-    the single-block form does (forced tiny blocks -> many blocks)."""
+def test_semantic_dup_edges_blocked_equals_single_block(spark, monkeypatch):
+    """The memory-bounding tiled GEMM must emit exactly the pairs the
+    single-tile form does (a 64-value tile budget -> many tiles, most
+    below the diagonal and skipped)."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
+        blockscan as BS,
+    )
+
     items = A.synthetic_clustered_vectors(
         spark, 300, dim=8, n_centers=12, noise=0.02
     )
     assigned = S.cluster_assign(items, k_clusters=12)
 
-    def pairs(block_elems):
+    def pairs():
         return {
             (r["id_a"], r["id_b"], round(r["cos_dist"], 9))
-            for r in S.semantic_dup_edges(
-                assigned, eps=0.05, block_elems=block_elems
-            ).collect()
+            for r in S.semantic_dup_edges(assigned, eps=0.05).collect()
         }
 
-    assert pairs(block_elems=64) == pairs(block_elems=1 << 22)
+    single = pairs()
+    monkeypatch.setattr(BS, "TILE", 64)
+    assert pairs() == single
 
 
 def test_cluster_assign_sampled_fit_still_separates(spark):
@@ -279,10 +284,11 @@ class TestStreamingSemdedup:
 
 def test_assign_to_centroids_high_dim_takes_gemm_arm(spark):
     """Above ~16k inlined centroid values (17 x 1024-d here)
-    assign_to_centroids runs the Arrow-batched GEMM of
-    ann.nearest_centroid_col instead of a huge literal expression tree,
-    and still returns the exact argmin with ties to the lowest id
-    (centroid 16 duplicates centroid 3) and drops NULL vectors."""
+    assign_to_centroids and assign_to_centroids_topm run the
+    Arrow-batched GEMM of ann.nearest_centroid_col instead of a huge
+    literal expression tree, and still return the exact ranking with
+    ties to the lowest id (centroid 16 duplicates centroid 3) and drop
+    NULL vectors — what the literal arm does."""
     import numpy as np
 
     dim, k = 1024, 17
@@ -302,6 +308,24 @@ def test_assign_to_centroids_high_dim_takes_gemm_arm(spark):
     want = dict(enumerate(d.argmin(1).tolist()))  # first minimum wins
     assert 16 not in want.values()
     assert got == want
+
+    # m=2: the duplicated centroid is every 3-row's runner-up, ranked
+    # after 3 by id; the NULL row has no assignment at all.
+    top2 = S.assign_to_centroids_topm(df, cents.tolist(), m=2)
+    plan = top2._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan
+    got2: dict = {}
+    for r in top2.collect():
+        got2.setdefault(r["vec_id"], []).append(r["cluster_id"])
+    d2 = (cents * cents).sum(1)[None, :] - 2.0 * (
+        vecs.astype(np.float64) @ cents.T
+    )
+    want2 = {
+        i: row[:2].tolist()
+        for i, row in enumerate(np.argsort(d2, axis=1, kind="stable"))
+    }
+    assert got2 == want2
+    assert all(v == [3, 16] for i, v in want2.items() if i % k in (3, 16))
 
 
 def test_semantic_dedup_null_embeddings_pass_through(spark):
