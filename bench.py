@@ -6,9 +6,11 @@ full result JSON line {"metric": ..., "value": total_sec, "unit": "sec",
 driver artifact keeps only the final 2,000 chars of stdout, so the
 summary line guarantees the headline/pipeline totals and loadavg context
 survive even when the full line is truncated (VERDICT r10 #4).  Since
-r13 the summary line ALSO carries `value`/`queries` (the merged
-per-query minima) so the driver's PERF comparator and scaling block can
-read per-query seconds from the tail (VERDICT r12 #1).
+r13 the summary line ALSO carries per-query minima so the driver's PERF
+comparator and scaling block can read per-query seconds from the tail
+(VERDICT r12 #1): `value`/`queries` are the headline suite, as on the
+full line (value == sum(queries)), and the pipeline minima sit under
+`pipeline_queries` (pipeline_sec == their sum).
 """
 
 from __future__ import annotations
@@ -484,15 +486,10 @@ def main() -> None:
     # Compact one-line summary as the LAST stdout line (VERDICT r10 #4):
     # the driver's artifact keeps only the final 2,000 chars of stdout,
     # and BENCH_r10 lost its entire headline block to that cap (the full
-    # JSON above is ~4k chars).  r13 (VERDICT r12 #1): the driver's PERF
-    # comparator and scaling block read per-query seconds from the FINAL
-    # line, and they came back empty (`per_query: {}`, `n_common: 0`) for
-    # two rounds because this line carried totals only — so the final line
-    # now ALSO carries `value`/`queries` (the driver contract's shape):
-    # the merged per-query minima, headline names verbatim plus the
-    # pipeline members, with the pipeline arm of the one name collision
-    # (minhash_lsh_pairs runs in both suites) ADDED under a new name,
-    # `minhash_lsh_pairs_pipeline` — nothing removed or renamed.  Measured
+    # JSON above is ~4k chars).  The driver's PERF comparator and scaling
+    # block read per-query seconds from the FINAL line (VERDICT r12 #1),
+    # so it carries the headline minima as `value`/`queries` and the
+    # pipeline minima under their own `pipeline_queries` key.  Measured
     # length ~1.5k chars, inside the 2,000-char tail with margin; the full
     # spreads/loadavg-per-pass block above is unchanged for human readers.
     print(
@@ -500,8 +497,6 @@ def main() -> None:
             _summary_payload(
                 timings,
                 ptimings,
-                total,
-                ptotal,
                 ptotal_frozen,
                 ptotal_frozen_r10,
                 sf,
@@ -518,8 +513,6 @@ def main() -> None:
 def _summary_payload(
     timings: dict,
     ptimings: dict,
-    total: float,
-    ptotal: float,
     ptotal_frozen: float,
     ptotal_frozen_r10: float,
     sf: float,
@@ -530,23 +523,19 @@ def _summary_payload(
     pover: dict,
 ) -> dict:
     """The final stdout line's payload (separate function so its shape —
-    per-query keys present, merged-name collision policy, total length —
-    is pinned by tests/test_docs_consistency.py without running Spark)."""
-    merged = dict(timings)
-    for name, sec in ptimings.items():
-        key = name
-        if key in merged:
-            key = f"{name}_pipeline"
-            assert key not in merged, f"summary key collision: {key}"
-        merged[key] = sec
+    ``value == sum(queries)`` over the headline minima, the pipeline
+    minima nested under ``pipeline_queries``, total length — is pinned by
+    tests/test_docs_consistency.py without running Spark)."""
+    total = round(sum(timings.values()), 3)
     return {
         "metric": "bench_summary",
         "value": total,
         "unit": "sec",
         "sf": sf,
-        "queries": merged,
+        "queries": timings,
+        "pipeline_queries": ptimings,
         "headline_sec": total,
-        "pipeline_sec": ptotal,
+        "pipeline_sec": round(sum(ptimings.values()), 3),
         "pipeline_frozen7_sec": ptotal_frozen,
         "pipeline_frozen8_sec": ptotal_frozen_r10,
         "loadavg_start": load_start,

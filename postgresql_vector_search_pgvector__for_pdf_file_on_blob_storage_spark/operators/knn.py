@@ -229,7 +229,8 @@ def _bounded_topk_join(
     max_probe_rows: int = 100_000,
 ) -> DataFrame:
     """Stage 1 of the shuffle-bounded kNN join: per-partition top-k per
-    probe via ``mapInPandas`` (probe matrix as a closure, the blockscan
+    probe via ``mapInPandas`` (one probe matrix per probe length as a
+    closure, each scoring the items of its own length, the blockscan
     running top-k carried across Arrow batches), then stage 2: a
     k-bounded merge aggregation over O(partitions x probes x k) rows.
 
@@ -248,31 +249,33 @@ def _bounded_topk_join(
         " smaller side) or batch the probes; the exchange stays bounded"
         " either way.",
     )
-    rows = [r for r in rows if r[1]]
     unit = metric == "cosine"
-    P, ok = BS.rows([r[1] for r in rows], unit=unit)
-    pids = [r[0] for r, keep in zip(rows, ok) if keep]
+    groups = {}  # probe length -> (probe ids, prepared probe matrix)
+    for dim in sorted({len(r[1]) for r in rows if r[1]}):
+        P, ok = BS.rows([r[1] for r in rows], dim, unit)
+        if ok.any():
+            groups[dim] = ([r[0] for r, keep in zip(rows, ok) if keep], P)
     ptype = dict(probes.dtypes)[probe_id]
     itype = dict(items.dtypes)[item_id]
-    if not pids:
+    if not groups:
         return probes.sparkSession.createDataFrame(
             [], f"__pid {ptype}, __iid {itype}, __order double, rank int"
         )
-    dim = P.shape[1]
     tile = BS.TILE
 
     it = spread(
         items.select(
             F.col(item_id).alias("__iid"), F.col(item_vec).alias("__ivec")
         )
-    ).filter(F.col("__ivec").isNotNull() & (F.size("__ivec") == dim))
+    ).filter(F.size("__ivec").isin(list(groups)))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        top = BS.TopK(k, len(pids))
+        tops = {dim: BS.TopK(k, len(pids)) for dim, (pids, _) in groups.items()}
         for pdf in batches:
-            M, ok = BS.rows(pdf["__ivec"].to_numpy(), dim, unit)
-            top.scan(M, pdf["__iid"].to_numpy()[ok], P, metric, tile)
-        out = top.rows(pids)
+            for dim, (_, P) in groups.items():
+                M, ok = BS.rows(pdf["__ivec"].to_numpy(), dim, unit)
+                tops[dim].scan(M, pdf["__iid"].to_numpy()[ok], P, metric, tile)
+        out = [r for dim, (pids, _) in groups.items() for r in tops[dim].rows(pids)]
         if out:
             yield pd.DataFrame(out, columns=["__pid", "__iid", "__order"])
 
@@ -366,12 +369,12 @@ def similarity_join(
         max_broadcast_rows=max_broadcast_rows,
     )
     if impl == "blas":
-        return blas_similarity_join(left, right, **kw)
+        return blas_similarity_join(left, right, sizes=sizes, **kw)
     if impl == "auto":
         n_l, n_r = sizes if sizes is not None else (left.count(), right.count())
         if n_l * n_r > max_native_pairs:
             if min(n_l, n_r) <= max_broadcast_rows:
-                return blas_similarity_join(left, right, **kw)
+                return blas_similarity_join(left, right, sizes=(n_l, n_r), **kw)
             raise ValueError(
                 f"similarity_join: exact all-pairs scoring of {n_l} x {n_r}"
                 f" = {n_l * n_r} pairs with neither side under"
@@ -441,6 +444,7 @@ def blas_similarity_join(
     right_vec: str = "embedding",
     dist_col: str = "dist",
     max_broadcast_rows: int = 1_000_000,
+    sizes: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Exact range join via blocked GEMM — the scale path for
     ``similarity_join`` (VERDICT r02 #1's bucketed-exact variant, but
@@ -466,12 +470,14 @@ def blas_similarity_join(
 
     Distance is computed in float64; all three metrics are symmetric, so
     the kernel transparently swaps sides when ``left`` is the smaller one
-    and swaps the emitted columns back.
+    and swaps the emitted columns back.  ``sizes=(n_left, n_right)``
+    (``similarity_join`` passes the counts it dispatched on) spares the
+    one count() per side that picks the smaller side.
     """
     if left_id == right_id:
         raise ValueError("left_id and right_id must differ (join output)")
     _check_metric(metric)
-    n_l, n_r = left.count(), right.count()
+    n_l, n_r = sizes if sizes is not None else (left.count(), right.count())
     swap = n_l < n_r  # broadcast the smaller side
     if swap:
         small, small_id, small_vec = left, left_id, left_vec

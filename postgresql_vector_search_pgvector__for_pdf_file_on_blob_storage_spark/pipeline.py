@@ -40,6 +40,7 @@ from .functions import embed as E
 from .functions import text as X
 from .functions import vector as V
 from .operators import knn as K
+from .operators import resident as R
 from .sources import binary as B
 from .utils import spread
 
@@ -298,11 +299,21 @@ def search(
 ) -> DataFrame:
     """Embed the query text deterministically, then exact L2 top-k over the
     vector table, projecting the reference's four columns
-    (SSEOpenAIController.java:315-316; MAX_RESULT=5 at :86)."""
+    (SSEOpenAIController.java:315-316; MAX_RESULT=5 at :86).
+
+    A plain file scan of a table under the size bound is answered from
+    its resident block (``operators.resident``): no Spark job, and the
+    hits are a one-partition local relation, so summaries and SSE events
+    built over them never rescan the table.  Other inputs take the native
+    ``knn`` scan; both give the same rows and distances."""
     probe = E.hash_embed_py(query_text, dim)
+    cols = ("id", "origntext", "fileName", "pageNumber")
+    hits = R.search(chunks, probe, k, cols)
+    if hits is not None:
+        return hits
     return K.knn(
         chunks, probe, k=k, metric="l2", vec_col="embedding", tie_cols=("id",)
-    ).select("id", "origntext", "fileName", "pageNumber", "dist")
+    ).select(*cols, "dist")
 
 
 def deterministic_summarizer(max_sentences: int = 2):

@@ -138,12 +138,14 @@ def test_bench_pipeline_queries_resolve():
 
 
 def test_bench_summary_line_carries_per_query_seconds():
-    """VERDICT r12 #1: the driver keeps only the final 2,000 stdout chars
-    and reads per-query seconds from the LAST JSON line.  Pin that the
-    summary payload (a) has the driver-contract shape (metric/value/unit/
-    queries/sf), (b) carries EVERY headline and pipeline member (the one
-    name collision, minhash_lsh_pairs, added under a distinct new name),
-    and (c) serializes under 2,000 chars with realistic values."""
+    """VERDICT r12 #1 and ADVICE r13: the driver keeps only the final
+    2,000 stdout chars and reads per-query seconds from the LAST JSON
+    line.  Pin that the summary payload (a) has the driver-contract shape
+    (metric/value/unit/queries/sf) with ``value == sum(queries)`` over
+    the headline minima, as on the full result line, (b) carries every
+    pipeline member under ``pipeline_queries``, with ``pipeline_sec``
+    their sum, and (c) serializes under 2,000 chars with realistic
+    values."""
     import json
 
     import bench
@@ -153,8 +155,6 @@ def test_bench_summary_line_carries_per_query_seconds():
     payload = bench._summary_payload(
         timings,
         ptimings,
-        321.012,
-        123.456,
         99.999,
         111.111,
         0.1,
@@ -166,26 +166,10 @@ def test_bench_summary_line_carries_per_query_seconds():
     )
     for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in payload, key
-    q = payload["queries"]
-    for name in bench.HEADLINE:
-        assert name in q, name
-    for name in ptimings:
-        assert name in q or f"{name}_pipeline" in q, name
-    # headline + pipeline with exactly one collision-renamed member
-    assert len(q) == len(timings) + len(ptimings)
-    assert "minhash_lsh_pairs_pipeline" in q
+    assert payload["queries"] == timings
+    assert payload["value"] == round(sum(payload["queries"].values()), 3)
+    assert payload["pipeline_queries"] == ptimings
+    assert "minhash_lsh_pairs" in ptimings and "minhash_lsh_pairs" in timings
+    assert payload["pipeline_sec"] == round(sum(ptimings.values()), 3)
     line = json.dumps(payload)
     assert len(line) < 2000, len(line)
-
-
-def test_bench_summary_rename_collision_fails_loudly():
-    """A pipeline member whose renamed key ``<name>_pipeline`` is already
-    taken must fail at the source, not overwrite a timing."""
-    import bench
-
-    timings = {"q": 1.0, "q_pipeline": 2.0}
-    with pytest.raises(AssertionError, match="q_pipeline"):
-        bench._summary_payload(
-            timings, {"q": 3.0}, 3.0, 3.0, 3.0, 3.0, 0.1, [], [], 0, {}, {}
-        )
-

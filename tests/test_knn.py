@@ -90,13 +90,17 @@ def _kinds(kinds, lo, hi):
 @given(
     metric=st.sampled_from(["l2", "cosine", "dot"]),
     k=st.integers(1, 4),
-    probe_kinds=_kinds(["vec", "dup", "null", "zero"], 1, 3),
+    probe_kinds=_kinds(["vec", "dup", "null", "short", "zero"], 1, 3),
     item_kinds=_kinds(_KINDS, 0, 10),
     seed=st.integers(0, 2**32 - 1),
 )
 @example(  # a zero-norm item under cosine: skipped, never ranked first
     metric="cosine", k=2, probe_kinds=["vec"],
     item_kinds=["vec", "zero", "vec"], seed=1,
+)
+@example(  # probes of two lengths: each scores the items of its own
+    metric="l2", k=2, probe_kinds=["vec", "short"],
+    item_kinds=["vec", "short", "vec", "short"], seed=3,
 )
 @settings(max_examples=4, deadline=None)
 def test_knn_join_matches_window_variant(
@@ -105,8 +109,9 @@ def test_knn_join_matches_window_variant(
     """Forced-arm equality: the bounded two-stage join (blockscan top-k)
     and the native crossJoin + window form return the same
     ``(probe, rank, item)`` rows and 4-decimal distances — ties to the
-    lower id, NULL / wrong-dimension rows skipped and, under cosine,
-    zero-norm probes and items skipped in both."""
+    lower id, each probe scored against the items of its own length
+    (NULL rows and other lengths skipped) and, under cosine, zero-norm
+    probes and items skipped in both."""
     schema = "vec_id long, embedding array<float>"
     p_rows = _rows(probe_kinds, seed)
     probes = spark.createDataFrame(p_rows, schema)
@@ -326,3 +331,27 @@ def test_similarity_join_sizes_param_drives_dispatch(spark):
         )
     out = K.similarity_join(l, r, threshold=10.0, sizes=(2, 2)).collect()
     assert len(out) == 4  # all pairs within threshold 10
+
+
+def test_similarity_join_blas_arm_counts_once(spark):
+    """The auto dispatch counts both sides once and hands the counts to
+    the GEMM kernel, which does not count them again: building a 60 x 60
+    join past ``max_native_pairs`` runs 7 jobs (11 when the kernel
+    recounted)."""
+    rows = [(i, [float(i % 7), float(i % 5)]) for i in range(60)]
+    items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    l = items.select(F.col("vec_id").alias("left_id"), "embedding")
+    r = items.select(F.col("vec_id").alias("right_id"), "embedding")
+    sc, group = spark.sparkContext, "similarity-join-blas-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = K.similarity_join(l, r, threshold=1.5, max_native_pairs=1000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert "MapInPandas" in out._jdf.queryExecution().executedPlan().toString()
+    assert out.count() == sum(
+        (a[1][0] - b[1][0]) ** 2 + (a[1][1] - b[1][1]) ** 2 < 1.5**2
+        for a in rows for b in rows
+    )
