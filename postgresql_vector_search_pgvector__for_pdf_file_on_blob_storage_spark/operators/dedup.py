@@ -822,8 +822,8 @@ def simhash64(c: Column | str, n: int = 3) -> Column:
 # provably identical: both paths label every endpoint with the minimum
 # id of its component.  Above the cap the distributed loop runs
 # unchanged (edges of a 100 TB near-dup graph are proportional to real
-# duplication and can be billions of rows).  Conf-tunable for cluster
-# deployments: spark.graft.components.localMaxEdges (0 disables).
+# duplication and can be billions of rows).  Callers override it with
+# connected_components_star(local_max_edges=...) (0 disables).
 COMPONENTS_LOCAL_MAX_EDGES = 1_000_000
 
 _INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -871,7 +871,7 @@ def connected_components_star(
     id_b: str = "id_b",
     max_iter: int = 50,
     on_max_iter: str = "raise",
-    local_max_edges: int | None = None,
+    local_max_edges: int = COMPONENTS_LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -901,10 +901,8 @@ def connected_components_star(
     labels.  Only the distributed loop iterates; the union-find arm
     ignores ``max_iter``.
 
-    ``local_max_edges`` (default: the
-    ``spark.graft.components.localMaxEdges`` conf, else
-    ``COMPONENTS_LOCAL_MAX_EDGES``): edge lists at or below this bound
-    are contracted with exact min-id union-find on the driver instead —
+    ``local_max_edges``: edge lists at or below this bound are
+    contracted with exact min-id union-find on the driver instead —
     identical output, none of the per-round job overhead (see the
     dispatch comment above).  0 forces the distributed loop.
     """
@@ -929,16 +927,6 @@ def connected_components_star(
     # evaluated exactly once either way.  Integral ids only — Python and
     # UTF8String disagree on string ordering in edge cases, so non-
     # integral ids always take the distributed path.
-    if local_max_edges is None:
-        try:
-            local_max_edges = int(
-                e.sparkSession.conf.get(
-                    "spark.graft.components.localMaxEdges",
-                    str(COMPONENTS_LOCAL_MAX_EDGES),
-                )
-            )
-        except Exception:
-            local_max_edges = COMPONENTS_LOCAL_MAX_EDGES
     if (
         local_max_edges > 0
         and isinstance(e.schema["a"].dataType, _INTEGRAL_TYPES)
@@ -1322,22 +1310,20 @@ def curation_v2_kept(
     )
 
 
-# checkpoint_kept size-dispatch thresholds (VERDICT r11 #5).  The A/B
-# evidence: off wins ~1.5 s at sf0.1 (5k docs) and still wins at sf1
-# (50k); on is measured -30% at 3M docs (BASELINE.md r11).  1M sits at
-# the scale where the r11 probes first showed repeated-kept evaluation
-# dominating the composed wall; the byte twin assumes the probes'
-# ~500 B/doc synthetic rows.
-CHECKPOINT_KEPT_MIN_DOCS = 1_000_000
+# Size at which the exact-dedup survivor set gets its own boundary in
+# the in-session form (VERDICT r11 #5).  The A/B evidence: without it
+# the composed run wins ~1.5 s at sf0.1 (5k docs) and still wins at sf1
+# (50k); with it the run is measured -30% at 3M docs (BASELINE.md r11).
+# At the scale probes' ~477 B/doc synthetic rows, 512 MiB is ~1.13M docs.
 CHECKPOINT_KEPT_MIN_BYTES = 512 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's ``sizeInBytes`` estimate for ``df`` — the zero-action
-    size signal the ``checkpoint_kept`` auto-dispatch reads (file size
-    for scans, accurate in-memory size for cached inputs).  ``None``
-    when the JVM internals are unreachable (the dispatch then keeps the
-    fixture-honest False)."""
+    size signal that places the kept boundary (file size for scans,
+    accurate in-memory size for cached inputs).  ``None`` when the JVM
+    internals are unreachable (no kept boundary then, the fixture-honest
+    choice)."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -1370,21 +1356,6 @@ def _stage_table(spark, root: str, name: str, build) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _resolve_checkpoint_kept(
-    docs: DataFrame, checkpoint_kept: bool | None, n_docs: int | None
-) -> bool:
-    """The ``checkpoint_kept`` auto-dispatch: an explicit bool wins; a
-    caller-supplied ``n_docs`` size contract is next (zero actions, the
-    similarity_join ``sizes=`` precedent); else the Catalyst byte
-    estimate.  Unit-tested directly in tests/test_dedup.py."""
-    if checkpoint_kept is not None:
-        return bool(checkpoint_kept)
-    if n_docs is not None:
-        return int(n_docs) >= CHECKPOINT_KEPT_MIN_DOCS
-    sz = _plan_size_bytes(docs)
-    return sz is not None and sz >= CHECKPOINT_KEPT_MIN_BYTES
-
-
 def curate_corpus_v2(
     docs: DataFrame,
     text_col: str = "text",
@@ -1400,8 +1371,6 @@ def curate_corpus_v2(
     strip_spans: bool = False,
     strip_n: int = 8,
     strip_min_docs: int = 2,
-    checkpoint_kept: bool | None = None,
-    n_docs: int | None = None,
     dsir_hash: str = "md5",
     staged_root: str | None = None,
     pairs: DataFrame | None = None,
@@ -1458,28 +1427,27 @@ def curate_corpus_v2(
     bounded-histogram tercile fold; 3 shuffles fingerprints; 4's pair
     cost is df-capped/banded and paid once; 5-6 are id-keyed joins
     against the (small) component table; 7's bucket stats are <= m rows
-    broadcast back.  The survivor set is ``localCheckpoint``-ed before
-    selection because DSIR's threshold and flag branches both consume it
-    — without the boundary the whole upstream pipeline would execute
-    three times (AQE exchange reuse does not cross the TakeOrdered
-    threshold branch).
+    broadcast back.
 
-    ``checkpoint_kept=True`` adds a lazy boundary on the exact-dedup
-    survivor set — the corpus-scale setting (r11 3M probe: the composed
-    run otherwise pays ~2x its staged-eager stage sum re-evaluating that
-    subtree for the pair graph / split / surv consumers); at fixture
-    scale the copy measurably loses (~1.5 s at sf0.1).  The default
-    ``None`` SIZE-DISPATCHES it (VERDICT r11 #5, the similarity_join
-    ``sizes=`` precedent): callers that know the corpus size pass
-    ``n_docs`` and the boundary auto-enables at
-    ``CHECKPOINT_KEPT_MIN_DOCS`` (1M — between the sf1 50k where off
-    still wins and the 3M where on is measured -30%); otherwise a
-    ZERO-action Catalyst ``sizeInBytes`` estimate of ``docs`` stands in
-    at ``CHECKPOINT_KEPT_MIN_BYTES`` (512 MiB ≈ 1M docs at the probes'
-    ~500 B/doc).  Fixture queries (sf0.1, ~5 MB) dispatch to off —
-    bench rows unchanged; the corpus probes dispatch to on.  With
-    ``strip_spans=True`` the boundary is always on (the strip subtree
-    tips the tradeoff at every scale measured).
+    Stage boundaries.  The chain runs once; four subtrees — ``gated2``
+    (stages 1-2), ``kept`` (3-3b), ``pairs`` (4) and ``surv`` (5-6) —
+    are its boundaries.  In-session (no ``staged_root``) a boundary is a
+    lazy ``localCheckpoint``:
+
+    - ``gated2`` always: it feeds five consumers (fingerprint agg, kept
+      join, pair graph, split join, survivor join);
+    - ``surv`` always: DSIR's threshold and flag branches both consume
+      it, and without the boundary the whole upstream pipeline would run
+      three times (AQE exchange reuse does not cross the TakeOrdered
+      threshold branch);
+    - ``kept`` when ``strip_spans`` is set (the strip subtree tips the
+      tradeoff at every scale measured) or when the zero-action Catalyst
+      ``sizeInBytes`` estimate of ``docs`` reaches
+      ``CHECKPOINT_KEPT_MIN_BYTES`` (512 MiB, ~1.1M docs of the scale
+      probes' rows: the r11 3M probe paid ~2x its staged sum
+      re-evaluating this subtree, while at fixture scale the copy loses
+      ~1.5 s at sf0.1);
+    - ``pairs`` never: components checkpoint their own edge projection.
 
     ``min_stops`` exists because the stop-word rule is corpus-specific:
     on non-English or synthetic corpora (the driver fixtures are
@@ -1488,15 +1456,17 @@ def curate_corpus_v2(
     ``min_stops=0`` (the rule trivially true, the other four rules
     live) and says so.
 
-    ``staged_root`` (VERDICT r11 #2) switches every boundary from a
-    session-lifetime ``localCheckpoint`` to a PERSISTED parquet stage
-    table (``<root>/{gated2,kept,pairs,surv}``) with skip-if-present
-    resume: a run killed between stages is re-invoked with the same
-    root and recomputes only the unfinished stages (see
+    ``staged_root`` (VERDICT r11 #2) makes all four boundaries PERSISTED
+    parquet stage tables (``<root>/{gated2,kept,pairs,surv}``) with
+    skip-if-present resume: a run killed between stages is re-invoked
+    with the same root and recomputes only the unfinished stages (see
     :func:`_stage_table`) — the multi-job form a corpus-scale curation
     run needs, bit-identical to the in-session form (pinned in
-    tests/test_dedup.py).  The ``checkpoint_kept`` knob is moot in this
-    mode (stage tables ARE durable boundaries).
+    tests/test_dedup.py).  The scalar parameters that decide the stage
+    tables are pinned to the root (:func:`utils.pin_marker`, marker
+    ``_params=<hash>``): a rerun with other ones raises instead of
+    returning stale stages.  The DSIR parameters are not pinned — the
+    final join is recomputed every run — and neither is the input data.
 
     ``pairs`` (r12, VERDICT r11 #4's named pair-graph attack) supplies a
     MAINTAINED near-dup pair graph — e.g. the incremental band store's
@@ -1511,198 +1481,61 @@ def curate_corpus_v2(
     maintains."""
     from .selection import dsir_select as _dsir_select
 
-    if staged_root is not None:
-        return _curate_corpus_v2_staged(
-            docs, text_col, id_col, lang_col, target_lang, min_stops,
-            jaccard_threshold, max_df, k_select, m_buckets, use_minhash,
-            strip_spans, strip_n, strip_min_docs, dsir_hash, staged_root,
-            pairs, observation,
-        )
-    checkpoint_kept = _resolve_checkpoint_kept(docs, checkpoint_kept, n_docs)
-
-    # The gate+tercile survivor set feeds FIVE downstream consumers
-    # (fingerprint agg, kept join, pair graph, split join, survivor
-    # join); without a boundary each re-evaluates the scan + the
-    # interpreted Gopher HOF projection + the surprisal join.  One
-    # lazy localCheckpoint here measured 21.8 s -> 12.9 s for the whole
-    # pipeline at sf0.1 (A/B r10; also tried kept — materializing a
-    # second copy LOST ~1.5 s, so only this boundary ships).  The
-    # 100 TB analog is staging the gated corpus to storage between
-    # pipeline phases — which a real multi-job curation run does anyway.
-    gated2 = curation_v2_gated(
-        docs, text_col, id_col, lang_col, min_stops
-    ).localCheckpoint(eager=False)
-    kept = curation_v2_kept(gated2, strip_spans, strip_n, strip_min_docs)
-    if strip_spans or checkpoint_kept:
-        # The exact-dedup (+ optional strip) survivor set feeds the pair
-        # graph, the split join, and the surv join — WITHOUT a boundary
-        # each consumer re-runs the subtree past the gated2 checkpoint
-        # (fingerprint agg + join; with strip also the distinct-gram
-        # exchange + doc-frequency agg + span cut).  Measured:
-        # - strip path, sf0.1 (r11, loadavg ~5-8 both sides): min-of-3
-        #   21.4 s -> 17.5 s for curation_v3_pipeline — always on.
-        # - plain path: at sf0.1 the copy LOSES ~1.5 s (4.4k survivors —
-        #   the write costs more than the re-evaluations it saves), but
-        #   the r11 3M-doc probe's per-stage walls showed the composed
-        #   run paying ~2x its staged-eager sum to repeated kept
-        #   evaluation — ``checkpoint_kept=True`` is the corpus-scale
-        #   setting (the probe's recorded A/B in BASELINE.md); the
-        #   fixture default stays False so the bench rows remain
-        #   comparable and honest about the small-scale tradeoff.
-        kept = kept.localCheckpoint(eager=False)
-    if pairs is not None:
-        # MAINTAINED pair graph (r12, VERDICT r11 #4's named attack):
-        # the caller supplies candidate-verified near-dup pairs — e.g.
-        # the incremental band store's matches log
-        # (streaming/curation.py), already accumulated while the corpus
-        # ingested — and the from-scratch banded pair computation (the
-        # top stage wall at >=10M docs) is skipped entirely.  The pairs
-        # may cover ALL gated docs; restricting both endpoints to the
-        # exact-dedup survivors reproduces the operator's own pair set
-        # exactly (per-doc MinHash signatures make banding pair-local —
-        # the kept-kept restriction argument, streaming/curation.py
-        # module doc; bit-identity pinned in tests/test_dedup.py).
-        kept_ids = kept.select("id")
-        pairs = (
-            pairs.select("id_a", "id_b")
-            .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
-            .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
-        )
-    elif use_minhash:
-        pairs = minhash_lsh_pairs(
-            kept, "text", "id", n=3, threshold=jaccard_threshold,
-            max_df=max_df, observation=observation,
-        )
-    else:
-        pairs = jaccard_pairs(
-            kept, "text", "id", n=3, threshold=jaccard_threshold,
-            max_df=max_df, observation=observation,
-        )
-    assign = leakage_safe_split(kept, "text", "id", pairs=pairs)
-    csize = assign.groupBy("cluster_rep").agg(
-        F.count("*").cast("long").alias("near_dups")
-    )
-    surv = (
-        kept.join(assign, "id")
-        .filter(F.col("id") == F.col("cluster_rep"))
-        .join(csize, "cluster_rep")
-        .localCheckpoint(eager=False)
-    )
-    # dsir_hash: the feature-string hash family.  "md5" (default) is the
-    # oracle-checkable family the fixture queries pin; at corpus scale
-    # the DSIR stage is HASH-BOUND (r11 10M diagnostic: 558 s ≈ 690M
-    # features at md5's ~1.2M feat/s/core-set) and "xx64" — the same
-    # engine-native family the selection probe records at 2.45M feat/s —
-    # roughly halves it.  Selection SEMANTICS are hash-family-independent
-    # (both are uniform bucket maps); only the exact bucket assignment
-    # differs, which is why the oracle pins one family.
-    sel = _dsir_select(
-        surv.select("id", "lang", "text"),
-        F.col("lang") == F.lit(target_lang),
-        k=k_select,
-        m=m_buckets,
-        text_col="text",
-        id_col="id",
-        bigrams=True,
-        hash_fn=dsir_hash,
-    )
-    return surv.join(sel, "id").select(
-        F.col("id").alias(id_col),
-        "lang",
-        "n_words",
-        "bits_per_token_ppm",
-        "bucket",
-        "exact_dups",
-        "stripped_tokens",
-        "near_dups",
-        "split",
-        "n_feats",
-        "score_bits",
-        "mean_milli",
-        "selected",
-    )
-
-
-def _curate_corpus_v2_staged(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    lang_col: str,
-    target_lang: str,
-    min_stops: int,
-    jaccard_threshold: float,
-    max_df: int | None,
-    k_select: int,
-    m_buckets: int,
-    use_minhash: bool,
-    strip_spans: bool,
-    strip_n: int,
-    strip_min_docs: int,
-    dsir_hash: str,
-    staged_root: str,
-    ext_pairs,
-    observation,
-) -> DataFrame:
-    """The resumable multi-job form of :func:`curate_corpus_v2` — the
-    SAME stage operators in the SAME order, with every boundary a
-    persisted parquet stage table instead of a ``localCheckpoint``
-    (:func:`_stage_table`: skip-if-``_SUCCESS`` resume, the build thunk
-    never constructed for a finished stage).  Stage list = the four
-    subtrees the in-session form already boundaries (gated2, kept,
-    pairs, surv); the final DSIR join is the returned result, not a
-    stage.  Bit-identity with the in-session form and kill-between-
-    stages resume are pinned in tests/test_dedup.py.
-
-    The scalar parameters that decide the stage tables are pinned to
-    ``staged_root`` (:func:`utils.pin_marker`, marker ``_params=<hash>``):
-    a rerun with other ones raises instead of returning stale stages.
-    The DSIR parameters are not pinned — the final join is recomputed
-    every run — and neither is the input data."""
-    from .selection import dsir_select as _dsir_select
-
     spark = docs.sparkSession
-    params = dict(
-        text_col=text_col, id_col=id_col, lang_col=lang_col,
-        min_stops=min_stops, strip_spans=strip_spans, strip_n=strip_n,
-        strip_min_docs=strip_min_docs, use_minhash=use_minhash,
-        jaccard_threshold=jaccard_threshold, max_df=max_df,
-    )
-    pin_marker(
-        spark, staged_root, "params",
-        hashlib.sha1(repr(params).encode()).hexdigest()[:16],
-        "curate_corpus_v2",
-        f"its stage tables were built with other parameters (this call:"
-        f" {params}); use a fresh staged_root",
-    )
-    gated2 = _stage_table(
-        spark, staged_root, "gated2",
-        lambda: curation_v2_gated(docs, text_col, id_col, lang_col, min_stops),
-    )
-    kept = _stage_table(
-        spark, staged_root, "kept",
-        lambda: curation_v2_kept(gated2, strip_spans, strip_n, strip_min_docs),
-    )
-    pair_fn = minhash_lsh_pairs if use_minhash else jaccard_pairs
+    if staged_root is not None:
+        params = dict(
+            text_col=text_col, id_col=id_col, lang_col=lang_col,
+            min_stops=min_stops, strip_spans=strip_spans, strip_n=strip_n,
+            strip_min_docs=strip_min_docs, use_minhash=use_minhash,
+            jaccard_threshold=jaccard_threshold, max_df=max_df,
+        )
+        pin_marker(
+            spark, staged_root, "params",
+            hashlib.sha1(repr(params).encode()).hexdigest()[:16],
+            "curate_corpus_v2",
+            f"its stage tables were built with other parameters (this call:"
+            f" {params}); use a fresh staged_root",
+        )
 
-    def _build_pairs() -> DataFrame:
-        if ext_pairs is not None:
-            # maintained pair graph, kept-kept restricted (see the
-            # in-session form's comment at the same seam)
+    def stage(name: str, build, keep: bool) -> DataFrame:
+        if staged_root is not None:
+            return _stage_table(spark, staged_root, name, build)
+        return build().localCheckpoint(eager=False) if keep else build()
+
+    gated2 = stage(
+        "gated2",
+        lambda: curation_v2_gated(docs, text_col, id_col, lang_col, min_stops),
+        True,
+    )
+    kept = stage(
+        "kept",
+        lambda: curation_v2_kept(gated2, strip_spans, strip_n, strip_min_docs),
+        strip_spans
+        or (_plan_size_bytes(docs) or 0) >= CHECKPOINT_KEPT_MIN_BYTES,
+    )
+
+    def build_pairs() -> DataFrame:
+        if pairs is not None:
+            # maintained pair graph, restricted to kept-kept pairs (the
+            # per-doc MinHash signatures make banding pair-local — the
+            # kept-kept restriction argument, streaming/curation.py
+            # module doc)
             kept_ids = kept.select("id")
             return (
-                ext_pairs.select("id_a", "id_b")
+                pairs.select("id_a", "id_b")
                 .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
                 .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
             )
+        pair_fn = minhash_lsh_pairs if use_minhash else jaccard_pairs
         return pair_fn(
             kept, "text", "id", n=3, threshold=jaccard_threshold,
             max_df=max_df, observation=observation,
         )
 
-    pairs = _stage_table(spark, staged_root, "pairs", _build_pairs)
+    graph = stage("pairs", build_pairs, False)
 
-    def _build_surv() -> DataFrame:
-        assign = leakage_safe_split(kept, "text", "id", pairs=pairs)
+    def build_surv() -> DataFrame:
+        assign = leakage_safe_split(kept, "text", "id", pairs=graph)
         csize = assign.groupBy("cluster_rep").agg(
             F.count("*").cast("long").alias("near_dups")
         )
@@ -1712,7 +1545,15 @@ def _curate_corpus_v2_staged(
             .join(csize, "cluster_rep")
         )
 
-    surv = _stage_table(spark, staged_root, "surv", _build_surv)
+    surv = stage("surv", build_surv, True)
+    # dsir_hash: the feature-string hash family.  "md5" (default) is the
+    # oracle-checkable family the fixture queries pin; at corpus scale
+    # the DSIR stage is HASH-BOUND (r11 10M diagnostic: 558 s ≈ 690M
+    # features at md5's ~1.2M feat/s/core-set) and "xx64" — the same
+    # engine-native family the selection probe records at 2.45M feat/s —
+    # roughly halves it.  Selection SEMANTICS are hash-family-independent
+    # (both are uniform bucket maps); only the exact bucket assignment
+    # differs, which is why the oracle pins one family.
     sel = _dsir_select(
         surv.select("id", "lang", "text"),
         F.col("lang") == F.lit(target_lang),

@@ -58,9 +58,8 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition immediately after the read").  Results are bit-identical
     by construction: the sums are exact decimals (order-independent), so
     no partitioning can change them.  Measured at sf0.1: 1.5-1.8 s ->
-    0.9-1.4 s (alternating A/B, 4 reps).  No-op on many-file corpora /
-    cluster deployments (spark.graft.spread.enabled, and partitions
-    already >= cores).  The same move measurably LOSES on q18 / the
+    0.9-1.4 s (alternating A/B, 4 reps).  No-op on many-file corpora
+    whose partitions already reach the core count.  The same move measurably LOSES on q18 / the
     events windows (their subtrees feed keyed exchanges anyway), so it is
     applied only here."""
     l = spread(

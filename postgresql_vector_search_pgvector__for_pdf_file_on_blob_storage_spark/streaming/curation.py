@@ -450,6 +450,40 @@ def curation_v2_survivors(
     )
 
 
+def _drain_stream(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    store_root: str,
+    checkpoint: str,
+    max_files_per_trigger: int | None,
+    maintain_batch,
+    **kwargs,
+):
+    """Parquet-directory source -> ``maintain_batch(batch, store_root,
+    epoch_id=..., **kwargs)`` per micro-batch, drained with AvailableNow.
+    A torn band store left by a killed batch is recovered first."""
+    from .stores import recover_store
+
+    recover_store(spark, f"{store_root}/bands")
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        maintain_batch(batch_df, store_root, epoch_id=epoch_id, **kwargs)
+
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option(
+            "maxFilesPerTrigger", int(max_files_per_trigger)
+        )
+    return (
+        reader.parquet(input_dir)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def curation_v2_maintenance_stream(
     spark: SparkSession,
     input_dir: str,
@@ -468,35 +502,12 @@ def curation_v2_maintenance_stream(
     """Streaming wrapper for the v2 maintenance: parquet-directory
     source -> per-micro-batch :func:`curation_v2_maintain_batch`.
     Same restart semantics as :func:`curation_maintenance_stream`."""
-    from .stores import recover_store
-
-    recover_store(spark, f"{store_root}/bands")
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        curation_v2_maintain_batch(
-            batch_df,
-            store_root,
-            text_col=text_col,
-            id_col=id_col,
-            lang_col=lang_col,
-            min_stops=min_stops,
-            threshold=threshold,
-            m_buckets=m_buckets,
-            dsir_hash=dsir_hash,
-            epoch_id=epoch_id,
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_stream(
+        spark, input_dir, schema, store_root, checkpoint,
+        max_files_per_trigger, curation_v2_maintain_batch,
+        text_col=text_col, id_col=id_col, lang_col=lang_col,
+        min_stops=min_stops, threshold=threshold, m_buckets=m_buckets,
+        dsir_hash=dsir_hash,
     )
 
 
@@ -520,32 +531,9 @@ def curation_maintenance_stream(
     and the fingerprint/band/shingle/matches stores carry accepted state
     across sessions — call :func:`curation_survivors` any time for the
     current accepted set."""
-    from .stores import recover_store
-
-    recover_store(spark, f"{store_root}/bands")
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        curation_maintain_batch(
-            batch_df,
-            store_root,
-            text_col=text_col,
-            id_col=id_col,
-            lang_col=lang_col,
-            langs=langs,
-            min_tokens=min_tokens,
-            threshold=threshold,
-            epoch_id=epoch_id,
-        )
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_stream(
+        spark, input_dir, schema, store_root, checkpoint,
+        max_files_per_trigger, curation_maintain_batch,
+        text_col=text_col, id_col=id_col, lang_col=lang_col, langs=langs,
+        min_tokens=min_tokens, threshold=threshold,
     )

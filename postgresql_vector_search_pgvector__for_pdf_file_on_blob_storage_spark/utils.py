@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-SPREAD_CONF = "spark.graft.spread.enabled"
-
 
 def log_observed_drops(observation, logger=None) -> dict:
     """Read an ``Observation``'s metrics after the consuming action and log
@@ -47,18 +45,12 @@ def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
 
     Fixture tables are single parquet files -> one input partition, which
     serializes every expensive per-row stage (shingling, UDFs) onto one
-    core.  On a real many-file dataset this is unnecessary — and the
-    partition-count probe itself (``df.rdd.getNumPartitions()``) is an
-    eager planner round-trip that a library primitive should not pay per
-    query (VERDICT r01) — so cluster deployments set
-    ``spark.graft.spread.enabled=false`` to make this a zero-cost no-op.
-    When enabled (the default, right for local/fixture runs) the probe
-    keeps the guarantee that partitioning is never *reduced*.
+    core.  On a many-file dataset that already has enough partitions it
+    is a no-op, and partitioning is never *reduced*.  The
+    partition-count probe (``df.rdd.getNumPartitions()``) is an eager
+    planner round-trip, paid on every call (VERDICT r01).
     """
-    sess = df.sparkSession
-    if sess.conf.get(SPREAD_CONF, "true") != "true":
-        return df
-    target = sess.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -110,8 +110,7 @@ def main_v2(n_batches: int, batch_docs: int) -> None:
         full = synth_batch(spark, 0, n_total, n_total, parts=64).cache()
         full.count()
         twin = D.curate_corpus_v2(
-            full, min_stops=0, use_minhash=True, max_df=None,
-            k_select=k_sel, n_docs=n_total,
+            full, min_stops=0, use_minhash=True, max_df=None, k_select=k_sel
         ).withColumnRenamed("doc_id", "id")
         cols = [
             "id", "lang", "n_words", "bits_per_token_ppm", "bucket",

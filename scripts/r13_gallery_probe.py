@@ -4,7 +4,7 @@ next-round #2).  Times each member's full build+noop at the given SF dir
 (default sf0.01), optionally repeated, printing per-member seconds and
 loadavg so store-layer optimizations have a before/after of record.
 
-Usage: python scripts/r13_gallery_probe.py [sf_dir] [reps] [name ...]
+Usage: python scripts/r13_gallery_probe.py [sf_dir] [reps>=1] [name ...]
 """
 
 from __future__ import annotations
@@ -27,12 +27,26 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.drive
 )
 
 MEMBERS = ROWS_ONLY_SUITES["streaming_dedup_gallery"]
+USAGE = "usage: r13_gallery_probe.py [sf_dir] [reps>=1] [name ...]"
+
+
+def check_args(reps: int, names: list[str]) -> None:
+    """Exit with the usage line on a repetition count below 1 or an
+    unknown query name, before Spark starts."""
+    if reps < 1:
+        sys.exit(f"{USAGE}\nreps must be >= 1, got {reps}")
+    unknown = [n for n in names if n not in Q.QUERIES]
+    if unknown:
+        sys.exit(f"{USAGE}\nunknown query names: {', '.join(unknown)}")
 
 
 def main() -> None:
+    if sys.argv[1:2] in (["-h"], ["--help"]):
+        sys.exit(USAGE)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     names = sys.argv[3:] or MEMBERS
+    check_args(reps, names)
     spark = get_spark(app_name="r13-gallery-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
     results: dict[str, list[float]] = {n: [] for n in names}

@@ -179,16 +179,14 @@ def _curation_v2_main(n_cur: int, strip_spans: bool = False) -> None:
     # would time expression re-evaluation, not the operator).
     cur = _synthetic_curation_corpus(spark, n_cur)
     t0 = time.time()
-    # n_docs=n_cur: the r12 size contract — the checkpoint_kept
-    # auto-dispatch (operators/dedup._resolve_checkpoint_kept) enables
-    # the corpus-scale kept boundary at >= 1M docs, the r11 3M A/B's
-    # measured -30% setting, with zero eager actions.
+    # The kept boundary follows the cached corpus's Catalyst byte
+    # estimate (~477 B/doc here): on from ~1.13M docs.
     # dsir_hash="xx64": at corpus scale the DSIR stage is hash-bound and
     # xx64 (the engine-native family, 2.45M feat/s recorded) roughly
     # halves it vs the oracle-checkable md5 default.
     out = D.curate_corpus_v2(
         cur, min_stops=0, use_minhash=True, k_select=n_cur // 20,
-        n_docs=n_cur, strip_spans=strip_spans, dsir_hash="xx64",
+        strip_spans=strip_spans, dsir_hash="xx64",
     ).cache()
     survivors = out.count()
     results["wall_sec"] = round(time.time() - t0, 2)

@@ -408,9 +408,9 @@ def test_star_components_arms_agree_on_random_edge_lists(spark, edges):
 def test_star_components_local_dispatch(spark):
     """The r12 size dispatch: a bounded integral-id edge list takes the
     driver union-find path (a LocalTableScan source — zero distributed
-    rounds), the distributed loop can be forced with local_max_edges=0
-    or the spark.graft.components.localMaxEdges conf, and string-id
-    graphs never dispatch locally (Python vs UTF8String ordering)."""
+    rounds), the distributed loop can be forced with local_max_edges=0,
+    and string-id graphs never dispatch locally (Python vs UTF8String
+    ordering)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
@@ -422,13 +422,6 @@ def test_star_components_local_dispatch(spark):
     assert "Scan ExistingRDD" in plan(local) and "Join" not in plan(local)
     dist = D.connected_components_star(pairs, local_max_edges=0)
     assert "Join" in plan(dist)
-    # conf-driven override
-    spark.conf.set("spark.graft.components.localMaxEdges", "0")
-    try:
-        via_conf = D.connected_components_star(pairs)
-        assert "Join" in plan(via_conf)
-    finally:
-        spark.conf.unset("spark.graft.components.localMaxEdges")
     # string ids: always distributed
     spairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
@@ -580,10 +573,12 @@ def test_curate_corpus_v2_invariants(spark, sf_dir):
     assert {r["doc_id"] for r in sel} == {r["doc_id"] for r in order[:k]}
 
 
-def test_curate_corpus_v2_checkpoint_kept_is_pure_optimization(spark, sf_dir):
-    """``checkpoint_kept=True`` (the corpus-scale boundary, r11 3M A/B)
-    changes the execution plan only — the output must be bit-identical
-    to the default path."""
+def test_curate_corpus_v2_checkpoint_kept_is_pure_optimization(
+    spark, sf_dir, monkeypatch
+):
+    """The kept boundary (the corpus-scale setting, r11 3M A/B), forced
+    on by a zero byte threshold, changes the execution plan only — the
+    output must be bit-identical to the fixture's default path."""
     from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
         dedup as DD,
     )
@@ -595,23 +590,20 @@ def test_curate_corpus_v2_checkpoint_kept_is_pure_optimization(spark, sf_dir):
     a = sorted(
         map(tuple, DD.curate_corpus_v2(docs, min_stops=0).collect())
     )
+    monkeypatch.setattr(DD, "CHECKPOINT_KEPT_MIN_BYTES", 0)
     b = sorted(
-        map(
-            tuple,
-            DD.curate_corpus_v2(
-                docs, min_stops=0, checkpoint_kept=True
-            ).collect(),
-        )
+        map(tuple, DD.curate_corpus_v2(docs, min_stops=0).collect())
     )
     assert a == b and a
 
 
-def test_checkpoint_kept_size_dispatch(spark, sf_dir):
-    """The r12 auto-dispatch (VERDICT r11 #5): explicit bool wins; an
-    ``n_docs`` size contract flips at CHECKPOINT_KEPT_MIN_DOCS with zero
-    actions; the Catalyst byte-estimate fallback keeps fixture-scale
-    inputs on the measured-faster False path; and the auto path's output
-    is bit-identical to both explicit paths (pure optimization)."""
+def test_checkpoint_kept_size_dispatch(spark, sf_dir, monkeypatch):
+    """The kept boundary is placed from the zero-action Catalyst byte
+    estimate of the input (VERDICT r11 #5): the fixture documents table
+    (~MBs) stays on the measured-faster no-boundary path, and a
+    threshold below its estimate places the boundary.  Bit-identity of
+    the two paths is pinned by
+    test_curate_corpus_v2_checkpoint_kept_is_pure_optimization."""
     from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
         dedup as DD,
     )
@@ -620,25 +612,38 @@ def test_checkpoint_kept_size_dispatch(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    r = DD._resolve_checkpoint_kept
-    assert r(docs, True, None) is True
-    assert r(docs, False, 10**9) is False  # explicit beats size contract
-    assert r(docs, None, DD.CHECKPOINT_KEPT_MIN_DOCS) is True
-    assert r(docs, None, DD.CHECKPOINT_KEPT_MIN_DOCS - 1) is False
-    # fixture documents table is ~MBs — the byte estimate dispatches off
-    assert r(docs, None, None) is False
-    # bit-identity of the two physical paths is pinned by
-    # test_curate_corpus_v2_checkpoint_kept_is_pure_optimization (whose
-    # default arm IS the auto dispatch now).
+    size = DD._plan_size_bytes(docs)
+    assert size is not None and 0 < size < DD.CHECKPOINT_KEPT_MIN_BYTES
+    boundaries = []
+    kept_fn = DD.curation_v2_kept
+
+    def spy(*args, **kwargs):
+        kept = kept_fn(*args, **kwargs)
+        checkpoint = kept.localCheckpoint
+
+        def recorded(*a, **k):
+            boundaries.append(k)
+            return checkpoint(*a, **k)
+
+        kept.localCheckpoint = recorded
+        return kept
+
+    monkeypatch.setattr(DD, "curation_v2_kept", spy)
+    DD.curate_corpus_v2(docs, min_stops=0)
+    assert boundaries == []
+    monkeypatch.setattr(DD, "CHECKPOINT_KEPT_MIN_BYTES", size)
+    DD.curate_corpus_v2(docs, min_stops=0)
+    assert boundaries == [{"eager": False}]
 
 
 def test_curate_corpus_v2_staged_resume(spark, sf_dir, tmp_path):
     """The staged/resumable composed pipeline (VERDICT r11 #2): with
     ``staged_root`` every boundary persists as a parquet stage table and
-    the output is bit-identical to the in-session form; a run killed
-    between stages (simulated by deleting the later stage tables AND
-    poisoning the input) resumes from the finished stages without ever
-    reconstructing them; a torn stage directory (no ``_SUCCESS``) is
+    the output is bit-identical to the in-session form — on the defaults,
+    with the span strip, and with the banded MinHash pair graph; a run
+    killed between stages (simulated by deleting the later stage tables
+    AND poisoning the input) resumes from the finished stages without
+    ever reconstructing them; a torn stage directory (no ``_SUCCESS``) is
     overwritten, not trusted."""
     import os
     import shutil
@@ -651,15 +656,21 @@ def test_curate_corpus_v2_staged_resume(spark, sf_dir, tmp_path):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    base = sorted(map(tuple, DD.curate_corpus_v2(docs, min_stops=0).collect()))
-    root = str(tmp_path / "stages")
-    staged = sorted(
-        map(
-            tuple,
-            DD.curate_corpus_v2(docs, min_stops=0, staged_root=root).collect(),
+
+    def run(frame, **kwargs):
+        return sorted(
+            map(tuple, DD.curate_corpus_v2(frame, min_stops=0, **kwargs).collect())
         )
-    )
-    assert staged == base and base
+
+    for i, kwargs in enumerate(
+        (dict(strip_spans=True), dict(use_minhash=True, max_df=None))
+    ):
+        want = run(docs, **kwargs)
+        got = run(docs, staged_root=str(tmp_path / f"variant{i}"), **kwargs)
+        assert got == want and want, kwargs
+    base = run(docs)
+    root = str(tmp_path / "stages")
+    assert run(docs, staged_root=root) == base and base
     for s in ("gated2", "kept", "pairs", "surv"):
         assert os.path.exists(f"{root}/{s}/_SUCCESS"), s
     # Kill-between-stages: later stages gone, one torn (no _SUCCESS),
@@ -671,25 +682,9 @@ def test_curate_corpus_v2_staged_resume(spark, sf_dir, tmp_path):
     with open(f"{root}/pairs/part-torn.parquet", "w") as fh:
         fh.write("torn")
     poisoned = docs.limit(0)
-    resumed = sorted(
-        map(
-            tuple,
-            DD.curate_corpus_v2(
-                poisoned, min_stops=0, staged_root=root
-            ).collect(),
-        )
-    )
-    assert resumed == base
+    assert run(poisoned, staged_root=root) == base
     # All stages present: only the final DSIR join recomputes.
-    resumed2 = sorted(
-        map(
-            tuple,
-            DD.curate_corpus_v2(
-                poisoned, min_stops=0, staged_root=root
-            ).collect(),
-        )
-    )
-    assert resumed2 == base
+    assert run(poisoned, staged_root=root) == base
 
 
 def test_curate_corpus_v2_staged_root_refuses_other_parameters(
