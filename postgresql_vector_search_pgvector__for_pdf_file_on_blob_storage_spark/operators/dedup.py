@@ -51,19 +51,29 @@ __all__ = [
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """One row per distinct normalized text: keeper = min id, plus the
-    duplicate count.  Hash-groupBy with map-side partial aggregation; the
-    exchange carries only (fingerprint, id) pairs."""
+    """One row per distinct normalized text: ``(keep_id, dup_count)``,
+    the min id and the group size (:func:`_exact_keepers`)."""
+    return _exact_keepers(
+        spread(df).select(
+            X.fingerprint64(text_col).alias("fp"), F.col(id_col).alias("id")
+        )
+    ).select(
+        F.col("id").alias("keep_id"), F.col("exact_dups").alias("dup_count")
+    )
+
+
+def _exact_keepers(fps: DataFrame) -> DataFrame:
+    """Exact dedup's one aggregate, shared by every curation form:
+    ``(fp, id)`` rows -> ``(id, exact_dups)``, the min id of each 64-bit
+    fingerprint and its group size.  Hash-groupBy with map-side partial
+    aggregation; the exchange carries only (fingerprint, id) pairs."""
     return (
-        spread(df)
-        .select(
-            X.fingerprint64(text_col).alias("fp"), F.col(id_col).alias("__id")
-        )
-        .groupBy("fp")
+        fps.groupBy("fp")
         .agg(
-            F.min("__id").alias("keep_id"),
-            F.count("*").alias("dup_count"),
+            F.min("id").alias("id"),
+            F.count("*").cast("long").alias("exact_dups"),
         )
+        .drop("fp")
     )
 
 
@@ -605,7 +615,6 @@ def minhash_lsh_pairs(
     seconds.  Dropped-shingle count is emitted as an ``observe`` metric.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    rows = num_hashes // bands
     sh = spread(df).select(
         F.col(id_col).alias("id"), word_shingles(text_col, n).alias("shingles")
     )
@@ -657,6 +666,17 @@ def minhash_lsh_pairs(
     banded = minhash_band_keys(
         sh, num_hashes=num_hashes, bands=bands
     ).localCheckpoint(eager=False)
+    return _verified_band_pairs(banded, sh, threshold)
+
+
+def _verified_band_pairs(
+    banded: DataFrame, sh: DataFrame, threshold: float
+) -> DataFrame:
+    """The banding half both MinHash hash families share: candidate pairs
+    from the ``(band, key)`` equi-join of ``banded`` ``(id, band, key)``
+    with itself, deduplicated, then exact Jaccard over ``sh``'s
+    ``(id, shingles)`` sets, kept at ``>= threshold``.  Returns
+    ``(id_a, id_b, jaccard)`` with ``id_a < id_b``."""
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -741,27 +761,7 @@ def minhash_lsh_pairs_md5(
             )
         ).alias("bk"),
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    verified = cand.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        verified.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_band_pairs(banded, base, threshold)
 
 
 def simhash64(c: Column | str, n: int = 3) -> Column:
@@ -1016,6 +1016,26 @@ def connected_components_star(
     ).select("node", F.coalesce("b", "node").alias("cluster"))
 
 
+def curation_v1_gate(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    lang_col: str = "lang",
+    langs: tuple[str, ...] = ("en", "de", "fr"),
+    min_tokens: int = 25,
+) -> DataFrame:
+    """The language + token-count gate, the PURE per-document first stage
+    of :func:`curate_corpus`, normalized to ``(id, lang, text,
+    n_tokens)``.  The incremental curation stream (streaming/curation.py)
+    gates its arrival batches with it."""
+    return spread(docs).select(
+        F.col(id_col).alias("id"),
+        F.col(lang_col).alias("lang"),
+        F.col(text_col).alias("text"),
+        F.size(X.word_tokens(text_col)).cast("long").alias("n_tokens"),
+    ).filter(F.col("lang").isin(*langs) & (F.col("n_tokens") >= min_tokens))
+
+
 def curation_v1_survivors(
     docs: DataFrame,
     text_col: str = "text",
@@ -1030,22 +1050,40 @@ def curation_v1_survivors(
     gate can pin the UPSTREAM stages: ``curate_corpus`` truncates lineage
     at its ``localCheckpoint`` boundary, so its golden signature only
     covers the post-boundary sub-plan (ADVICE r10)."""
-    gated = spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
-        F.col(text_col).alias("text"),
-        F.size(X.word_tokens(text_col)).cast("long").alias("n_tokens"),
-    ).filter(F.col("lang").isin(*langs) & (F.col("n_tokens") >= min_tokens))
-    keep = (
-        gated.select(X.fingerprint64("text").alias("fp"), "id")
-        .groupBy("fp")
-        .agg(
-            F.min("id").alias("id"),
-            F.count("*").cast("long").alias("exact_dups"),
-        )
-        .drop("fp")
+    gated = curation_v1_gate(docs, text_col, id_col, lang_col, langs, min_tokens)
+    return gated.join(
+        _exact_keepers(gated.select(X.fingerprint64("text").alias("fp"), "id")),
+        "id",
     )
-    return gated.join(keep, "id")
+
+
+def _kept_pairs(pairs: DataFrame, kept: DataFrame) -> DataFrame:
+    """The kept-kept restriction of a pair graph: the ``(id_a, id_b)``
+    pairs whose endpoints are both ``id``s of ``kept``.  A MinHash
+    signature is a per-document function, so a pair graph maintained over
+    every gated doc, restricted to the exact-dedup survivors, is the pair
+    set the operator computes over those survivors alone
+    (streaming/curation.py module doc)."""
+    kept_ids = kept.select("id")
+    return (
+        pairs.select("id_a", "id_b")
+        .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
+        .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
+    )
+
+
+def _drop_near_dups(kept: DataFrame, pairs: DataFrame) -> DataFrame:
+    """:func:`curate_corpus`'s near-dup stage: star-contraction components
+    over ``pairs``, then an anti-join of every non-representative member
+    out of ``kept`` — ``(id, lang, n_tokens, exact_dups)``."""
+    dropped = (
+        connected_components_star(pairs)
+        .filter(F.col("node") != F.col("cluster"))
+        .select(F.col("node").alias("id"))
+    )
+    return kept.join(dropped, "id", "left_anti").select(
+        "id", "lang", "n_tokens", "exact_dups"
+    )
 
 
 def curate_corpus(
@@ -1102,14 +1140,7 @@ def curate_corpus(
             kept, "text", "id", n=3, threshold=jaccard_threshold,
             max_df=max_df, observation=observation,
         )
-    dropped = (
-        connected_components_star(pairs)
-        .filter(F.col("node") != F.col("cluster"))
-        .select(F.col("node").alias("id"))
-    )
-    return kept.join(dropped, "id", "left_anti").select(
-        "id", "lang", "n_tokens", "exact_dups"
-    )
+    return _drop_near_dups(kept, pairs)
 
 
 def leakage_safe_split(
@@ -1225,10 +1256,9 @@ def curation_v2_gate(
 ) -> DataFrame:
     """The Gopher quality gate alone — the PURE per-document first stage
     of :func:`curate_corpus_v2`, normalized to ``(id, lang, text,
-    n_words)``.  Factored out (r12) so the incremental curation stream
-    (streaming/curation.py) gates arrival batches with the IDENTICAL
-    predicates: the gate is per-doc pure, so the gated set is
-    append-only under arrival and stream == batch by construction."""
+    n_words)``.  The incremental curation stream (streaming/curation.py)
+    gates its arrival batches with it: the gate is per-doc pure, so the
+    gated set is append-only under arrival."""
     from .textstats import gopher_quality_flags
 
     flags = gopher_quality_flags(
@@ -1275,16 +1305,10 @@ def curation_v2_kept(
     kept (they still carry their metadata row; a production run would
     re-apply a length gate downstream — composing the gate twice here
     would hide the stage's own output)."""
-    keep = (
-        gated2.select(X.fingerprint64("text").alias("fp"), "id")
-        .groupBy("fp")
-        .agg(
-            F.min("id").alias("id"),
-            F.count("*").cast("long").alias("exact_dups"),
-        )
-        .drop("fp")
+    kept = gated2.join(
+        _exact_keepers(gated2.select(X.fingerprint64("text").alias("fp"), "id")),
+        "id",
     )
-    kept = gated2.join(keep, "id")
     if not strip_spans:
         return kept.withColumn("stripped_tokens", F.lit(0).cast("long"))
     stripped = strip_dup_ngrams(
@@ -1354,6 +1378,30 @@ def _stage_table(spark, root: str, name: str, build) -> DataFrame:
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(path + "/_SUCCESS")):
         build().write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def _split_survivors(kept: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Stages 5-6 of :func:`curate_corpus_v2`: the leakage-safe split over
+    the ``pairs`` graph, then only each component's representative
+    (``id == cluster_rep``) with ``near_dups`` = its component size."""
+    assign = leakage_safe_split(kept, "text", "id", pairs=pairs)
+    csize = assign.groupBy("cluster_rep").agg(
+        F.count("*").cast("long").alias("near_dups")
+    )
+    return (
+        kept.join(assign, "id")
+        .filter(F.col("id") == F.col("cluster_rep"))
+        .join(csize, "cluster_rep")
+    )
+
+
+# The output row of curate_corpus_v2 and of its incremental view
+# (streaming/curation.py); the first column is renamed to ``id_col``.
+CURATION_V2_COLUMNS = (
+    "id", "lang", "n_words", "bits_per_token_ppm", "bucket", "exact_dups",
+    "stripped_tokens", "near_dups", "split", "n_feats", "score_bits",
+    "mean_milli", "selected",
+)
 
 
 def curate_corpus_v2(
@@ -1516,16 +1564,7 @@ def curate_corpus_v2(
 
     def build_pairs() -> DataFrame:
         if pairs is not None:
-            # maintained pair graph, restricted to kept-kept pairs (the
-            # per-doc MinHash signatures make banding pair-local — the
-            # kept-kept restriction argument, streaming/curation.py
-            # module doc)
-            kept_ids = kept.select("id")
-            return (
-                pairs.select("id_a", "id_b")
-                .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
-                .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
-            )
+            return _kept_pairs(pairs, kept)
         pair_fn = minhash_lsh_pairs if use_minhash else jaccard_pairs
         return pair_fn(
             kept, "text", "id", n=3, threshold=jaccard_threshold,
@@ -1533,19 +1572,7 @@ def curate_corpus_v2(
         )
 
     graph = stage("pairs", build_pairs, False)
-
-    def build_surv() -> DataFrame:
-        assign = leakage_safe_split(kept, "text", "id", pairs=graph)
-        csize = assign.groupBy("cluster_rep").agg(
-            F.count("*").cast("long").alias("near_dups")
-        )
-        return (
-            kept.join(assign, "id")
-            .filter(F.col("id") == F.col("cluster_rep"))
-            .join(csize, "cluster_rep")
-        )
-
-    surv = stage("surv", build_surv, True)
+    surv = stage("surv", lambda: _split_survivors(kept, graph), True)
     # dsir_hash: the feature-string hash family.  "md5" (default) is the
     # oracle-checkable family the fixture queries pin; at corpus scale
     # the DSIR stage is HASH-BOUND (r11 10M diagnostic: 558 s ≈ 690M
@@ -1565,17 +1592,5 @@ def curate_corpus_v2(
         hash_fn=dsir_hash,
     )
     return surv.join(sel, "id").select(
-        F.col("id").alias(id_col),
-        "lang",
-        "n_words",
-        "bits_per_token_ppm",
-        "bucket",
-        "exact_dups",
-        "stripped_tokens",
-        "near_dups",
-        "split",
-        "n_feats",
-        "score_bits",
-        "mean_milli",
-        "selected",
+        F.col("id").alias(id_col), *CURATION_V2_COLUMNS[1:]
     )

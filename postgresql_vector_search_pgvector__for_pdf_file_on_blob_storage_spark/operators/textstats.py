@@ -268,12 +268,16 @@ def pack_token_bins(
 # ---------------------------------------------------------------------------
 
 
+# Distinct tokens up to which the unigram LM is broadcast to the scored
+# rows (Heaps-law true for any natural corpus at this size); past it the
+# doc-token join shuffles by token.
+VOCAB_BROADCAST_MAX = 4_000_000
+
+
 def unigram_surprisal(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_freq: bool | None = None,
-    vocab_broadcast_max: int = 4_000_000,
 ) -> DataFrame:
     """Unigram-LM quality filter (the CCNet / Wenzek et al. 2020
     perplexity-filtering shape), made INTEGER-EXACT so it is
@@ -295,23 +299,20 @@ def unigram_surprisal(
     lesson applied here, after the 30M single-node probe measured the
     old tf-first shape spilling >45 GB): the token-frequency aggregate
     is map-side-combined to ~vocab rows per partition (a tiny exchange),
-    and when the vocabulary fits a broadcast
-    (``<= vocab_broadcast_max`` distinct tokens — Heaps-law true for
-    any natural corpus at this threshold) each token OCCURRENCE scores
-    map-side against the broadcast table and the per-doc fold
-    partial-aggregates to ~one row per doc BEFORE its exchange — the
-    corpus-sized (doc, token) shuffle and the token-keyed sort-merge
-    join of the old shape both disappear (they were ~90 GB of scratch
-    at 30M docs, the binding constraint of the in-session composed
-    probe).  Past the threshold the tf-first join form is kept — a
+    and the per-doc fold is :func:`surprisal_per_doc`.  When the
+    vocabulary has at most ``VOCAB_BROADCAST_MAX`` distinct tokens each
+    token OCCURRENCE scores map-side against the broadcast table and the
+    per-doc fold partial-aggregates to ~one row per doc BEFORE its
+    exchange — the corpus-sized (doc, token) shuffle and the token-keyed
+    sort-merge join of the old shape both disappear (they were ~90 GB of
+    scratch at 30M docs, the binding constraint of the in-session
+    composed probe).  Past the bound the tf-first join form is kept — a
     billion-token vocabulary cannot broadcast, and joining occurrences
-    directly would shuffle MORE than the tf table.  ``broadcast_freq``
-    forces either form; ``None`` dispatches on one vocab-row count
-    against the lazily-checkpointed freq subtree (the similarity_join
-    ``sizes=`` precedent: one cheap action, never a silent plan flip).
-    Integer bits per occurrence sum associatively, so BOTH forms are
-    bit-identical — sum over occurrences of bits == sum over (doc,
-    token) of tf x bits; the oracle pins one answer."""
+    directly would shuffle MORE than the tf table.  Integer bits per
+    occurrence sum associatively, so BOTH forms are bit-identical — sum
+    over occurrences of bits == sum over (doc, token) of tf x bits; the
+    oracle pins one answer, and a forced-arm test pins the two forms
+    equal."""
     toks = spread(df).select(
         F.col(id_col).alias("id"),
         F.explode(X.word_tokens(text_col)).alias("token"),
@@ -319,39 +320,50 @@ def unigram_surprisal(
     freq = toks.groupBy("token").agg(
         F.count("*").alias("freq")
     ).localCheckpoint(eager=False)  # feeds dispatch count + join + total
+    return surprisal_per_doc(
+        df.select(F.col(id_col).alias("id")), toks, freq
+    ).withColumnRenamed("id", id_col)
+
+
+def surprisal_per_doc(
+    ids: DataFrame, toks: DataFrame, freq: DataFrame
+) -> DataFrame:
+    """The per-document fold of :func:`unigram_surprisal`, also called by
+    the incremental v2 curation view over its token stores
+    (streaming/curation.py).  ``freq`` is the ``(token, freq)`` unigram
+    LM; ``toks`` holds ``(id, token)`` occurrence rows or ``(id, token,
+    tf)`` per-doc count rows; ``ids`` is the ``(id)`` population scored
+    (a doc with no token scores 0).  Returns ``(id, n_tokens,
+    surprisal_bits, bits_per_token_ppm)``.
+
+    Dispatch: one vocab-row count against ``freq`` (the similarity_join
+    ``sizes=`` precedent: one cheap action, never a silent plan flip).
+    Up to ``VOCAB_BROADCAST_MAX`` tokens the LM is broadcast; past it
+    occurrence rows are first folded to ``tf`` rows, so the token-keyed
+    join shuffles one row per (doc, token)."""
     total = freq.agg(F.sum("freq").alias("total"))
-    if broadcast_freq is None:
-        broadcast_freq = (
-            freq.limit(int(vocab_broadcast_max) + 1).count()
-            <= int(vocab_broadcast_max)
-        )
-    bits_of = (
+    if freq.limit(VOCAB_BROADCAST_MAX + 1).count() <= VOCAB_BROADCAST_MAX:
+        freq = F.broadcast(freq)
+    elif "tf" not in toks.columns:
+        toks = toks.groupBy("id", "token").agg(F.count("*").alias("tf"))
+    bits = (
         F.length(F.bin(F.expr("total div freq").cast("long"))) - F.lit(1)
     ).cast("long")
-    if broadcast_freq:
-        scored = (
-            toks.join(F.broadcast(freq), "token")
-            .crossJoin(F.broadcast(total))
-            .select("id", bits_of.alias("bits"))
-        )
-        per_doc = scored.groupBy("id").agg(
-            F.count("*").alias("n_tokens"),
-            F.sum("bits").alias("surprisal_bits"),
-        )
-    else:
-        tf = toks.groupBy("id", "token").agg(F.count("*").alias("tf"))
-        scored = (
-            tf.join(freq, "token")
-            .crossJoin(F.broadcast(total))
-            .withColumn("bits", F.col("tf") * bits_of)
-        )
-        per_doc = scored.groupBy("id").agg(
+    scored = toks.join(freq, "token").crossJoin(F.broadcast(total))
+    if "tf" in toks.columns:
+        per_doc = scored.withColumn("bits", F.col("tf") * bits).groupBy(
+            "id"
+        ).agg(
             F.sum("tf").alias("n_tokens"),
             F.sum("bits").alias("surprisal_bits"),
         )
-    base = df.select(F.col(id_col).alias("id"))
-    out = base.join(per_doc, "id", "left").select(
-        F.col("id").alias(id_col),
+    else:
+        per_doc = scored.select("id", bits.alias("bits")).groupBy("id").agg(
+            F.count("*").alias("n_tokens"),
+            F.sum("bits").alias("surprisal_bits"),
+        )
+    out = ids.join(per_doc, "id", "left").select(
+        "id",
         F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
         F.coalesce("surprisal_bits", F.lit(0)).cast("long").alias(
             "surprisal_bits"
@@ -490,31 +502,25 @@ def surprisal_tercile_buckets(
     rule.  Returns ``(id_col, bits_per_token_ppm, bucket)``.
     """
     # localCheckpoint: the scores subtree feeds TWO actions (the histogram
-    # collect below and the returned frame) — without it the whole
+    # collect and the returned frame) — without it the whole
     # explode->tf->freq->join->sum DAG runs twice per materialization.
-    scores = (
+    return tercile_buckets(
         unigram_surprisal(df, text_col, id_col)
         .select(id_col, "bits_per_token_ppm")
         .localCheckpoint(eager=True)
     )
-    t1, t2 = tercile_cut_points(scores)
-    return scores.select(
-        id_col,
-        F.col("bits_per_token_ppm").cast("long").alias("bits_per_token_ppm"),
-        tercile_bucket_expr(t1, t2).alias("bucket"),
-    )
 
 
-def tercile_cut_points(
-    scores: DataFrame, ppm_col: str = "bits_per_token_ppm"
-) -> tuple[int, int]:
-    """The bounded-histogram tercile fold of
-    :func:`surprisal_tercile_buckets`, exposed (r12) so the INCREMENTAL
-    curation view (streaming/curation.py) computes its cut points with
-    the IDENTICAL rule over scores derived from its token stores —
-    one implementation, two callers.  The driver-side fold is over the
-    bounded ``milli`` value domain (~40k rows max), never documents."""
-    milli = F.expr(f"{ppm_col} div 1000")  # exact integer div
+def tercile_buckets(scores: DataFrame) -> DataFrame:
+    """The tercile rule of :func:`surprisal_tercile_buckets` over any
+    ``(id, bits_per_token_ppm)`` scores, adding the ``bucket`` column —
+    also called by the incremental v2 curation view
+    (streaming/curation.py) over scores derived from its token stores.
+    Cut points come from the bounded ``milli`` histogram (~40k rows
+    max, folded on the driver — never documents); assignment is by
+    value against them.  ``scores`` is read twice (the histogram collect
+    and the returned frame), so pass a checkpointed frame."""
+    milli = F.expr("bits_per_token_ppm div 1000")  # exact integer div
     hist = sorted(
         (r["m"], r["c"])
         for r in scores.groupBy(milli.alias("m"))
@@ -531,20 +537,11 @@ def tercile_cut_points(
             t1 = m
         if t2 is None and cum >= k2:
             t2 = m
-    return t1, t2
-
-
-def tercile_bucket_expr(
-    t1: int, t2: int, ppm_col: str = "bits_per_token_ppm"
-):
-    """Value-based bucket assignment against broadcast cut points — the
-    other half of the shared tercile rule (see
-    :func:`tercile_cut_points`)."""
-    milli = F.expr(f"{ppm_col} div 1000")
-    return (
+    return scores.withColumn(
+        "bucket",
         F.when(milli <= F.lit(t1), F.lit("head"))
         .when(milli <= F.lit(t2), F.lit("middle"))
-        .otherwise(F.lit("tail"))
+        .otherwise(F.lit("tail")),
     )
 
 

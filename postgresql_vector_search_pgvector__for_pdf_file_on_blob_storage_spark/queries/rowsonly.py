@@ -1325,33 +1325,24 @@ def streaming_neardup_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("new_id", "matched_id")
     )
 
-@query("streaming_curation_maintenance")
-def streaming_curation_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental curation maintenance (streaming/curation.py — VERDICT
-    r10 next-round #7): the batch curation pipeline's gate / exact-dedup
-    / near-dup stages maintained per ARRIVAL batch through the real
-    Structured Streaming path (three source files, maxFilesPerTrigger=1
-    -> three micro-batches into fresh fingerprint/band/shingle/matches
-    stores), then the accepted-survivor view derived from the stores.
-    Witness: ``batch_diff_rows`` — symmetric bag difference between the
-    survivor view and ``curate_corpus(use_minhash=True, max_df=None)``
-    over the same corpus in one batch (0 iff the incremental composition
-    converged to the batch pipeline's output).  foreachBatch state-table
-    pattern -> rows-only."""
-    import os as _os
 
-    from ..operators import dedup as DD
-    from ..streaming import curation as SC
+def _drained_curation_store(
+    spark: SparkSession, sf_dir: str, prefix: str, stream, **kwargs
+):
+    """The curation maintenance witnesses' run: the fixture documents as
+    three arrival FILES (~thirds by id — a deterministic arrival order),
+    drained by ``stream`` with maxFilesPerTrigger=1 (three micro-batches)
+    into a fresh store.  Returns the documents and the store root.  The
+    file stream source lists src/ flat, so each slice's single part file
+    is staged then moved in as batch<i>.parquet."""
+    import os as _os
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
-    tmp = _gallery_scratch("curstream_q_")
+    tmp = _gallery_scratch(prefix)
     src = f"{tmp}/src"
     _os.makedirs(src)
-    # three arrival FILES (~thirds by id — a deterministic arrival
-    # order): the file stream source lists src/ flat, so each slice's
-    # single part file is staged then moved in as batch<i>.parquet.
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     c1 = lo + (hi - lo) // 3
     c2 = lo + 2 * (hi - lo) // 3
@@ -1367,16 +1358,32 @@ def streaming_curation_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
             f for f in _os.listdir(stage) if f.endswith(".parquet")
         )
         _os.rename(f"{stage}/{part}", f"{src}/batch{i}.parquet")
-    store = f"{tmp}/store"
-    q = SC.curation_maintenance_stream(
-        spark,
-        src,
-        "doc_id long, lang string, text string",
-        store,
-        f"{tmp}/ckpt",
-        max_files_per_trigger=1,
+    stream(
+        spark, src, "doc_id long, lang string, text string",
+        f"{tmp}/store", f"{tmp}/ckpt", max_files_per_trigger=1, **kwargs,
+    ).awaitTermination()
+    return docs, f"{tmp}/store"
+
+
+@query("streaming_curation_maintenance")
+def streaming_curation_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental curation maintenance (streaming/curation.py — VERDICT
+    r10 next-round #7): the batch curation pipeline's gate / exact-dedup
+    / near-dup stages maintained per ARRIVAL batch through the real
+    Structured Streaming path (three source files, maxFilesPerTrigger=1
+    -> three micro-batches into fresh fingerprint/band/shingle/matches
+    stores), then the accepted-survivor view derived from the stores.
+    Witness: ``batch_diff_rows`` — symmetric bag difference between the
+    survivor view and ``curate_corpus(use_minhash=True, max_df=None)``
+    over the same corpus in one batch (0 iff the incremental composition
+    converged to the batch pipeline's output).  foreachBatch state-table
+    pattern -> rows-only."""
+    from ..operators import dedup as DD
+    from ..streaming import curation as SC
+
+    docs, store = _drained_curation_store(
+        spark, sf_dir, "curstream_q_", SC.curation_maintenance_stream
     )
-    q.awaitTermination()
     surv = SC.curation_survivors(spark, store).localCheckpoint(eager=True)
     twin = DD.curate_corpus(docs, use_minhash=True, max_df=None)
     diff = _bag_diff_count(
@@ -1407,54 +1414,20 @@ def streaming_curation_v2_maintenance(
     max_df=None)`` over the same corpus in one batch (0 iff the
     incremental composition converged bit-for-bit).  foreachBatch
     state-table pattern -> rows-only."""
-    import os as _os
-
     from ..operators import dedup as DD
     from ..streaming import curation as SC
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    tmp = _gallery_scratch("curstream2_q_")
-    src = f"{tmp}/src"
-    _os.makedirs(src)
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    c1 = lo + (hi - lo) // 3
-    c2 = lo + 2 * (hi - lo) // 3
-    slices = [
-        docs.filter(F.col("doc_id") <= c1),
-        docs.filter((F.col("doc_id") > c1) & (F.col("doc_id") <= c2)),
-        docs.filter(F.col("doc_id") > c2),
-    ]
-    for i, sl in enumerate(slices):
-        stage = f"{tmp}/stage{i}"
-        sl.coalesce(1).write.parquet(stage)
-        part = next(
-            f for f in _os.listdir(stage) if f.endswith(".parquet")
-        )
-        _os.rename(f"{stage}/{part}", f"{src}/batch{i}.parquet")
-    store = f"{tmp}/store"
-    SC.curation_v2_maintenance_stream(
-        spark,
-        src,
-        "doc_id long, lang string, text string",
-        store,
-        f"{tmp}/ckpt",
+    docs, store = _drained_curation_store(
+        spark, sf_dir, "curstream2_q_", SC.curation_v2_maintenance_stream,
         min_stops=0,
-        max_files_per_trigger=1,
-    ).awaitTermination()
+    )
     surv = SC.curation_v2_survivors(spark, store).localCheckpoint(
         eager=True
     )
     twin = DD.curate_corpus_v2(
         docs, min_stops=0, use_minhash=True, max_df=None
     ).withColumnRenamed("doc_id", "id")
-    cols = [
-        "id", "lang", "n_words", "bits_per_token_ppm", "bucket",
-        "exact_dups", "stripped_tokens", "near_dups", "split",
-        "n_feats", "score_bits", "mean_milli", "selected",
-    ]
-    diff = _bag_diff_count(surv, twin, cols)
+    diff = _bag_diff_count(surv, twin, list(DD.CURATION_V2_COLUMNS))
     return (
         surv.withColumn("batch_diff_rows", F.lit(int(diff)).cast("long"))
         .orderBy("id")

@@ -1,63 +1,49 @@
-"""Incremental corpus-curation maintenance — the batch curation pipeline
-(operators/dedup.curate_corpus) as an ARRIVAL-batch composition of the
-incremental state forms this package already ships (VERDICT r10
-next-round #7): a real corpus ingests continuously, so gate / exact-dedup
-/ near-dup state must be maintained per micro-batch, with the accepted
-SURVIVOR set converging to what the batch pipeline computes over the
-drained corpus.
+"""Incremental corpus-curation maintenance — the batch curation pipelines
+(operators/dedup.curate_corpus and curate_corpus_v2) as ARRIVAL-batch
+compositions (VERDICT r10 next-round #7): a real corpus ingests
+continuously, so gate / exact-dedup / near-dup state is maintained per
+micro-batch, and the accepted SURVIVOR set converges to what the batch
+pipeline computes over the drained corpus.
 
-Composition per micro-batch (all DataFrame algebra, ``foreachBatch``):
+Per micro-batch (``foreachBatch``, all DataFrame algebra): the batch
+pipeline's own gate (it is per-doc pure, so the gated set is append-only
+under arrival); one ``(fp, id, ...)`` fingerprint row per gated doc; and
+:func:`streaming.neardup.detect_and_register` — new docs band-probe the
+persistent band store, candidates exact-verify over the shingle store,
+verified pairs append to the matches log, so candidate cost tracks true
+near-dups, never batch x corpus.  Every store write is an epoch-keyed
+overwrite, so a replayed micro-batch rewrites exactly its own rows.
 
-1. **Quality gate** — stateless scan predicates (language allow-list +
-   token-count floor), exactly ``curate_corpus``'s gate.
-2. **Fingerprint log** — one ``(fp, id, lang, n_tokens)`` row per gated
-   doc appended to a parquet log (epoch-keyed overwrite, so a replayed
-   micro-batch rewrites exactly its own rows — the neardup-store
-   convention).  The log is append-only per batch; min-id-per-fp is a
-   property of the SET, computed at read time, so arrival order cannot
-   change the converged answer.
-3. **Near-dup pair maintenance** — :func:`streaming.neardup.
-   detect_and_register`: new docs band-probe the persistent band store,
-   candidates exact-verify over the shingle store, verified pairs append
-   to the matches log.  Candidate cost per batch tracks true near-dups
-   (banding), never batch x corpus.
-
-:func:`curation_survivors` derives the accepted-survivor view from the
-three logs: min-id per fingerprint (exact_dups counted), star-contraction
-components over the verified pairs RESTRICTED to the exact-dedup keepers,
-drop non-representatives.  Why restriction gives batch-exact semantics:
-``curate_corpus`` computes its pair graph over the exact-dedup SURVIVORS,
-while the stream registers every gated doc — but a MinHash signature is a
-per-document function, so a kept-kept pair bands together in the stream
-iff it bands together in the batch operator, and the verify Jaccard is
-the same full-shingle-set expression; pairs with a dropped-duplicate
-endpoint are exactly the rows the restriction removes.  Hence
-``curation_survivors`` == ``curate_corpus(use_minhash=True,
-max_df=None)`` row-for-row after draining the same corpus — the
-``streaming_curation_maintenance`` driver query carries that bag diff as
-its ``batch_diff_rows`` witness, and tests/test_streaming.py pins it
-across arrival orders and a multi-batch stream.
-
-100 TB shape: per-batch work is (scan predicates + an 8-byte fingerprint
-projection + the banded candidate join); every store is a parquet table
-(restart-safe, no executor-memory state); the survivor view's only
-corpus-sized fold is the min-per-fp aggregate over 8-byte keys.
-
-**V2 maintenance (r12, VERDICT r11 #1)**: :func:`curation_v2_maintain_
-batch` / :func:`curation_v2_survivors` extend the same architecture to
-the COMPOSED v2 pipeline's corpus-stat stages — CCNet surprisal
-terciles, leakage-safe split, DSIR selection.  The key observation: the
-expensive per-document work (Gopher gate, tokenize, DSIR featurize+
-hash, MinHash signatures) is all PURE per-doc and is paid once at
-arrival into per-doc partial stores; the corpus-stat fits (unigram LM,
-tercile cut points, DSIR bucket LMs) are sums/folds over those partials
-and are recomposed at view time against whatever the current retroactive
-population is (tercile membership moves as the LM grows; DSIR fits on
-final survivors) — so the view is arrival-order independent and equals
+The survivor views call the batch pipelines' stage functions over the
+stores, so stream == batch holds by construction: min-id-per-fp is a
+property of the fingerprint SET (arrival order cannot change it), and
+the kept-kept restriction of the maintained pair graph is exact because
+a MinHash signature is a per-document function — a kept-kept pair bands
+together in the stream iff it does in the batch operator, the verify
+Jaccard is the same full-shingle-set expression, and pairs with a
+dropped-duplicate endpoint are exactly the rows the restriction removes.
+:func:`curation_survivors` equals ``curate_corpus(use_minhash=True,
+max_df=None)`` and :func:`curation_v2_survivors` equals
 ``curate_corpus_v2(use_minhash=True, max_df=None, strip_spans=False)``
-row-for-row on all 13 columns (pinned across arrival orders AND through
-a streaming restart in tests/test_streaming.py; driver-visible via the
-``streaming_curation_v2_maintenance`` gallery witness).
+row-for-row (all 13 columns) after draining the same corpus: the
+``streaming_curation_maintenance`` / ``streaming_curation_v2_maintenance``
+driver queries carry the bag diff as ``batch_diff_rows``, and
+tests/test_streaming.py pins it across arrival orders and restarts.
+
+V2 (r12, VERDICT r11 #1): the expensive per-document work (Gopher gate,
+tokenize, DSIR featurize+hash, MinHash signatures) is paid once at
+arrival into per-doc partial stores; the corpus-stat fits (unigram LM,
+tercile cut points, DSIR bucket LMs) are folds over those partials,
+recomposed at view time against the current retroactive population
+(tercile membership moves as the LM grows; DSIR fits on final
+survivors).
+
+100 TB shape: per-batch work is scan predicates + an 8-byte fingerprint
+projection + the banded candidate join; every store is a parquet table
+(restart-safe, no executor-memory state).  Each store pins the
+maintenance parameters that decide its contents
+(:func:`utils.pin_marker`): a batch or view with other ones is refused,
+never mixed in silently.
 """
 
 from __future__ import annotations
@@ -67,11 +53,12 @@ from pyspark.sql import functions as F
 
 from ..functions import text as X
 from ..operators import dedup as D
-from ..utils import spread
+from ..operators import textstats as TS
+from ..utils import pin_marker
 from . import neardup as ND
+from .stores import read_store
 
 __all__ = [
-    "curation_gate",
     "curation_maintain_batch",
     "curation_maintenance_stream",
     "curation_survivors",
@@ -81,27 +68,57 @@ __all__ = [
 ]
 
 
-def curation_gate(
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    langs: tuple[str, ...] = ("en", "de", "fr"),
-    min_tokens: int = 25,
+def _pin(spark: SparkSession, store_root: str, what: str, **params) -> None:
+    for key, value in params.items():
+        pin_marker(
+            spark, store_root, key, value, what,
+            "its stores were maintained with another value; use a fresh"
+            " store_root",
+        )
+
+
+def _write(df: DataFrame, store_root: str, name: str, epoch_id) -> None:
+    """Append ``df`` to the store ``<store_root>/<name>``; on the streaming
+    path overwrite its ``epoch=<id>`` directory instead, so a replayed
+    micro-batch rewrites exactly its own rows."""
+    if epoch_id is None:
+        df.write.mode("append").parquet(f"{store_root}/{name}")
+    else:
+        df.write.mode("overwrite").parquet(
+            f"{store_root}/{name}/epoch={int(epoch_id)}"
+        )
+
+
+def _read(
+    spark: SparkSession, store_root: str, name: str, *cols: str
 ) -> DataFrame:
-    """The stateless gate — identical predicates to ``curate_corpus``'s
-    first stage, normalized to ``(id, lang, text, n_tokens)``."""
-    return (
-        spread(batch)
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(lang_col).alias("lang"),
-            F.col(text_col).alias("text"),
-            F.size(X.word_tokens(text_col)).cast("long").alias("n_tokens"),
-        )
-        .filter(
-            F.col("lang").isin(*langs) & (F.col("n_tokens") >= min_tokens)
-        )
+    path = f"{store_root}/{name}"
+    return spark.read.option("basePath", path).parquet(path).select(*cols)
+
+
+def _register_pairs(
+    gated: DataFrame, store_root: str, threshold: float, epoch_id
+) -> None:
+    ND.detect_and_register(
+        gated,
+        f"{store_root}/bands",
+        f"{store_root}/shingles",
+        f"{store_root}/matches",
+        text_col="text",
+        id_col="id",
+        threshold=threshold,
+        epoch_id=epoch_id,
+    )
+
+
+def _maintained_pairs(spark: SparkSession, store_root: str):
+    """The matches log as an ``(id_a, id_b)`` pair graph over every gated
+    doc, or None before the first batch."""
+    matches = read_store(spark, f"{store_root}/matches")
+    if matches is None:
+        return None
+    return matches.select(
+        F.col("new_id").alias("id_a"), F.col("matched_id").alias("id_b")
     )
 
 
@@ -120,71 +137,38 @@ def curation_maintain_batch(
     gated docs' fingerprint rows to ``<store_root>/fps``, and maintain
     the near-dup band/shingle/matches stores.  Callable directly on a
     static DataFrame (the arrival-order tests) or from ``foreachBatch``.
+    ``langs``, ``min_tokens`` and ``threshold`` are pinned to the store.
     """
-    gated = curation_gate(
+    _pin(
+        batch.sparkSession, store_root, "curation_maintain_batch",
+        langs=",".join(sorted(langs)), min_tokens=min_tokens,
+        threshold=threshold,
+    )
+    gated = D.curation_v1_gate(
         batch, text_col, id_col, lang_col, langs, min_tokens
     ).localCheckpoint(eager=True)  # one gate pass feeds both stores
-    fps = gated.select(
-        X.fingerprint64("text").alias("fp"), "id", "lang", "n_tokens"
+    _write(
+        gated.select(
+            X.fingerprint64("text").alias("fp"), "id", "lang", "n_tokens"
+        ),
+        store_root, "fps", epoch_id,
     )
-    if epoch_id is None:
-        fps.write.mode("append").parquet(f"{store_root}/fps")
-    else:
-        fps.write.mode("overwrite").parquet(
-            f"{store_root}/fps/epoch={int(epoch_id)}"
-        )
-    ND.detect_and_register(
-        gated,
-        f"{store_root}/bands",
-        f"{store_root}/shingles",
-        f"{store_root}/matches",
-        text_col="text",
-        id_col="id",
-        threshold=threshold,
-        epoch_id=epoch_id,
-    )
+    _register_pairs(gated, store_root, threshold, epoch_id)
 
 
 def curation_survivors(spark: SparkSession, store_root: str) -> DataFrame:
-    """The accepted-survivor view over the maintenance stores:
-    ``(id, lang, n_tokens, exact_dups)`` — converges to
-    ``curate_corpus(use_minhash=True, max_df=None)`` over the drained
-    corpus (see module doc for why the kept-kept restriction is exact).
-    Lazy scans over the logs; no driver-side collection."""
-    fps = spark.read.option("basePath", f"{store_root}/fps").parquet(
-        f"{store_root}/fps"
-    ).select("fp", "id", "lang", "n_tokens")
-    keep = (
-        fps.select("fp", "id")
-        .groupBy("fp")
-        .agg(
-            F.min("id").alias("id"),
-            F.count("*").cast("long").alias("exact_dups"),
-        )
-        .drop("fp")
+    """The accepted-survivor view over the maintenance stores, ``(id,
+    lang, n_tokens, exact_dups)``: ``curate_corpus``'s exact keepers,
+    kept-kept restriction and near-dup drop over the logs.  Lazy scans;
+    no driver-side collection."""
+    fps = _read(spark, store_root, "fps", "fp", "id", "lang", "n_tokens")
+    kept = fps.select("id", "lang", "n_tokens").join(
+        D._exact_keepers(fps.select("fp", "id")), "id"
     )
-    kept = fps.select("id", "lang", "n_tokens").join(keep, "id")
-    from .stores import read_store
-
-    matches = read_store(spark, f"{store_root}/matches")
-    if matches is None:
+    pairs = _maintained_pairs(spark, store_root)
+    if pairs is None:
         return kept.select("id", "lang", "n_tokens", "exact_dups")
-    kept_ids = kept.select("id")
-    pairs = (
-        matches.select(
-            F.col("new_id").alias("id_a"), F.col("matched_id").alias("id_b")
-        )
-        .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
-        .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
-    )
-    dropped = (
-        D.connected_components_star(pairs)
-        .filter(F.col("node") != F.col("cluster"))
-        .select(F.col("node").alias("id"))
-    )
-    return kept.join(dropped, "id", "left_anti").select(
-        "id", "lang", "n_tokens", "exact_dups"
-    )
+    return D._drop_near_dups(kept, D._kept_pairs(pairs, kept))
 
 
 def curation_v2_maintain_batch(
@@ -200,52 +184,40 @@ def curation_v2_maintain_batch(
     epoch_id: int | None = None,
 ) -> None:
     """Process one (micro-)batch for the V2 composed pipeline (VERDICT
-    r11 #1): everything :func:`curation_maintain_batch` keeps PLUS the
-    corpus-stat partials the v2 stages need, each a PURE per-document
-    function computed once at arrival:
+    r11 #1): the Gopher gate (:func:`~..operators.dedup.curation_v2_gate`)
+    once, then per-document stores, each a PURE per-doc function paid
+    once at arrival:
 
-    - ``fps``     — ``(fp, id, lang, n_words)`` per GOPHER-gated doc
-      (:func:`~..operators.dedup.curation_v2_gate`, the batch
-      pipeline's exact first stage);
-    - ``doctoks`` — ``(id, token, tf)`` per-doc token counts (the
-      surprisal join side; tokenizing is the corpus-scale cost and is
-      paid here, never at view time);
+    - ``fps``     — ``(fp, id, lang, n_words)`` per gated doc;
+    - ``doctoks`` — ``(id, token, tf)`` per-doc token counts (tokenizing
+      is the corpus-scale cost and is never paid at view time);
     - ``lm``      — ``(token, cnt)`` per-EPOCH partial sums of the
-      unigram LM (vocab-sized epochs; the view's merge is a sum by
-      token — the "append-only token-frequency store");
+      unigram LM (the view merges them with a sum by token);
     - ``feats``   — ``(id, bucket, cnt)`` per-doc hashed DSIR feature
       counts (:func:`~..operators.selection.doc_feature_buckets`);
-    - band/shingle/matches near-dup stores (the shared
-      :func:`~.neardup.detect_and_register` path, ``n=3`` shingles —
-      the batch pair graph's signature family).
+    - the band/shingle/matches near-dup stores (``n=3`` shingles — the
+      batch pair graph's signature family).
 
-    Why per-DOC partials and not per-epoch sums for doctoks/feats: the
-    tercile and DSIR stages are fit on RETROACTIVE populations (tercile
-    membership moves as the LM grows; DSIR's LMs are fit on the final
-    survivor set) — a per-doc row restricts to any population at view
-    time, while still amortizing the expensive tokenize/hash scan to
-    arrival.  All stores are epoch-keyed-overwrite on the streaming
-    path, so a replayed micro-batch rewrites exactly its own rows."""
-    from ..operators.dedup import curation_v2_gate
+    doctoks and feats stay per DOC, not per epoch: the tercile and DSIR
+    stages are fit on retroactive populations, and a per-doc row
+    restricts to any population at view time.  ``min_stops``,
+    ``threshold``, ``m_buckets`` and ``dsir_hash`` are pinned to the
+    store."""
     from ..operators.selection import doc_feature_buckets
 
-    gated = curation_v2_gate(
+    _pin(
+        batch.sparkSession, store_root, "curation_v2_maintain_batch",
+        min_stops=min_stops, threshold=threshold, m_buckets=m_buckets,
+        dsir_hash=dsir_hash,
+    )
+    gated = D.curation_v2_gate(
         batch, text_col, id_col, lang_col, min_stops
     ).localCheckpoint(eager=True)  # one gate pass feeds all five stores
-
-    def _write(df: DataFrame, name: str) -> None:
-        if epoch_id is None:
-            df.write.mode("append").parquet(f"{store_root}/{name}")
-        else:
-            df.write.mode("overwrite").parquet(
-                f"{store_root}/{name}/epoch={int(epoch_id)}"
-            )
-
     _write(
         gated.select(
             X.fingerprint64("text").alias("fp"), "id", "lang", "n_words"
         ),
-        "fps",
+        store_root, "fps", epoch_id,
     )
     tf = (
         gated.select("id", F.explode(X.word_tokens("text")).alias("token"))
@@ -253,24 +225,18 @@ def curation_v2_maintain_batch(
         .agg(F.count("*").alias("tf"))
         .localCheckpoint(eager=True)  # feeds doctoks AND the lm partial
     )
-    _write(tf, "doctoks")
-    _write(tf.groupBy("token").agg(F.sum("tf").alias("cnt")), "lm")
+    _write(tf, store_root, "doctoks", epoch_id)
+    _write(
+        tf.groupBy("token").agg(F.sum("tf").alias("cnt")),
+        store_root, "lm", epoch_id,
+    )
     _write(
         doc_feature_buckets(
             gated, m_buckets, "text", "id", bigrams=True, hash_fn=dsir_hash
         ),
-        "feats",
+        store_root, "feats", epoch_id,
     )
-    ND.detect_and_register(
-        gated,
-        f"{store_root}/bands",
-        f"{store_root}/shingles",
-        f"{store_root}/matches",
-        text_col="text",
-        id_col="id",
-        threshold=threshold,
-        epoch_id=epoch_id,
-    )
+    _register_pairs(gated, store_root, threshold, epoch_id)
 
 
 def curation_v2_survivors(
@@ -281,151 +247,56 @@ def curation_v2_survivors(
     m_buckets: int = 1024,
 ) -> DataFrame:
     """The accepted-survivor + selection view over the v2 maintenance
-    stores — converges ROW-FOR-ROW (all 13 output columns) to
-    ``curate_corpus_v2(use_minhash=True, max_df=None, strip_spans=
-    False)`` over the drained corpus.  Per stage:
-
-    - **terciles**: the LM is the merged ``lm`` store (sum by token —
-      identical to the batch ``freq`` aggregate because integer sums
-      are associative over epochs); per-doc surprisal re-joins
-      ``doctoks`` against it with the exact ``unigram_surprisal``
-      integer expressions; cut points come from the SHARED
-      :func:`~..operators.textstats.tercile_cut_points` fold.  No
-      re-tokenization — the corpus-scale scan happened at arrival.
-    - **exact dedup**: min-id-per-fp over the tercile SURVIVORS (the
-      restriction is applied to the stored fps at view time, because
-      tercile membership is retroactive — see the module doc's
-      kept-kept argument, which extends verbatim: the restriction set
-      here is tercile ∩ exact keepers).
-    - **pair graph / split / near-dup drop**: the matches log restricted
-      to kept-kept, then the SAME ``leakage_safe_split``(pairs=) +
-      component-size + representative-filter DataFrame algebra as the
-      batch composition.
-    - **DSIR**: survivor-restricted sums over the per-doc ``feats``
-      store (:func:`~..operators.selection.
-      cross_entropy_diff_scores_from_buckets` — bit-identical
-      arithmetic) + the shared :func:`~..operators.selection.topk_flag`.
-
-    Convergence is witnessed driver-visibly by the
-    ``streaming_curation_v2_maintenance`` gallery query
-    (``batch_diff_rows``) and pinned across arrival orders in
-    tests/test_streaming.py."""
-    from ..operators.dedup import leakage_safe_split
+    stores, ``curate_corpus_v2(use_minhash=True, max_df=None,
+    strip_spans=False)``'s 13 columns.  Each stage calls the batch
+    pipeline's stage function: per-doc surprisal
+    (:func:`~..operators.textstats.surprisal_per_doc`) over the
+    ``doctoks`` store against the merged ``lm`` store (integer sums are
+    associative over epochs, so it equals the batch ``freq``), the
+    tercile buckets, the exact keepers over the tercile survivors, the
+    kept-kept restriction of the matches log, and the split survivors.
+    DSIR sums the per-doc ``feats`` store over the survivors
+    (:func:`~..operators.selection.cross_entropy_diff_scores_from_buckets`
+    — bit-identical arithmetic) and flags with the shared
+    :func:`~..operators.selection.topk_flag`.  ``m_buckets`` must be the
+    store's (it is pinned; another value raises)."""
     from ..operators.selection import (
         cross_entropy_diff_scores_from_buckets,
         topk_flag,
     )
-    from ..operators.textstats import tercile_bucket_expr, tercile_cut_points
 
-    meta = spark.read.option("basePath", f"{store_root}/fps").parquet(
-        f"{store_root}/fps"
-    ).select("fp", "id", "lang", "n_words")
-    doctoks = spark.read.option(
-        "basePath", f"{store_root}/doctoks"
-    ).parquet(f"{store_root}/doctoks").select("id", "token", "tf")
-    lm = spark.read.option("basePath", f"{store_root}/lm").parquet(
-        f"{store_root}/lm"
-    ).select("token", "cnt")
-    freq = lm.groupBy("token").agg(F.sum("cnt").alias("freq")).localCheckpoint(
-        eager=False
+    _pin(spark, store_root, "curation_v2_survivors", m_buckets=m_buckets)
+    meta = _read(spark, store_root, "fps", "fp", "id", "lang", "n_words")
+    doctoks = _read(spark, store_root, "doctoks", "id", "token", "tf")
+    freq = (
+        _read(spark, store_root, "lm", "token", "cnt")
+        .groupBy("token")
+        .agg(F.sum("cnt").alias("freq"))
+        .localCheckpoint(eager=False)
     )  # feeds the broadcast-dispatch count, the join, and the total
-    total = freq.agg(F.sum("freq").alias("total"))
-    # Same vocab-broadcast dispatch as unigram_surprisal (r12): when the
-    # merged vocabulary fits a broadcast, the doc-token store scores
-    # map-side and never shuffles by token — the view's only remaining
-    # corpus-sized exchange is the per-doc fold.
-    if freq.limit(4_000_001).count() <= 4_000_000:
-        freq = F.broadcast(freq)
-    scored = (
-        doctoks.join(freq, "token")
-        .crossJoin(F.broadcast(total))
-        .withColumn(
-            "bits",
-            F.col("tf")
-            * (
-                F.length(F.bin(F.expr("total div freq").cast("long")))
-                - F.lit(1)
-            ).cast("long"),
-        )
-    )
-    per_doc = scored.groupBy("id").agg(
-        F.sum("tf").alias("n_tokens"),
-        F.sum("bits").alias("surprisal_bits"),
-    )
-    surp = (
-        meta.select("id")
-        .join(per_doc, "id", "left")
+    surp = TS.surprisal_per_doc(
+        meta.select("id"), doctoks, freq
+    ).localCheckpoint(eager=True)  # feeds the cut-point fold AND the buckets
+    terc = TS.tercile_buckets(surp.select("id", "bits_per_token_ppm"))
+    gated2 = meta.join(terc.filter(F.col("bucket") != F.lit("tail")), "id")
+    kept = gated2.join(
+        D._exact_keepers(gated2.select("fp", "id")), "id"
+    ).localCheckpoint(eager=False)
+    pairs = _maintained_pairs(spark, store_root)
+    if pairs is None:
+        graph = spark.createDataFrame([], "id_a bigint, id_b bigint")
+    else:
+        graph = D._kept_pairs(pairs, kept)
+    surv = D._split_survivors(kept, graph).localCheckpoint(eager=False)
+    fb = (
+        _read(spark, store_root, "feats", "id", "bucket", "cnt")
+        .join(surv.select("id", "lang"), "id")
         .select(
             "id",
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-            F.coalesce("surprisal_bits", F.lit(0)).cast("long").alias(
-                "surprisal_bits"
-            ),
+            (F.col("lang") == F.lit(target_lang)).alias("is_t"),
+            "bucket",
+            "cnt",
         )
-        .withColumn(
-            "bits_per_token_ppm",
-            F.when(
-                F.col("n_tokens") > 0,
-                F.expr(
-                    "(surprisal_bits * CAST(1000000 AS BIGINT)) div n_tokens"
-                ),
-            )
-            .otherwise(F.lit(0))
-            .cast("long"),
-        )
-        # feeds the cut-point fold AND the bucket assignment
-        .localCheckpoint(eager=True)
-    )
-    t1, t2 = tercile_cut_points(surp)
-    terc = surp.select(
-        "id",
-        "bits_per_token_ppm",
-        tercile_bucket_expr(t1, t2).alias("bucket"),
-    ).filter(F.col("bucket") != F.lit("tail"))
-    gated2 = meta.join(terc, "id")
-    keep = (
-        gated2.select("fp", "id")
-        .groupBy("fp")
-        .agg(
-            F.min("id").alias("id"),
-            F.count("*").cast("long").alias("exact_dups"),
-        )
-        .drop("fp")
-    )
-    kept = gated2.join(keep, "id").localCheckpoint(eager=False)
-    from .stores import read_store
-
-    matches = read_store(spark, f"{store_root}/matches")
-    kept_ids = kept.select("id")
-    if matches is None:
-        pairs = spark.createDataFrame([], "id_a bigint, id_b bigint")
-    else:
-        pairs = (
-            matches.select(
-                F.col("new_id").alias("id_a"),
-                F.col("matched_id").alias("id_b"),
-            )
-            .join(kept_ids.withColumnRenamed("id", "id_a"), "id_a")
-            .join(kept_ids.withColumnRenamed("id", "id_b"), "id_b")
-        )
-    assign = leakage_safe_split(kept, "text", "id", pairs=pairs)
-    csize = assign.groupBy("cluster_rep").agg(
-        F.count("*").cast("long").alias("near_dups")
-    )
-    surv = (
-        kept.join(assign, "id")
-        .filter(F.col("id") == F.col("cluster_rep"))
-        .join(csize, "cluster_rep")
-        .localCheckpoint(eager=False)
-    )
-    feats = spark.read.option("basePath", f"{store_root}/feats").parquet(
-        f"{store_root}/feats"
-    ).select("id", "bucket", "cnt")
-    fb = feats.join(surv.select("id", "lang"), "id").select(
-        "id",
-        (F.col("lang") == F.lit(target_lang)).alias("is_t"),
-        "bucket",
-        "cnt",
     )
     scores = cross_entropy_diff_scores_from_buckets(
         fb, surv.select("id"), m=m_buckets
@@ -433,20 +304,10 @@ def curation_v2_survivors(
     sel = topk_flag(
         scores, F.col("mean_milli").cast("double"), k_select, "id"
     )
-    return surv.join(sel, "id").select(
-        "id",
-        "lang",
-        "n_words",
-        "bits_per_token_ppm",
-        "bucket",
-        "exact_dups",
-        F.lit(0).cast("long").alias("stripped_tokens"),
-        "near_dups",
-        "split",
-        "n_feats",
-        "score_bits",
-        "mean_milli",
-        "selected",
+    return (
+        surv.join(sel, "id")
+        .withColumn("stripped_tokens", F.lit(0).cast("long"))
+        .select(*D.CURATION_V2_COLUMNS)
     )
 
 

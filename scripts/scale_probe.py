@@ -241,16 +241,7 @@ def _curation_v2_main(n_cur: int, strip_spans: bool = False) -> None:
     ).localCheckpoint(eager=True)
     stages["pair_graph_sec"] = round(time.time() - t, 2)
     t = time.time()
-    assign = D.leakage_safe_split(kept, "text", "id", pairs=pairs)
-    csize = assign.groupBy("cluster_rep").agg(
-        F.count("*").cast("long").alias("near_dups")
-    )
-    surv = (
-        kept.join(assign, "id")
-        .filter(F.col("id") == F.col("cluster_rep"))
-        .join(csize, "cluster_rep")
-        .localCheckpoint(eager=True)
-    )
+    surv = D._split_survivors(kept, pairs).localCheckpoint(eager=True)
     stages["split_drop_sec"] = round(time.time() - t, 2)
     t = time.time()
     sel = dsir_select(

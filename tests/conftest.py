@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -22,3 +23,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def run_tagged(spark):
+    """``run_tagged(fn)`` runs ``fn()`` in a fresh job group and returns
+    ``(fn(), jobs, tasks)``: the Spark jobs it ran and their completed
+    tasks, read from the status tracker (no extra Spark job) after the
+    listener bus has drained — the tracker is fed asynchronously and can
+    lag the last job."""
+
+    def run(fn):
+        sc, group = spark.sparkContext, f"tagged-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        infos = [tracker.getStageInfo(s) for s in stages]
+        tasks = sum(i.numCompletedTasks for i in infos if i is not None)
+        return out, len(jobs), tasks
+
+    return run

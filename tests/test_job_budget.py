@@ -4,25 +4,31 @@ DataFrame is being built, and while it is collected.
 At fixture scale the engine is bound by per-job overhead, so a change
 that adds a job to a composed run is a regression even when the output
 and the plan shape stay the same.  Jobs are counted per job group through
-the status tracker (no extra Spark job), after the listener bus has
-drained: the tracker is fed asynchronously and can lag the last job.
+the status tracker (the ``run_tagged`` fixture; no extra Spark job).
 
-The build count has a small run-to-run jitter: building runs the lazy
+Some build counts have a small run-to-run jitter: building runs the lazy
 ``localCheckpoint`` boundaries' shuffle stages, and AQE re-plans the
 pair subtree under the components edge checkpoint from the stages that
-finish first, so some runs submit up to ``BUILD_JITTER`` more jobs
-(sf0.001, 25 runs per form: 41-43 at build without the strip, 43-44
-with it).  The execution count read the same on every run and is
-pinned exactly.  A budget moves only with a reviewed change of the
-query's jobs; lower it when a change removes some.
+finish first, so some runs submit up to ``BUILD_JITTER`` more jobs.
+Measured at sf0.001: ``curate_corpus_v2`` 41-43 at build without the
+strip and 43-44 with it (25 runs per form), ``curate_corpus`` 11-12
+(12 runs).  ``curation_v2_survivors`` read 38 on all 12 runs and is
+pinned exactly, as is every execution count.  A budget moves only with
+a reviewed change of the query's jobs; lower it when a change removes
+some.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import pytest
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
     dedup as D,
+)
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+    curation as SC,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
     load_table,
@@ -30,33 +36,43 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.table
 
 BUILD_JITTER = 2
 
-# name -> (kwargs for curate_corpus_v2, jobs at build, jobs to collect)
+
+def _v2_view(spark, docs, tmp):
+    """``curation_v2_survivors`` over a store drained from the corpus."""
+    store = str(tmp / "store")
+    SC.curation_v2_maintain_batch(
+        docs.select("doc_id", "lang", "text"), store, min_stops=0
+    )
+    return partial(SC.curation_v2_survivors, spark, store)
+
+
+# name -> (prepare(spark, docs, scratch dir) -> the build call,
+#          jobs at build, build jitter allowed, jobs to collect)
 BUDGETS = {
-    "curate_corpus_v2": (dict(min_stops=0), 41, 14),
-    "curate_corpus_v2_strip": (dict(min_stops=0, strip_spans=True), 43, 14),
+    "curate_corpus_v2": (
+        lambda spark, docs, tmp: partial(D.curate_corpus_v2, docs, min_stops=0),
+        41, BUILD_JITTER, 14,
+    ),
+    "curate_corpus_v2_strip": (
+        lambda spark, docs, tmp: partial(
+            D.curate_corpus_v2, docs, min_stops=0, strip_spans=True
+        ),
+        43, BUILD_JITTER, 14,
+    ),
+    "curate_corpus": (
+        lambda spark, docs, tmp: partial(D.curate_corpus, docs),
+        11, BUILD_JITTER, 4,
+    ),
+    "curation_v2_survivors": (_v2_view, 38, 0, 14),
 }
 
 
-def _count_jobs(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", sorted(BUDGETS))
-def test_curate_corpus_v2_job_budget(spark, sf_dir, name):
-    kwargs, want_build, want_run = BUDGETS[name]
-    docs = load_table(spark, sf_dir, "documents")
-    df, build = _count_jobs(
-        spark, f"budget-build-{name}", lambda: D.curate_corpus_v2(docs, **kwargs)
-    )
-    rows, run = _count_jobs(spark, f"budget-run-{name}", df.collect)
+def test_job_budget(spark, sf_dir, tmp_path, run_tagged, name):
+    prepare, want_build, jitter, want_run = BUDGETS[name]
+    build = prepare(spark, load_table(spark, sf_dir, "documents"), tmp_path)
+    df, jobs_build, _ = run_tagged(build)
+    rows, jobs_run, _ = run_tagged(df.collect)
     assert rows
-    assert want_build <= build <= want_build + BUILD_JITTER, build
-    assert run == want_run
+    assert want_build <= jobs_build <= want_build + jitter, jobs_build
+    assert jobs_run == want_run

@@ -333,7 +333,7 @@ def test_similarity_join_sizes_param_drives_dispatch(spark):
     assert len(out) == 4  # all pairs within threshold 10
 
 
-def test_similarity_join_blas_arm_counts_once(spark):
+def test_similarity_join_blas_arm_counts_once(spark, run_tagged):
     """The auto dispatch counts both sides once and hands the counts to
     the GEMM kernel, which does not count them again: building a 60 x 60
     join past ``max_native_pairs`` runs 7 jobs (11 when the kernel
@@ -342,14 +342,10 @@ def test_similarity_join_blas_arm_counts_once(spark):
     items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     l = items.select(F.col("vec_id").alias("left_id"), "embedding")
     r = items.select(F.col("vec_id").alias("right_id"), "embedding")
-    sc, group = spark.sparkContext, "similarity-join-blas-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        out = K.similarity_join(l, r, threshold=1.5, max_native_pairs=1000)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    out, jobs, _ = run_tagged(
+        lambda: K.similarity_join(l, r, threshold=1.5, max_native_pairs=1000)
+    )
+    assert jobs == 7
     assert "MapInPandas" in out._jdf.queryExecution().executedPlan().toString()
     assert out.count() == sum(
         (a[1][0] - b[1][0]) ** 2 + (a[1][1] - b[1][1]) ** 2 < 1.5**2

@@ -6,7 +6,6 @@ import os
 import subprocess
 import sys
 import textwrap
-import uuid
 
 import numpy as np
 import pytest
@@ -148,36 +147,21 @@ def test_resident_block_only_for_small_plain_scans(spark, tmp_path, monkeypatch)
     assert got == _native(fresh, probe, 5).collect()
 
 
-def _run_tagged(spark, fn):
-    """``fn()`` and the ``(jobs, tasks)`` it ran, read from the status
-    store through a job group."""
-    sc, group = spark.sparkContext, f"resident-test-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
-    tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
-    return out, (len(jobs), tasks)
-
-
-def test_resident_request_runs_no_search_job_and_one_python_task(spark, tmp_path):
+def test_resident_request_runs_no_search_job_and_one_python_task(
+    spark, tmp_path, run_tagged
+):
     """A warm request on a resident table: ``search`` runs no Spark job,
     and ``summaries`` over its hits runs one job of one (Python) task —
     the hits are one partition, not one slice per core."""
     items = _write(spark, _table(["normal"] * 50, 4), tmp_path / "t")
     P.search(items, "warm-up", dim=DIM).collect()  # builds the block
 
-    hits, work = _run_tagged(spark, lambda: P.search(items, "new", dim=DIM))
-    assert work == (0, 0)
+    hits, jobs, tasks = run_tagged(lambda: P.search(items, "new", dim=DIM))
+    assert (jobs, tasks) == (0, 0)
     summ = P.summaries(hits, "new")
-    rows, work = _run_tagged(spark, summ.collect)
+    rows, jobs, tasks = run_tagged(summ.collect)
     assert len(rows) == 5 and all(r["summary"] for r in rows)
-    assert work == (1, 1)
+    assert (jobs, tasks) == (1, 1)
     assert len(P.sse_events(summ).collect()) == 15
 
 

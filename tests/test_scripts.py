@@ -1,7 +1,7 @@
 """Smoke checks for the probe scripts: each imports cleanly, argument
-errors exit with a usage line before Spark starts, and every
-``curate_corpus_v2`` call in ``scripts/`` passes only keywords the
-function still accepts."""
+errors exit with a usage line before Spark starts, and every call in
+``scripts/``, ``bench.py`` and ``perfbench/`` to a recently re-signed
+package function still binds to its signature."""
 
 from __future__ import annotations
 
@@ -16,8 +16,14 @@ import pytest
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
     dedup as D,
 )
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
+    textstats as TS,
+)
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+    curation as SC,
+)
 
-SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize(
@@ -28,21 +34,55 @@ def test_script_imports(name):
     assert callable(importlib.import_module(f"scripts.{name}").main)
 
 
-def test_scripts_call_curate_corpus_v2_with_known_keywords():
-    accepted = set(inspect.signature(D.curate_corpus_v2).parameters)
-    for fname in sorted(os.listdir(SCRIPTS)):
-        if not fname.endswith(".py"):
-            continue
-        with open(os.path.join(SCRIPTS, fname)) as fh:
+# Package functions whose parameters changed recently, by name: a call to
+# one of them outside the package (scripts, the bench CLI, perfbench)
+# must still bind to its signature, since no other test imports those.
+RESIGNED = {
+    "unigram_surprisal": TS.unigram_surprisal,
+    "curate_corpus": D.curate_corpus,
+    "curate_corpus_v2": D.curate_corpus_v2,
+    "curation_v2_gated": D.curation_v2_gated,
+    "curation_v2_kept": D.curation_v2_kept,
+    "curation_survivors": SC.curation_survivors,
+    "curation_v2_survivors": SC.curation_v2_survivors,
+    "curation_maintain_batch": SC.curation_maintain_batch,
+    "curation_v2_maintain_batch": SC.curation_v2_maintain_batch,
+}
+
+
+def _caller_files() -> list[str]:
+    out = [os.path.join(REPO, "bench.py")]
+    for sub in ("scripts", "perfbench"):
+        for root, _, files in os.walk(os.path.join(REPO, sub)):
+            out += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def test_callers_bind_to_resigned_signatures():
+    seen = set()
+    for path in _caller_files():
+        with open(path) as fh:
             tree = ast.parse(fh.read())
         for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "curate_corpus_v2"
-            ):
-                kws = {k.arg for k in node.keywords if k.arg is not None}
-                assert kws <= accepted, (fname, node.lineno, kws - accepted)
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name not in RESIGNED:
+                continue
+            seen.add(name)
+            sig = inspect.signature(RESIGNED[name])
+            kws = [k.arg for k in node.keywords]
+            where = (os.path.relpath(path, REPO), node.lineno, name)
+            if None in kws or any(isinstance(a, ast.Starred) for a in node.args):
+                # ``*args`` / ``**kwargs``: only the named keywords are known
+                assert set(kws) - {None} <= set(sig.parameters), where
+            else:
+                try:
+                    sig.bind(*node.args, **dict.fromkeys(kws))
+                except TypeError as e:
+                    raise AssertionError(f"{where}: {e}") from None
+    assert {"curate_corpus_v2", "curation_v2_survivors"} <= seen
 
 
 def _no_spark(*args, **kwargs):

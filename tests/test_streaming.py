@@ -2295,3 +2295,67 @@ def test_curation_v2_maintenance_stream_restart(spark, sf_dir, tmp_path):
         ).collect()
     }
     assert got == twin and twin
+
+
+def test_curation_v2_survivors_vocab_arms_agree(spark, sf_dir, tmp_path):
+    """The v2 view's per-doc surprisal takes the same vocab-broadcast
+    dispatch as ``unigram_surprisal``; forcing the shuffled-join arm (a
+    zero vocab bound) over one maintained store returns the same 13-column
+    rows as the default broadcast arm."""
+    from unittest import mock
+
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
+        textstats as TS,
+    )
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+        curation as SC,
+    )
+
+    store = str(tmp_path / "store")
+    SC.curation_v2_maintain_batch(
+        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+        store,
+        min_stops=0,
+    )
+    want = sorted(map(tuple, SC.curation_v2_survivors(spark, store).collect()))
+    with mock.patch.object(TS, "VOCAB_BROADCAST_MAX", 0):
+        got = sorted(
+            map(tuple, SC.curation_v2_survivors(spark, store).collect())
+        )
+    assert want and got == want
+
+
+def test_curation_stores_refuse_other_parameters(spark, tmp_path):
+    """A maintenance store pins the parameters that decide its contents:
+    a later batch (or, for ``m_buckets``, the v2 view) with another value
+    raises a ValueError naming the parameter instead of mixing stores.
+    The same parameters resume (the restart tests above)."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+        curation as SC,
+    )
+
+    words = " ".join(f"w{i}" for i in range(30))
+    batch = spark.createDataFrame(
+        [(1, "en", words), (2, "de", words + " tail")],
+        "doc_id long, lang string, text string",
+    )
+    v1 = str(tmp_path / "v1")
+    SC.curation_maintain_batch(batch, v1)
+    for key, value in (("langs", ("en",)), ("min_tokens", 10), ("threshold", 0.5)):
+        with pytest.raises(ValueError, match=f"{key}="):
+            SC.curation_maintain_batch(batch, v1, **{key: value})
+    SC.curation_maintain_batch(batch, v1, langs=("fr", "de", "en"))
+
+    v2 = str(tmp_path / "v2")
+    SC.curation_v2_maintain_batch(batch, v2, min_stops=0)
+    for key, value in (
+        ("min_stops", 1), ("threshold", 0.5), ("m_buckets", 512),
+        ("dsir_hash", "xx64"),
+    ):
+        with pytest.raises(ValueError, match=f"{key}="):
+            SC.curation_v2_maintain_batch(
+                batch, v2, **{"min_stops": 0, key: value}
+            )
+    with pytest.raises(ValueError, match="m_buckets="):
+        SC.curation_v2_survivors(spark, v2, m_buckets=512)
+    SC.curation_v2_survivors(spark, v2, m_buckets=1024).collect()

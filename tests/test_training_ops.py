@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
     textstats as T,
@@ -289,6 +291,55 @@ class TestUnigramSurprisal:
         got1 = sorted(map(tuple, TS.unigram_surprisal(df1).collect()))
         got8 = sorted(map(tuple, TS.unigram_surprisal(df8).collect()))
         assert got1 == got8
+
+
+def _surprisal_both_arms(df):
+    """``unigram_surprisal`` rows under each arm of its vocab-broadcast
+    dispatch: the default (broadcast LM) and the tf-first token-keyed
+    join, forced by a zero vocab bound."""
+    from unittest import mock
+
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
+        textstats as TS,
+    )
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.plans import (
+        explain as E,
+    )
+
+    out = []
+    for bound in (TS.VOCAB_BROADCAST_MAX, 0):
+        with mock.patch.object(TS, "VOCAB_BROADCAST_MAX", bound):
+            scored = TS.unigram_surprisal(df)
+        rows = sorted(map(tuple, scored.collect()))
+        out.append((E.plan_signature(scored), rows))
+    return out
+
+
+def test_unigram_surprisal_vocab_arms_agree_on_fixture(spark, sf_dir):
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
+        load_table,
+    )
+
+    (sig_b, broadcast), (sig_j, joined) = _surprisal_both_arms(
+        load_table(spark, sf_dir, "documents")
+    )
+    # the join arm folds (doc, token) counts first: one more aggregate
+    assert sig_j["HashAggregate"] > sig_b["HashAggregate"]
+    assert broadcast and joined == broadcast
+
+
+_WORDS = st.sampled_from(["a", "b", "cc", "ddd", "e", "a-b", "Zz"])
+
+
+@given(st.lists(st.lists(_WORDS, max_size=8), min_size=1, max_size=10))
+@settings(max_examples=8, deadline=None)
+def test_unigram_surprisal_vocab_arms_agree_on_random_corpora(spark, texts):
+    df = spark.createDataFrame(
+        [(i, " ".join(t)) for i, t in enumerate(texts)],
+        "doc_id long, text string",
+    )
+    (_, broadcast), (_, joined) = _surprisal_both_arms(df)
+    assert joined == broadcast
 
 
 def test_surprisal_tercile_buckets_properties(spark, sf_dir):
