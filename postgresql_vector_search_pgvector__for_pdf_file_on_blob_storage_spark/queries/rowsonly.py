@@ -613,7 +613,7 @@ def blob_event_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolated fetch failures (exactly 1, the planted ghost event)."""
     import os as _os
 
-    from ..sources import binary as BIN
+    from ..sources import minipdf as MP
     from ..streaming import blobevents as BE
     from ..streaming import ingest as IG
 
@@ -626,13 +626,11 @@ def blob_event_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = _gallery_scratch("blobev_")
     blobs = f"{tmp}/blobs"
     _os.makedirs(blobs)
-    # three 2-page fake PDFs from fixture texts + one non-PDF
+    # three 2-page PDFs from fixture texts + one non-PDF
     for i in range(3):
         with open(f"{blobs}/doc{i}.pdf", "wb") as fh:
             fh.write(
-                BIN.make_fake_pdf(
-                    [docs[2 * i]["text"], docs[2 * i + 1]["text"]]
-                )
+                MP.make_pdf([docs[2 * i]["text"], docs[2 * i + 1]["text"]])
             )
     with open(f"{blobs}/note.txt", "wb") as fh:
         fh.write(b"not a pdf")

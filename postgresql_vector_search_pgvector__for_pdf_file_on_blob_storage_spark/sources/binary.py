@@ -12,12 +12,9 @@ content)`` with partition-parallel reads; the same source works batch
 ``Trigger.AvailableNow`` — see streaming.ingest).  Note Spark's binaryFile
 cap: one file must fit in 2 GB (SURVEY.md §7.4 item 7).
 
-PDF parsing: PDFBox is JVM-only; the Python-side extractor tries ``pypdf``
-/ ``pdfminer`` and otherwise falls back to a deterministic FAKE format used
-by tests (``%FAKEPDF`` header, pages separated by form-feed).  The Spark
-plumbing — schema, ``mapInPandas`` batch shape, page explode — is identical
-for real and fake parsers, so swapping in a real lib changes nothing
-upstream.
+PDF parsing: PDFBox is JVM-only, so pages come from one Python parser,
+the bundled pure-stdlib ``sources/minipdf``.  No other parser is tried, so
+a document gives the same pages whatever is installed.
 """
 
 from __future__ import annotations
@@ -29,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-FAKE_PDF_MAGIC = b"%FAKEPDF"
+from .minipdf import extract_text_pages
 
 PAGES_SCHEMA = "fileName string, pageNumber int, text string"
 
@@ -62,38 +59,15 @@ def pdf_filter(df: DataFrame, col: str = "path") -> DataFrame:
 
 
 def _extract_pages_py(content: bytes) -> list[str]:
-    """Whole-document -> per-page text, best available parser.
-
-    Order: pypdf if installed (full-fidelity), then the bundled pure-stdlib
-    simple-PDF parser (sources/minipdf — real ``%PDF-`` files: classic and
+    """Whole-document -> per-page text through
+    :func:`minipdf.extract_text_pages` (real ``%PDF-`` files: classic and
     1.5+ object-stream layouts, Flate/raw content streams, Type0/ToUnicode
-    CMap text), then the ``%FAKEPDF`` test format.  Unknown/corrupt
-    formats yield no pages (the reference logs & skips unparseable pages,
-    Function.java:121-125).
+    CMap text).  A missing, unknown or corrupt document yields no pages:
+    per-document parse errors must never fail the job (the reference logs
+    & skips unparseable pages, Function.java:121-125).
     """
-    if content is None:
-        return []
-    if content.startswith(FAKE_PDF_MAGIC):
-        body = content[len(FAKE_PDF_MAGIC) :]
-        return body.decode("utf-8", errors="replace").split("\f")
-    try:  # pragma: no cover - pypdf absent in the build container
-        import io
-
-        from pypdf import PdfReader
-
-        reader = PdfReader(io.BytesIO(content))
-        return [(p.extract_text() or "") for p in reader.pages]
-    except ImportError:
-        pass
-    except Exception:
-        # Per-document parse errors must never fail the job (the reference
-        # skips bad pages); emit zero pages for a corrupt file.
-        return []
     try:
-        from .minipdf import extract_text_pages
-
-        pages = extract_text_pages(content)
-        return pages if pages is not None else []
+        return extract_text_pages(content) or []
     except Exception:
         return []
 
@@ -125,8 +99,3 @@ def extract_pages(binary_df: DataFrame) -> DataFrame:
             )
 
     return binary_df.select("path", "content").mapInPandas(gen, PAGES_SCHEMA)
-
-
-def make_fake_pdf(pages: list[str]) -> bytes:
-    """Build a ``%FAKEPDF`` fixture blob (used by tests and demos)."""
-    return FAKE_PDF_MAGIC + "\f".join(pages).encode("utf-8")

@@ -1,8 +1,9 @@
 """Minimal real-PDF text extraction (and a tiny writer for fixtures).
 
-The reference parses real PDFs with PDFBox (Function.java:90-132).  This
-container ships neither PDFBox nor pypdf/pdfminer, so the engine carries a
-small pure-stdlib parser for the simple-PDF subset that covers
+The reference parses real PDFs with PDFBox (Function.java:90-132), which
+is JVM-only.  The engine carries this pure-stdlib parser instead, and it
+is the only PDF reader (sources/binary.py calls nothing else, so an upload
+gives the same pages wherever it runs).  It covers the simple-PDF subset of
 generator-produced documents: classic xref layout OR the PDF 1.5+ layout
 every post-2005 writer emits (``/Type /ObjStm`` compressed object streams
 + cross-reference streams), FlateDecode (zlib) or raw content streams,
@@ -17,9 +18,7 @@ files under the Standard security handler — RC4 (V<=2), AES-128
 "restricted" shape — decrypt transparently (AES via the bundled
 FIPS-197 ``tinyaes``).  PNG/TIFF Flate predictors decode.  It is still
 NOT a general PDF library (no JBIG2/CCITT/DCT image codecs, no font
-programs) — when ``pypdf`` is available the extractor
-(sources/binary.py) prefers it; this module is the guaranteed-present
-fallback so "feed a real PDF" works out of the box.
+programs beyond the cmaps and CFF encodings that map codes to text).
 
 Object discovery is a raw scan for ``N 0 obj``/``endobj`` spans plus
 expansion of every object stream's contents — xref tables/streams are
@@ -34,6 +33,9 @@ stream, binary W-packed entries); ``make_pdf_cid`` writes a CID-keyed
 ``/Type0`` ``Identity-H`` PDF with a ``/ToUnicode`` CMap (the shape every
 Unicode-capable writer emits) — all open in any PDF viewer, so tests
 exercise the real formats end-to-end rather than a private stand-in.
+The writers share one page-tree builder (``_page_tree``) and one
+classic-xref assembler (``_classic_file``); each differs only in its font
+objects and in how a line becomes a ``Tj`` operand.
 """
 
 from __future__ import annotations
@@ -1497,7 +1499,7 @@ def extract_text_pages(
 ) -> list[str] | None:
     """Per-page text from a simple real PDF (classic or 1.5+ object-stream
     layout; simple or Type0/ToUnicode fonts), or ``None`` if ``content``
-    is not parseable as one (callers fall through to other formats).
+    is not parseable as one (the document source then yields no pages).
     ``password`` is tried as the user then the owner password of an
     encrypted file (alongside the empty password); a wrong password falls
     through to None like any other unreadable file."""
@@ -1535,67 +1537,103 @@ def extract_text_pages(
     return pages if pages else None
 
 
-def _escape_literal(s: str) -> bytes:
-    b = s.encode("latin-1", "replace")
+def _escape_bytes(b: bytes) -> bytes:
     return b.replace(b"\\", rb"\\").replace(b"(", rb"\(").replace(b")", rb"\)")
+
+
+def _escape_literal(s: str) -> bytes:
+    return _escape_bytes(s.encode("latin-1", "replace"))
+
+
+# --- fixture writers -------------------------------------------------------
+# Every writer emits the same skeleton: 1 catalog, 2 page tree, its font
+# objects from 3, then one page/content pair per page; the writers differ
+# only in the font objects and in how a line becomes a ``Tj`` operand.
+
+_HELVETICA = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+
+def _norm_pages(pages: list[list[str]] | list[str]) -> list[list[str]]:
+    """One list of lines per page; a str page is split on newlines."""
+    return [p.split("\n") if isinstance(p, str) else list(p) for p in pages]
+
+
+def _char_codes(norm: list[list[str]], first: int) -> dict[str, int]:
+    """Sequential code per distinct character, in document order."""
+    codes: dict[str, int] = {}
+    for lines in norm:
+        for line in lines:
+            for ch in line:
+                codes.setdefault(ch, len(codes) + first)
+    return codes
+
+
+def _flate_stream(raw: bytes, head: bytes = b"", tail: bytes = b"") -> bytes:
+    """A Flate stream object body; ``head``/``tail`` are dict keys written
+    before ``/Length`` and after ``/Filter``."""
+    data = zlib.compress(raw)
+    return (
+        b"<< %s/Length %d /Filter /FlateDecode%s >>\nstream\n"
+        % (head, len(data), tail)
+        + data
+        + b"\nendstream"
+    )
+
+
+def _page_tree(norm: list[list[str]], fonts: list[bytes], show) -> list[bytes]:
+    """Object bodies numbered from 1: catalog, page tree, ``fonts`` (the
+    page font ``/F1`` is object 3), then each page and its content stream.
+    ``show`` maps one line to its ``Tj`` operand."""
+    kids = [3 + len(fonts) + 2 * i for i in range(len(norm))]
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids ["
+        + b" ".join(b"%d 0 R" % k for k in kids)
+        + b"] /Count %d >>" % len(norm),
+        *fonts,
+    ]
+    for kid, lines in zip(kids, norm):
+        objs.append(
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
+            % (kid + 1)
+        )
+        shown = b"0 -14 Td\n".join(show(line) + b" Tj\n" for line in lines)
+        objs.append(_flate_stream(b"BT /F1 12 Tf 72 720 Td\n" + shown + b"ET"))
+    return objs
+
+
+def _classic_file(objs: list[bytes], trailer: bytes = b"") -> bytes:
+    """Classic-layout file: ``objs`` numbered from 1, an xref table, and a
+    trailer dict ending in ``trailer``."""
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for n, body in enumerate(objs, start=1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
+    xref_at = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    out += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    out += (
+        b"trailer\n<< /Size %d /Root 1 0 R%s >>\nstartxref\n%d\n%%%%EOF\n"
+        % (len(objs) + 1, trailer, xref_at)
+    )
+    return bytes(out)
+
+
+def _literal_show(line: str) -> bytes:
+    return b"(" + _escape_literal(line) + b")"
+
+
+def _hex_show(codes: dict[str, int], fmt: bytes):
+    return lambda line: b"<" + b"".join(fmt % codes[ch] for ch in line) + b">"
 
 
 def make_pdf(pages: list[list[str]] | list[str]) -> bytes:
     """Write a real, valid, Flate-compressed PDF — one page per entry; an
     entry may be a single string (split on newlines) or a list of lines."""
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    objs: list[bytes] = []  # bodies; object number = index+1
-
-    n_pages = len(norm)
-    # 1: catalog, 2: pages, 3: font, 4..: page+content pairs
-    kid_nums = [4 + 2 * i for i in range(n_pages)]
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages
-    )
-    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-            % content_num
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            ops += b"(" + _escape_literal(line) + b") Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        objs.append(
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-            + data
-            + b"\nendstream"
-        )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for n, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
-
-
-def _escape_bytes(b: bytes) -> bytes:
-    return b.replace(b"\\", rb"\\").replace(b"(", rb"\(").replace(b")", rb"\)")
+    norm = _norm_pages(pages)
+    return _classic_file(_page_tree(norm, [_HELVETICA], _literal_show))
 
 
 def make_pdf_encoded(
@@ -1623,7 +1661,7 @@ def make_pdf_encoded(
     for code, ch in sorted(table.items()):
         inverse.setdefault(ch, code)
 
-    def enc_line(line: str) -> bytes:
+    def show(line: str) -> bytes:
         out = bytearray()
         for ch in line:
             code = inverse.get(ch)
@@ -1636,19 +1674,8 @@ def make_pdf_encoded(
                         " encoding"
                     )
             out.append(code)
-        return bytes(out)
+        return b"(" + _escape_bytes(bytes(out)) + b")"
 
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    objs: list[bytes] = []
-    n_pages = len(norm)
-    kid_nums = [4 + 2 * i for i in range(n_pages)]
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages
-    )
     if differences:
         diffs = bytearray(b"/Differences [")
         for code in sorted(differences):
@@ -1662,46 +1689,12 @@ def make_pdf_encoded(
         encent = b"/Encoding /%s" % base.encode("ascii")
     else:
         encent = b""
-    objs.append(
+    font = (
         b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
         + encent
         + b" >>"
     )
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-            % content_num
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            ops += b"(" + _escape_bytes(enc_line(line)) + b") Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        objs.append(
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-            + data
-            + b"\nendstream"
-        )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for n, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+    return _classic_file(_page_tree(_norm_pages(pages), [font], show))
 
 
 def make_pdf_15(pages: list[list[str]] | list[str]) -> bytes:
@@ -1713,64 +1706,25 @@ def make_pdf_15(pages: list[list[str]] | list[str]) -> bytes:
     streams inside object streams).  Same page/content numbering scheme as
     :func:`make_pdf`.
     """
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    n_pages = len(norm)
-    kid_nums = [4 + 2 * i for i in range(n_pages)]
-    objstm_num = 4 + 2 * n_pages
+    objs = _page_tree(_norm_pages(pages), [_HELVETICA], _literal_show)
+    objstm_num = len(objs) + 1
     xref_num = objstm_num + 1
-
-    packed: list[tuple[int, bytes]] = []  # (objnum, body) inside the ObjStm
-    packed.append((1, b"<< /Type /Catalog /Pages 2 0 R >>"))
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    packed.append(
-        (2, b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages)
-    )
-    packed.append(
-        (3, b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-    )
-    contents: list[tuple[int, bytes]] = []  # top-level stream objects
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        packed.append(
-            (
-                kid_nums[i],
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-                % content_num,
-            )
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            ops += b"(" + _escape_literal(line) + b") Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        contents.append(
-            (
-                content_num,
-                b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-                + data
-                + b"\nendstream",
-            )
-        )
-
-    # Assemble the object stream: header of "objnum offset" pairs, then
-    # the bodies (offsets relative to /First).
-    bodies = b""
+    packed: dict[int, int] = {}  # objnum -> index inside the ObjStm
     header_parts = []
-    for num, body in packed:
+    bodies = b""
+    contents: list[tuple[int, bytes]] = []  # top-level stream objects
+    for num, body in enumerate(objs, start=1):
+        if body.endswith(b"endstream"):
+            contents.append((num, body))
+            continue
+        # ObjStm header: "objnum offset" pairs, offsets relative to /First.
+        packed[num] = len(packed)
         header_parts.append(b"%d %d" % (num, len(bodies)))
         bodies += body + b"\n"
     header = b" ".join(header_parts) + b"\n"
-    payload = zlib.compress(header + bodies)
-    objstm_body = (
-        b"<< /Type /ObjStm /N %d /First %d /Length %d /Filter /FlateDecode >>"
-        b"\nstream\n" % (len(packed), len(header), len(payload))
-        + payload
-        + b"\nendstream"
+    objstm_body = _flate_stream(
+        header + bodies,
+        head=b"/Type /ObjStm /N %d /First %d " % (len(packed), len(header)),
     )
 
     out = bytearray(b"%PDF-1.5\n")
@@ -1781,33 +1735,24 @@ def make_pdf_15(pages: list[list[str]] | list[str]) -> bytes:
 
     # Cross-reference stream: W = [1 4 2] -> (type, field2, field3).
     size = xref_num + 1
-    entries = bytearray()
-
-    def entry(t: int, f2: int, f3: int) -> None:
-        entries.extend(
-            bytes([t]) + f2.to_bytes(4, "big") + f3.to_bytes(2, "big")
-        )
-
     xref_at = len(out)
+    offsets[xref_num] = xref_at
+    entries = bytearray()
     for num in range(size):
         if num == 0:
-            entry(0, 0, 65535)
+            t, f2, f3 = 0, 0, 65535
         elif num in offsets:
-            entry(1, offsets[num], 0)
-        elif num == xref_num:
-            entry(1, xref_at, 0)
+            t, f2, f3 = 1, offsets[num], 0
         else:
-            idx = next(i for i, (n, _) in enumerate(packed) if n == num)
-            entry(2, objstm_num, idx)
-    xdata = zlib.compress(bytes(entries))
-    out += (
-        b"%d 0 obj\n<< /Type /XRef /Size %d /Root 1 0 R /W [1 4 2] "
-        b"/Index [0 %d] /Length %d /Filter /FlateDecode >>\nstream\n"
-        % (xref_num, size, size, len(xdata))
-        + xdata
-        + b"\nendstream\nendobj\n"
+            t, f2, f3 = 2, objstm_num, packed[num]
+        entries += bytes([t]) + f2.to_bytes(4, "big") + f3.to_bytes(2, "big")
+    xref = _flate_stream(
+        bytes(entries),
+        head=b"/Type /XRef /Size %d /Root 1 0 R /W [1 4 2] /Index [0 %d] "
+        % (size, size),
     )
-    out += b"startxref\n%d\n%%%%EOF\n" % xref_at
+    out += b"%d 0 obj\n" % xref_num + xref
+    out += b"\nendobj\nstartxref\n%d\n%%%%EOF\n" % xref_at
     return bytes(out)
 
 
@@ -1829,9 +1774,9 @@ def make_pdf_encrypted(
     from . import tinyaes
 
     plain = make_pdf(pages)
-    objs = [
-        (int(m.group(1)), m.group(2)) for m in _OBJ_RE.finditer(plain)
-    ]
+    # Bodies as parsed back from ``plain`` (each keeps its surrounding
+    # newlines); object numbers run from 1.
+    bodies = [m.group(2) for m in _OBJ_RE.finditer(plain)]
     p = -3904
     file_id = hashlib.md5(plain).digest()
 
@@ -1922,35 +1867,20 @@ def make_pdf_encrypted(
     else:
         raise ValueError(f"scheme must be rc4|aesv2|aesv3, got {scheme!r}")
 
-    out_objs: list[tuple[int, bytes]] = []
-    for num, body in objs:
+    out_objs = []
+    for num, body in enumerate(bodies, start=1):
         span = _stream_span(body)
         if span:
             # AES payloads grow (IV + padding): keep /Length honest.
             data = enc_payload(num, body[span[1] : span[2]])
             body = _with_payload(body, span, data)
-        out_objs.append((num, body))
-    enc_num = max(num for num, _ in out_objs) + 1
-    out_objs.append((enc_num, enc_dict))
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: dict[int, int] = {}
-    for num, body in out_objs:
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num + body + b"\nendobj\n"
-    size = enc_num + 1
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % size
-    out += b"0000000000 65535 f \n"
-    for num in range(1, size):
-        out += b"%010d 00000 n \n" % offsets[num]
+        out_objs.append(body)
+    enc_num = len(out_objs) + 1
     idhex = file_id.hex().upper().encode("ascii")
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R /Encrypt %d 0 R "
-        b"/ID [<%s> <%s>] >>\nstartxref\n%d\n%%%%EOF\n"
-        % (size, enc_num, idhex, idhex, xref_at)
+    return _classic_file(
+        out_objs + [enc_dict],
+        b" /Encrypt %d 0 R /ID [<%s> <%s>]" % (enc_num, idhex, idhex),
     )
-    return bytes(out)
 
 
 def make_pdf_cid(pages: list[list[str]] | list[str]) -> bytes:
@@ -1963,16 +1893,8 @@ def make_pdf_cid(pages: list[list[str]] | list[str]) -> bytes:
     CIDs here are assigned sequentially per distinct character, so the
     mapping genuinely exercises the ToUnicode path (no identity shortcut).
     """
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    # Sequential CID per distinct character across the document.
-    cid_of: dict[str, int] = {}
-    for lines in norm:
-        for line in lines:
-            for ch in line:
-                if ch not in cid_of:
-                    cid_of[ch] = len(cid_of) + 1
+    norm = _norm_pages(pages)
+    cid_of = _char_codes(norm, 1)
 
     # ToUnicode CMap: bfchar blocks of at most 100 entries.
     items = sorted((cid, ch) for ch, cid in cid_of.items())
@@ -1993,69 +1915,18 @@ def make_pdf_cid(pages: list[list[str]] | list[str]) -> bytes:
         b"endcodespacerange\n" + b"\n".join(blocks) + b"\nendcmap\n"
         b"CMapName currentdict /CMap defineresource pop\nend\nend\n"
     )
-    cmap_z = zlib.compress(cmap_src)
-
-    n_pages = len(norm)
-    # 1 catalog, 2 pages, 3 Type0 font, 4 descendant, 5 ToUnicode,
-    # 6.. page+content pairs.
-    kid_nums = [6 + 2 * i for i in range(n_pages)]
-    objs: list[bytes] = []
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages
-    )
-    objs.append(
+    # 3 Type0 font, 4 descendant, 5 ToUnicode.
+    fonts = [
         b"<< /Type /Font /Subtype /Type0 /BaseFont /MiniSans "
         b"/Encoding /Identity-H /DescendantFonts [4 0 R] "
-        b"/ToUnicode 5 0 R >>"
-    )
-    objs.append(
+        b"/ToUnicode 5 0 R >>",
         b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /MiniSans "
         b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
-        b"/Supplement 0 >> /DW 1000 /CIDToGIDMap /Identity >>"
-    )
-    objs.append(
-        b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(cmap_z)
-        + cmap_z
-        + b"\nendstream"
-    )
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-            % content_num
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            hexcids = b"".join(b"%04X" % cid_of[ch] for ch in line)
-            ops += b"<" + hexcids + b"> Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        objs.append(
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-            + data
-            + b"\nendstream"
-        )
+        b"/Supplement 0 >> /DW 1000 /CIDToGIDMap /Identity >>",
+        _flate_stream(cmap_src),
+    ]
+    return _classic_file(_page_tree(norm, fonts, _hex_show(cid_of, b"%04X")))
 
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for n, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
 
 def _sfnt_with_cmap4(uni2gid: dict[int, int]) -> bytes:
     """A minimal TrueType font program whose only table is a ``cmap``
@@ -2117,7 +1988,6 @@ def _sfnt_with_cmap4(uni2gid: dict[int, int]) -> bytes:
     font += cmap
     return bytes(font)
 
-
 def make_pdf_type0_embedded(pages: list[list[str]] | list[str]) -> bytes:
     """Write a Type0/Identity-H PDF with NO /ToUnicode CMap: the only
     route back to text is the embedded TrueType's (3,1) cmap inside
@@ -2127,96 +1997,35 @@ def make_pdf_type0_embedded(pages: list[list[str]] | list[str]) -> bytes:
     sequentially starting at 3 (NOT code points), so an identity fallback
     would produce garbage — round-tripping genuinely exercises the
     embedded-cmap path."""
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    gid_of: dict[str, int] = {}
-    for lines in norm:
-        for line in lines:
-            for ch in line:
-                if ord(ch) >= 0xFFFF:
-                    # >=: U+FFFF itself is format 4's terminal-segment
-                    # sentinel — parsers (ours at _parse_cmap_subtable,
-                    # and real ones) skip a segment starting there, so it
-                    # cannot round-trip either.
-                    raise ValueError(
-                        "make_pdf_type0_embedded: non-BMP character"
-                        f" {ch!r} — the format-4 cmap this fixture emits"
-                        " is uint16-coded; use make_pdf_cid (ToUnicode"
-                        " handles surrogate pairs) for such text"
-                    )
-                if ch not in gid_of:
-                    gid_of[ch] = len(gid_of) + 3
+    norm = _norm_pages(pages)
+    gid_of = _char_codes(norm, 3)
+    for ch in gid_of:
+        if ord(ch) >= 0xFFFF:
+            # >=: U+FFFF itself is format 4's terminal-segment
+            # sentinel — parsers (ours at _parse_cmap_subtable,
+            # and real ones) skip a segment starting there, so it
+            # cannot round-trip either.
+            raise ValueError(
+                "make_pdf_type0_embedded: non-BMP character"
+                f" {ch!r} — the format-4 cmap this fixture emits"
+                " is uint16-coded; use make_pdf_cid (ToUnicode"
+                " handles surrogate pairs) for such text"
+            )
     font_raw = _sfnt_with_cmap4({ord(ch): g for ch, g in gid_of.items()})
-    font_z = zlib.compress(font_raw)
-
-    n_pages = len(norm)
-    # 1 catalog, 2 pages, 3 Type0 font, 4 descendant, 5 descriptor,
-    # 6 FontFile2, 7.. page+content pairs.
-    kid_nums = [7 + 2 * i for i in range(n_pages)]
-    objs: list[bytes] = []
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages
-    )
-    objs.append(
+    # 3 Type0 font, 4 descendant, 5 descriptor, 6 FontFile2.
+    fonts = [
         b"<< /Type /Font /Subtype /Type0 /BaseFont /MiniSans "
-        b"/Encoding /Identity-H /DescendantFonts [4 0 R] >>"
-    )
-    objs.append(
+        b"/Encoding /Identity-H /DescendantFonts [4 0 R] >>",
         b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /MiniSans "
         b"/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
         b"/Supplement 0 >> /DW 1000 /CIDToGIDMap /Identity "
-        b"/FontDescriptor 5 0 R >>"
-    )
-    objs.append(
+        b"/FontDescriptor 5 0 R >>",
         b"<< /Type /FontDescriptor /FontName /MiniSans /Flags 4 "
         b"/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 "
-        b"/Descent -200 /CapHeight 700 /StemV 80 /FontFile2 6 0 R >>"
-    )
-    objs.append(
-        b"<< /Length %d /Filter /FlateDecode /Length1 %d >>\nstream\n"
-        % (len(font_z), len(font_raw))
-        + font_z
-        + b"\nendstream"
-    )
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-            % content_num
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            hexgids = b"".join(b"%04X" % gid_of[ch] for ch in line)
-            ops += b"<" + hexgids + b"> Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        objs.append(
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-            + data
-            + b"\nendstream"
-        )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for n, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+        b"/Descent -200 /CapHeight 700 /StemV 80 /FontFile2 6 0 R >>",
+        _flate_stream(font_raw, tail=b" /Length1 %d" % len(font_raw)),
+    ]
+    return _classic_file(_page_tree(norm, fonts, _hex_show(gid_of, b"%04X")))
 
 
 def _make_cff(glyph_names: list[str], codes: list[int]) -> bytes:
@@ -2279,7 +2088,6 @@ def _make_cff(glyph_names: list[str], codes: list[int]) -> bytes:
         + charstrings
     )
 
-
 def make_pdf_cff_simple(pages: list[list[str]] | list[str]) -> bytes:
     """Write a SIMPLE-font PDF whose only route back to text is the
     embedded bare CFF's own Encoding + charset: /FontFile3 (/Type1C), NO
@@ -2289,16 +2097,9 @@ def make_pdf_cff_simple(pages: list[list[str]] | list[str]) -> bytes:
     digits, punctuation) with custom ``uniXXXX`` strings, so both SID
     ranges are exercised.  The layout PDFBox survives via its font
     machinery in the reference (Function.java:94)."""
-    norm: list[list[str]] = [
-        p.split("\n") if isinstance(p, str) else list(p) for p in pages
-    ]
-    gid_of: dict[str, int] = {}
-    for lines in norm:
-        for line in lines:
-            for ch in line:
-                if ch not in gid_of:
-                    gid_of[ch] = len(gid_of) + 1
-    if len(gid_of) > 120:
+    norm = _norm_pages(pages)
+    code_of = _char_codes(norm, 128)
+    if len(code_of) > 120:
         raise ValueError(
             "make_pdf_cff_simple: too many distinct characters for the"
             " single-byte code space this fixture assigns from 128"
@@ -2308,69 +2109,15 @@ def make_pdf_cff_simple(pages: list[list[str]] | list[str]) -> bytes:
         ch = _glyph_char(nm)
         if ch is not None and len(ch) == 1 and ch not in rev_std:
             rev_std[ch] = nm
-    by_gid = sorted(gid_of, key=gid_of.get)
-    names = [rev_std.get(ch, "uni%04X" % ord(ch)) for ch in by_gid]
-    codes = [128 + i for i in range(len(by_gid))]
-    code_of = {ch: 128 + gid_of[ch] - 1 for ch in gid_of}
-    font_raw = _make_cff(names, codes)
-    font_z = zlib.compress(font_raw)
-
-    n_pages = len(norm)
-    kid_nums = [6 + 2 * i for i in range(n_pages)]
-    objs: list[bytes] = []
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    kids = b" ".join(b"%d 0 R" % k for k in kid_nums)
-    objs.append(
-        b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n_pages
-    )
-    objs.append(
+    names = [rev_std.get(ch, "uni%04X" % ord(ch)) for ch in code_of]
+    font_raw = _make_cff(names, list(code_of.values()))
+    # 3 font, 4 descriptor, 5 FontFile3.
+    fonts = [
         b"<< /Type /Font /Subtype /Type1 /BaseFont /MiniCFF "
-        b"/FontDescriptor 4 0 R >>"
-    )
-    objs.append(
+        b"/FontDescriptor 4 0 R >>",
         b"<< /Type /FontDescriptor /FontName /MiniCFF /Flags 4 "
         b"/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 "
-        b"/Descent -200 /CapHeight 700 /StemV 80 /FontFile3 5 0 R >>"
-    )
-    objs.append(
-        b"<< /Length %d /Filter /FlateDecode /Subtype /Type1C >>\nstream\n"
-        % len(font_z)
-        + font_z
-        + b"\nendstream"
-    )
-    for i, lines in enumerate(norm):
-        content_num = kid_nums[i] + 1
-        objs.append(
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 3 0 R >> >> /Contents %d 0 R >>"
-            % content_num
-        )
-        ops = bytearray(b"BT /F1 12 Tf 72 720 Td\n")
-        for j, line in enumerate(lines):
-            if j:
-                ops += b"0 -14 Td\n"
-            hexcodes = b"".join(b"%02X" % code_of[ch] for ch in line)
-            ops += b"<" + hexcodes + b"> Tj\n"
-        ops += b"ET"
-        data = zlib.compress(bytes(ops))
-        objs.append(
-            b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(data)
-            + data
-            + b"\nendstream"
-        )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for n, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % n + body + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+        b"/Descent -200 /CapHeight 700 /StemV 80 /FontFile3 5 0 R >>",
+        _flate_stream(font_raw, tail=b" /Subtype /Type1C"),
+    ]
+    return _classic_file(_page_tree(norm, fonts, _hex_show(code_of, b"%02X")))

@@ -6,8 +6,7 @@ standard security handler uses AES-128-CBC (``/AESV2``, PDF 32000-1
 in modern encrypted files.  This module implements exactly what that
 needs: key expansion and CBC encrypt/decrypt for 128/192/256-bit keys.
 Throughput is Python-interpreter speed (~MB/s) — entirely adequate for
-per-document parsing, and the pypdf seam still takes precedence when a
-native library is installed.
+per-document parsing.
 
 Self-contained re-implementation from the FIPS-197 spec; test vectors
 from the spec's Appendix C are pinned in tests/test_minipdf.py.

@@ -59,6 +59,7 @@ from .. import pipeline as P
 from ..functions import embed as E
 from ..functions import text as X
 from .ingest import write_ingest
+from .stores import read_store
 
 BLOB_CREATED = "Microsoft.Storage.BlobCreated"
 
@@ -138,8 +139,6 @@ def blob_event_stream(
     ingested_log = status_out.rstrip("/") + "_ingested"
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        import os as _os
-
         wanted = (
             batch_df.filter(F.col("eventType") == F.lit(BLOB_CREATED))
             .select(blob_name_from_subject(F.col("subject")).alias("path"))
@@ -151,8 +150,8 @@ def blob_event_stream(
             # blob — a broadcast anti-join, never a scan of chunks_out).
             .dropDuplicates(["path"])
         )
-        if _os.path.isdir(ingested_log):
-            seen = batch_df.sparkSession.read.parquet(ingested_log)
+        seen = read_store(batch_df.sparkSession, ingested_log)
+        if seen is not None:
             wanted = wanted.join(
                 F.broadcast(seen), "path", "left_anti"
             )

@@ -39,17 +39,24 @@ doing the candidate pruning that MinHash bands do for text:
 - State is a relation, not executor memory — and store existence is
   probed by *reading* it (portable to object stores), never by
   ``os.path`` checks that only see the local filesystem.
+- **Pinned parameters**: the store records ``eps`` and a digest of the
+  frozen centroids (``utils.pin_marker``); a later batch or stream with
+  other ones is refused rather than matched against clusters that mean
+  something else.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
 from ..operators import blockscan as BS
 from ..operators.semdedup import assign_to_centroids, kmeans_centroids
-from ..utils import spread
+from ..utils import pin_marker, spread
 from .stores import prepare_store, read_store, write_store_partitioned
 
 __all__ = ["fit_frozen_centroids", "detect_and_register", "semdedup_stream"]
@@ -121,6 +128,23 @@ def _bipartite_edges(
     )
 
 
+def _pin_store(spark: SparkSession, store_dir: str, centroids, eps) -> None:
+    """Pin ``eps`` and a digest of the frozen centroids to the store: its
+    ``cluster_id`` partitions and recorded matches mean nothing under
+    other ones.  Called only once the root holds rows — a marker dir in
+    a still-empty root would make :func:`read_store` fail instead of
+    reporting the store missing."""
+    digest = hashlib.sha256(
+        np.asarray(centroids, dtype=np.float64).tobytes()
+    ).hexdigest()[:16]
+    for key, value in (("eps", float(eps)), ("centroids", digest)):
+        pin_marker(
+            spark, store_dir, key, value, "semantic vector store",
+            "its clusters and matches were built with another value; use"
+            " a fresh store_dir",
+        )
+
+
 def detect_and_register(
     batch: DataFrame,
     centroids: list[list[float]],
@@ -143,6 +167,9 @@ def detect_and_register(
     NULL-embedding rows are dropped up front — they cannot be duplicate
     candidates (same guard as the batch operator)."""
     spark = batch.sparkSession
+    store = read_store(spark, store_dir)
+    if store is not None:
+        _pin_store(spark, store_dir, centroids, eps)
     # Zero-norm guard (the batch kernel's norms==0 -> 1.0, applied at the
     # normalize-on-write boundary): an all-zero embedding must become a
     # zero vector that never matches, not a NaN row living in the store.
@@ -167,9 +194,7 @@ def detect_and_register(
         .localCheckpoint(eager=True)
     )
     scored = new.withColumn("is_new", F.lit(True))
-    store = prepare_store(
-        read_store(spark, store_dir), epoch_id, "semantic vector store"
-    )
+    store = prepare_store(store, epoch_id, "semantic vector store")
     if store is not None:
         # Partition-pruned store read: only clusters present in this
         # batch are ever opened (cluster count is small by construction,
@@ -195,7 +220,9 @@ def detect_and_register(
     # Register AFTER matching (a batch never matches its own store rows;
     # the within-batch join covers those pairs exactly once).  Empty-safe
     # partitioned write (stores.write_store_partitioned).
-    write_store_partitioned(new, store_dir, "cluster_id", epoch_id)
+    wrote = write_store_partitioned(new, store_dir, "cluster_id", epoch_id)
+    if wrote and store is None:
+        _pin_store(spark, store_dir, centroids, eps)
 
 
 def semdedup_stream(

@@ -1,7 +1,8 @@
 """Smoke checks for the probe scripts: each imports cleanly, argument
 errors exit with a usage line before Spark starts, and every call in
 ``scripts/``, ``bench.py`` and ``perfbench/`` to a recently re-signed
-package function still binds to its signature."""
+package function or to the document source (the PDF writers and the
+binary scan) still binds to its signature."""
 
 from __future__ import annotations
 
@@ -19,6 +20,12 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.opera
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.operators import (
     textstats as TS,
 )
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
+    binary as B,
+)
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
+    minipdf as MP,
+)
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
     curation as SC,
 )
@@ -28,15 +35,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 @pytest.mark.parametrize(
     "name",
-    ["capture_plans", "r13_gallery_probe", "scale_probe", "curation_stream_probe"],
+    ["capture_plans", "scale_probe", "curation_stream_probe"],
 )
 def test_script_imports(name):
     assert callable(importlib.import_module(f"scripts.{name}").main)
 
 
-# Package functions whose parameters changed recently, by name: a call to
-# one of them outside the package (scripts, the bench CLI, perfbench)
-# must still bind to its signature, since no other test imports those.
+# Package functions whose parameters changed recently, and the document
+# source calls perfbench makes, by name: a call to one of them outside the
+# package (scripts, the bench CLI, perfbench) must still bind to its
+# signature, since no other test imports those callers.
 RESIGNED = {
     "unigram_surprisal": TS.unigram_surprisal,
     "curate_corpus": D.curate_corpus,
@@ -47,6 +55,10 @@ RESIGNED = {
     "curation_v2_survivors": SC.curation_v2_survivors,
     "curation_maintain_batch": SC.curation_maintain_batch,
     "curation_v2_maintain_batch": SC.curation_v2_maintain_batch,
+    "read_binary_dir": B.read_binary_dir,
+    "pdf_filter": B.pdf_filter,
+    "extract_pages": B.extract_pages,
+    **{n: getattr(MP, n) for n in dir(MP) if n.startswith("make_pdf")},
 }
 
 
@@ -82,7 +94,14 @@ def test_callers_bind_to_resigned_signatures():
                     sig.bind(*node.args, **dict.fromkeys(kws))
                 except TypeError as e:
                     raise AssertionError(f"{where}: {e}") from None
-    assert {"curate_corpus_v2", "curation_v2_survivors"} <= seen
+    assert {
+        "curate_corpus_v2",
+        "curation_v2_survivors",
+        "make_pdf",
+        "read_binary_dir",
+        "pdf_filter",
+        "extract_pages",
+    } <= seen
 
 
 def _no_spark(*args, **kwargs):
@@ -107,23 +126,3 @@ def test_capture_plans_cli_parses_out_dir():
 
     assert cp.parse_args(["r14", "after", "q1"]) == ("r14", "after", ["q1"])
 
-
-@pytest.mark.parametrize(
-    "argv",
-    [["--help"], ["sf", "0"], ["sf", "-1"], ["sf", "1", "no_such_query"]],
-)
-def test_gallery_probe_cli_rejects_bad_arguments(monkeypatch, argv):
-    from scripts import r13_gallery_probe as gp
-
-    monkeypatch.setattr(gp, "get_spark", _no_spark)
-    monkeypatch.setattr(sys, "argv", ["r13_gallery_probe.py", *argv])
-    with pytest.raises(SystemExit) as exc:
-        gp.main()
-    assert str(exc.value.code).startswith("usage: ")
-
-
-def test_gallery_probe_cli_accepts_members():
-    from scripts import r13_gallery_probe as gp
-
-    gp.check_args(1, list(gp.MEMBERS))
-    gp.check_args(2, [gp.MEMBERS[0]])

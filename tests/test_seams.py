@@ -15,13 +15,14 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.functions import (
     embed as E,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
-    binary as B,
+    minipdf as MP,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.tables import (
     load_table,
@@ -118,7 +119,7 @@ def test_sse_http_gateway_end_to_end(spark, sf_dir, tmp_path):
 
 def test_blob_event_stream_ingest_parity(spark, tmp_path):
     """Event-driven ingest == direct-scan ingest on the same blobs:
-    BlobCreated events for two fake PDFs produce exactly the chunks the
+    BlobCreated events for two PDFs produce exactly the chunks the
     batch binary scan produces; a .txt event is gated by the suffix
     filter before any fetch; a BlobDeleted event is ignored; an event
     whose blob is missing lands in the fetch-failure log without
@@ -133,9 +134,9 @@ def test_blob_event_stream_ingest_parity(spark, tmp_path):
     blobs = tmp_path / "blobs"
     blobs.mkdir()
     (blobs / "a.pdf").write_bytes(
-        B.make_fake_pdf(["alpha page one text", "alpha page two text"])
+        MP.make_pdf(["alpha page one text", "alpha page two text"])
     )
-    (blobs / "b.pdf").write_bytes(B.make_fake_pdf(["bravo single page"]))
+    (blobs / "b.pdf").write_bytes(MP.make_pdf(["bravo single page"]))
     (blobs / "note.txt").write_bytes(b"not a pdf")
 
     events_dir = tmp_path / "events"
@@ -198,6 +199,41 @@ def test_blob_event_stream_ingest_parity(spark, tmp_path):
     # and nothing from note.txt / ghost.pdf / c.pdf reached the chunks
     assert {f for f, _, _ in got_names} == {"a.pdf", "b.pdf"}
 
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_blob_event_redelivery_not_reingested(spark, tmp_path, scheme):
+    """A BlobCreated event redelivered in a later session (same
+    checkpoint) anti-joins against the ingested-names log and appends no
+    chunks — for a plain ``status_out`` and for a ``file://`` URI, whose
+    log a local-filesystem existence check would not find."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+        blobevents as BE,
+    )
+
+    blobs = tmp_path / "blobs"
+    blobs.mkdir()
+    (blobs / "a.pdf").write_bytes(MP.make_pdf(["alpha one", "alpha two"]))
+    events_dir = tmp_path / "events"
+    events_dir.mkdir()
+    event = json.dumps(BE.make_blob_created_event("pdf", "a.pdf")) + "\n"
+    chunks_out = scheme + str(tmp_path / "chunks")
+    status_out = scheme + str(tmp_path / "status")
+
+    def run_session(batch: str) -> int:
+        (events_dir / batch).write_text(event)
+        BE.blob_event_stream(
+            spark,
+            str(events_dir),
+            str(blobs),
+            chunks_out,
+            status_out,
+            scheme + str(tmp_path / "ckpt"),
+        ).awaitTermination()
+        return spark.read.parquet(chunks_out).count()
+
+    first = run_session("batch1.json")
+    assert first == 2
+    assert run_session("batch2.json") == first
 
 def test_sse_gateway_backpressure_drop_oldest_with_marker():
     """r12 (VERDICT r11 #6): with ``max_queue_events`` set, a stalled

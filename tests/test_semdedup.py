@@ -470,6 +470,34 @@ def test_streaming_mixed_layouts_refused(spark, tmp_path):
         SS.detect_and_register(b2, cents, store2, matches2, eps=0.05)
 
 
+def test_streaming_store_refuses_other_eps_or_centroids(spark, tmp_path):
+    """The store's cluster_id partitions and matches hold only under the
+    frozen centroids and eps that built them: a later batch with another
+    value of either is refused, naming it.  A batch that registers no
+    rows leaves the store absent, so the pin never lands in an empty
+    root."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
+        semdedup as SS,
+    )
+
+    items = _planted(spark)
+    cents = SS.fit_frozen_centroids(items, k_clusters=6)
+    store, matches = str(tmp_path / "s"), str(tmp_path / "m")
+    nulls = spark.createDataFrame(
+        [(900, None, 9)], "vec_id long, embedding array<float>, label long"
+    )
+    SS.detect_and_register(nulls, cents, store, matches, eps=0.05)
+    SS.detect_and_register(
+        items.filter(F.col("vec_id") < 10), cents, store, matches, eps=0.05
+    )
+    later = items.filter(F.col("vec_id") >= 10)
+    with pytest.raises(ValueError, match="eps=0.1"):
+        SS.detect_and_register(later, cents, store, matches, eps=0.1)
+    moved = [[x + 0.5 for x in c] for c in cents]
+    with pytest.raises(ValueError, match="centroids="):
+        SS.detect_and_register(later, moved, store, matches, eps=0.05)
+    assert spark.read.parquet(store).count() == 10
+
 def test_boundary_miss_measured_and_topm_mitigation(spark):
     """SemDeDup's cross-cluster blind spot, measured on OVERLAPPING
     clusters (VERDICT r03 #4): the r03 recall test used separable

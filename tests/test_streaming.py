@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
     binary as B,
 )
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.sources import (
+    minipdf as MP,
+)
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.streaming import (
     ingest as SI,
 )
@@ -24,8 +27,8 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_spark.table
 def doc_dir(tmp_path):
     d = tmp_path / "pdfs"
     d.mkdir()
-    (d / "a.pdf").write_bytes(B.make_fake_pdf(["page one text", "page two text"]))
-    (d / "b.pdf").write_bytes(B.make_fake_pdf(["lonely page"]))
+    (d / "a.pdf").write_bytes(MP.make_pdf(["page one text", "page two text"]))
+    (d / "b.pdf").write_bytes(MP.make_pdf(["lonely page"]))
     (d / "ignore.txt").write_bytes(b"not a pdf")
     return str(d)
 
@@ -64,7 +67,7 @@ def test_streaming_ingest_incremental(spark, doc_dir, tmp_path):
 
     # New file arrives; re-run drains ONLY the new file (checkpoint)
     with open(os.path.join(doc_dir, "c.pdf"), "wb") as f:
-        f.write(B.make_fake_pdf(["late arrival"]))
+        f.write(MP.make_pdf(["late arrival"]))
     q2 = SI.ingest_stream(spark, doc_dir, chunks_out, status_out, ckpt)
     q2.awaitTermination()
     second = spark.read.parquet(chunks_out)
